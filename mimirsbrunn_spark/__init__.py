@@ -10,8 +10,9 @@ re-expressed Spark-first:
 - ``series``    — base 1-minute series via salted two-stage aggregation
 - ``tiers``     — 1m → 1h → 1d → 30d continuous-aggregate cascade
 - ``gapfill``   — dense bucket fill + locf + linear interpolation (one window pass)
-- ``codecs``    — delta-of-delta timestamps + Gorilla-XOR values (numpy kernels
-                  inside Arrow-batched pandas UDFs; no per-row Python)
+- ``codecs``    — delta-of-delta timestamps + Gorilla-XOR values (one
+                  vectorized numpy pass per Arrow batch in a sorted
+                  ``mapInArrow``; no per-row or per-group Python)
 - ``tables``    — snapshot table layer (atomic manifest commits, time travel,
                   lineage + metrics) — Iceberg-style; drop-in for real Iceberg
                   on a cluster (this sandbox ships no Iceberg jars)

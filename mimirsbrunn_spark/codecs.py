@@ -13,10 +13,18 @@ Format notes: bitstreams are MSB-first, zero-padded to a byte boundary;
 first_ts / first value of each measure ride out-of-band in chunk columns
 (n_points, first_ts, first_val, first_bytes).
 
-Encode runs inside Arrow-batched ``applyInPandas`` grouped by (host, tier) —
-mirroring the reference's chunked ``pack(1000).par_map`` bulk pipeline
+Encode is one Exchange (hash on host), a sort within partitions by (host,
+[month,] bucket_ts) and ``mapInArrow``: each Arrow batch is encoded in one
+vectorized numpy pass — chunk ids from (host, month, position //
+max_points), delta-of-delta and XOR fields across the whole batch, each
+chunk padded to a byte boundary through offsets, one ``np.packbits`` for
+the batch and binary columns built straight from those offsets. A group cut
+by a batch boundary is carried into the next batch. This mirrors the
+reference's chunked ``pack(1000).par_map`` bulk pipeline
 (/root/reference/libs/mimir/src/rubber.rs:684-699) whose chunk = our Arrow
-batch. No per-row Python anywhere on the encode path (north rule).
+batch. No per-row or per-group Python anywhere on the encode path (north
+rule); ``encode_dod``/``encode_gorilla`` are the one-chunk case of the same
+packer.
 
 Decode is vectorized in three phases (see the decode section): a per-bit
 record-length table (numpy), the record-start chain (the only sequential
@@ -30,10 +38,11 @@ successors (e.g. Chimp, VLDB 2022) — this engine pins the simplified XOR
 variant above for vectorizability; swapping in a Chimp-style leading-zero
 table is a kernel-local change behind the same chunk schema.
 
-Scale: one task per (host, tier) group; groups are rolled-up series (bounded
-by time range, not doc count) so group size is even across hosts — the skew
-answer of gapfill.py applies here too. At 100 TB, chunking further splits by
-time (chunk_start) via the same groupby key extension.
+Scale: hosts hash across partitions; a partition's batches stream through
+one Python worker, holding at most one open group. Groups are rolled-up
+series (bounded by time range, not doc count), so group size is even across
+hosts — the skew answer of gapfill.py applies here too. At 100 TB, chunks
+are further bounded by ``max_points_per_chunk`` and the month split.
 """
 
 from __future__ import annotations
@@ -45,99 +54,122 @@ from pyspark.sql import DataFrame
 # ---------------------------------------------------------------------------
 # vectorized bit packing
 # ---------------------------------------------------------------------------
+# A stream is a run of records, one per point after a chunk's first. Every
+# record is two MSB-first bit fields, (head, tail), each at most 64 bits
+# wide; a zero-width field writes nothing. The packer lays out the records
+# of many chunks ("segments") in one pass: each segment's bits are
+# zero-padded to a byte boundary, so segment s is exactly the bytes
+# ``data[offsets[s]:offsets[s+1]]``.
+
+_BIT = np.arange(64)
 
 
-def _pack_fields(fields: list[tuple[np.ndarray, np.ndarray]]) -> bytes:
-    """Pack per-element variable-length bit fields into a single MSB-first
-    bitstream. ``fields`` is an ordered list of (values uint64, nbits int64)
-    arrays, all of length n; element i contributes field1[i], field2[i], …
-    consecutively. Fully vectorized (no per-element Python)."""
-    if not fields:
-        return b""
-    n = len(fields[0][0])
-    if n == 0:
-        return b""
-    lens = np.stack([f[1] for f in fields], axis=1)  # (n, k)
-    flat_lens = lens.reshape(-1)  # element-major, field-minor
-    total = int(flat_lens.sum())
-    if total == 0:
-        return b""
-    starts = np.concatenate([[0], np.cumsum(flat_lens)[:-1]])
-    flat_vals = np.stack([f[0].astype(np.uint64) for f in fields], axis=1).reshape(-1)
-
-    nz = flat_lens > 0
-    lens_nz = flat_lens[nz]
-    vals_rep = np.repeat(flat_vals[nz], lens_nz)
-    lens_rep = np.repeat(lens_nz, lens_nz)
-    starts_rep = np.repeat(starts[nz], lens_nz)
-    within = np.arange(len(vals_rep), dtype=np.int64) - np.repeat(
-        np.concatenate([[0], np.cumsum(lens_nz)[:-1]]), lens_nz
-    )
-    shift = (lens_rep - 1 - within).astype(np.uint64)
-    bits = ((vals_rep >> shift) & np.uint64(1)).astype(np.uint8)
-    out = np.zeros(total, dtype=np.uint8)
-    out[starts_rep + within] = bits
-    return np.packbits(out).tobytes()
+def _pack_segments(vals, nbits, seg, n_seg):
+    """Pack (m, 2) uint64 fields ``vals`` of widths ``nbits`` (int64, 0..64)
+    into one bitstream per segment. ``seg`` (m,) is each record's segment id,
+    non-decreasing in [0, n_seg). Returns (data uint8, offsets int64[n_seg+1]).
+    Fully vectorized; one ``np.packbits`` call for all segments."""
+    k = vals.shape[1]
+    vals = vals.reshape(-1)  # record-major, field-minor
+    nbits = nbits.reshape(-1)
+    bounds = np.searchsorted(np.repeat(seg, k), np.arange(n_seg + 1))
+    csum = np.concatenate([[0], np.cumsum(nbits)])
+    seg_bits = np.diff(csum[bounds])
+    pad = -seg_bits % 8
+    # a zero field after each segment's last record closes it on a byte
+    vals = np.insert(vals, bounds[1:], 0)
+    nbits = np.insert(nbits, bounds[1:], pad)
+    keep = nbits > 0
+    vals, nbits = vals[keep], nbits[keep]
+    aligned = vals << (64 - nbits).astype(np.uint64)  # field's first bit → bit 63
+    bits = np.unpackbits(aligned.astype(">u8").view(np.uint8).reshape(-1, 8), axis=1)
+    data = np.packbits(bits[_BIT < nbits[:, None]])
+    offsets = np.concatenate([[0], np.cumsum((seg_bits + pad) // 8)])
+    return data, offsets
 
 
-def encode_dod(ts: np.ndarray) -> bytes:
-    """ts: int64 epoch seconds, ascending. Bitstream for points 1..n-1."""
-    ts = np.asarray(ts, dtype=np.int64)
-    if len(ts) < 2:
-        return b""
-    deltas = np.diff(ts)
-    dod = np.diff(np.concatenate([[0], deltas]))  # dod_1 = delta_1
-    a = np.abs(dod)
-    # range ladder (asymmetric upper bounds per Gorilla §4.1.1)
+def _dod_records(ts: np.ndarray, start: np.ndarray) -> np.ndarray:
+    """Delta-of-delta of every point that does not open a segment
+    (``start``); the first record of a segment is its plain delta."""
+    d = np.diff(ts, prepend=ts[:1])
+    d[start] = 0
+    return np.diff(d, prepend=0)[~start]
+
+
+def _xor_records(v: np.ndarray, start: np.ndarray) -> np.ndarray:
+    """XOR with the previous value of every point that does not open a
+    segment (``start``)."""
+    u = v.astype(np.uint64)
+    return (u ^ np.concatenate([u[:1], u[:-1]]))[~start]
+
+
+def _dod_fields(dod: np.ndarray):
+    """Range ladder (asymmetric upper bounds per Gorilla §4.1.1): prefix and
+    biased payload share the head, except the 64-bit case whose payload
+    (two's complement) is the tail."""
     zero = dod == 0
     r7 = ~zero & (dod >= -63) & (dod <= 64)
     r9 = ~zero & ~r7 & (dod >= -255) & (dod <= 256)
     r12 = ~zero & ~r7 & ~r9 & (dod >= -2047) & (dod <= 2048)
-    r64 = ~zero & ~r7 & ~r9 & ~r12
+    small = zero | r7 | r9 | r12
+    cases = [zero, r7, r9, r12]
+    prefix = np.select(cases, [0, 0b10, 0b110, 0b1110], 0b1111).astype(np.uint64)
+    prefix_len = np.select(cases, [1, 2, 3, 4], 4)
+    payload_len = np.select(cases, [0, 7, 9, 12], 64)
+    payload = (dod + np.select(cases, [0, 63, 255, 2047], 0)).view(np.uint64)
+    head = np.where(small, (prefix << payload_len.astype(np.uint64)) | payload, prefix)
+    head_len = np.where(small, prefix_len + payload_len, 4)
+    tail = np.where(small, np.uint64(0), payload)
+    tail_len = np.where(small, 0, 64)
+    return np.stack([head, tail], axis=1), np.stack([head_len, tail_len], axis=1)
 
-    prefix_val = np.select([zero, r7, r9, r12, r64], [0, 0b10, 0b110, 0b1110, 0b1111]).astype(np.uint64)
-    prefix_len = np.select([zero, r7, r9, r12, r64], [1, 2, 3, 4, 4]).astype(np.int64)
-    payload_val = np.select(
-        [zero, r7, r9, r12, r64],
-        [0, dod + 63, dod + 255, dod + 2047, dod],
-    ).astype(np.int64).astype(np.uint64)  # two's complement for r64
-    payload_len = np.select([zero, r7, r9, r12, r64], [0, 7, 9, 12, 64]).astype(np.int64)
-    _ = a
-    return _pack_fields([(prefix_val, prefix_len), (payload_val, payload_len)])
 
-
-def encode_gorilla(vals: np.ndarray) -> bytes:
-    """vals: int64. XOR bitstream for points 1..n-1 (first carried out-of-band)."""
-    v = np.asarray(vals, dtype=np.int64).astype(np.uint64)
-    if len(v) < 2:
-        return b""
-    x = v[1:] ^ v[:-1]
-    nonzero = x != 0
-    # bit_length via log2 on floats is unsafe for 64-bit; use a bit trick:
-    # count leading zeros by comparing against powers of two cumulatively.
+def _bit_length(x: np.ndarray) -> np.ndarray:
+    # log2 on floats is unsafe for 64-bit; binary-search the top set bit
     bl = np.zeros(len(x), dtype=np.int64)
     xx = x.copy()
     for shift in (32, 16, 8, 4, 2, 1):
         ge = xx >= (np.uint64(1) << np.uint64(shift))
         bl[ge] += shift
         xx[ge] >>= np.uint64(shift)
-    bl = bl + (xx > 0).astype(np.int64)  # = bit_length(x)
-    lead = np.minimum(64 - bl, 63)
-    meaningful = 64 - lead
+    return bl + (xx > 0)
 
-    ctrl = nonzero.astype(np.uint64)
-    ctrl_len = np.ones(len(x), dtype=np.int64)
-    lead_len = np.where(nonzero, 6, 0).astype(np.int64)
-    mlen_len = np.where(nonzero, 6, 0).astype(np.int64)
-    mbits_len = np.where(nonzero, meaningful, 0).astype(np.int64)
-    return _pack_fields(
-        [
-            (ctrl, ctrl_len),
-            (lead.astype(np.uint64), lead_len),
-            ((meaningful - 1).astype(np.uint64) & np.uint64(63), mlen_len),
-            (x, mbits_len),
-        ]
-    )
+
+def _xor_fields(x: np.ndarray):
+    """Simplified Gorilla XOR: '0' for a repeat, else head '1' + 6b lead +
+    6b (meaningful−1) and the meaningful bits as the tail."""
+    nz = x != 0
+    lead = np.minimum(64 - _bit_length(x), 63)
+    meaningful = 64 - lead
+    header = (1 << 12) | (lead << 6) | ((meaningful - 1) & 63)
+    head = np.where(nz, header, 0).astype(np.uint64)
+    head_len = np.where(nz, 13, 1)
+    tail_len = np.where(nz, meaningful, 0)
+    return np.stack([head, x], axis=1), np.stack([head_len, tail_len], axis=1)
+
+
+def _pack_one(fields) -> bytes:
+    vals, nbits = fields
+    data, _ = _pack_segments(vals, nbits, np.zeros(len(vals), dtype=np.int64), 1)
+    return data.tobytes()
+
+
+def _opens_first(n: int) -> np.ndarray:
+    start = np.zeros(n, dtype=bool)
+    start[:1] = True
+    return start
+
+
+def encode_dod(ts: np.ndarray) -> bytes:
+    """ts: int64 epoch seconds, ascending. Bitstream for points 1..n-1."""
+    ts = np.asarray(ts, dtype=np.int64)
+    return _pack_one(_dod_fields(_dod_records(ts, _opens_first(len(ts)))))
+
+
+def encode_gorilla(vals: np.ndarray) -> bytes:
+    """vals: int64. XOR bitstream for points 1..n-1 (first carried out-of-band)."""
+    v = np.asarray(vals, dtype=np.int64)
+    return _pack_one(_xor_fields(_xor_records(v, _opens_first(len(v)))))
 
 
 # ---------------------------------------------------------------------------
@@ -250,7 +282,7 @@ def decode_gorilla(data: bytes, first_val: int, n: int) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Spark integration: chunk tables via applyInPandas
+# Spark integration: chunk tables via one sorted mapInArrow pass
 # ---------------------------------------------------------------------------
 
 CHUNK_SCHEMA = (
@@ -260,36 +292,95 @@ CHUNK_SCHEMA = (
 )
 
 
-def _encode_group_fn(max_points):
-    def _encode_group(key, pdf):
-        host, tier = key[0], key[1]  # key may carry a trailing _month split key
-        pdf = pdf.sort_values("bucket_ts", kind="mergesort")
-        sec = (pdf["bucket_ts"].astype("datetime64[us]").astype("int64") // 1_000_000).to_numpy()
-        dc = pdf["doc_count"].to_numpy().astype(np.int64)
-        bs = pdf["bytes_sum"].to_numpy().astype(np.int64)
-        step = max_points or len(sec) or 1
-        rows = {k: [] for k in (
-            "host", "tier", "chunk_start", "ts_dod", "val_gorilla", "bytes_gorilla",
-            "n_points", "first_ts", "first_val", "first_bytes", "last_ts")}
-        for lo in range(0, len(sec), step):
-            hi = min(lo + step, len(sec))
-            rows["host"].append(host)
-            rows["tier"].append(tier)
-            rows["chunk_start"].append(pd.Timestamp(int(sec[lo]), unit="s"))
-            rows["ts_dod"].append(encode_dod(sec[lo:hi]))
-            rows["val_gorilla"].append(encode_gorilla(dc[lo:hi]))
-            rows["bytes_gorilla"].append(encode_gorilla(bs[lo:hi]))
-            rows["n_points"].append(hi - lo)
-            rows["first_ts"].append(int(sec[lo]))
-            rows["first_val"].append(int(dc[lo]))
-            rows["first_bytes"].append(int(bs[lo]))
-            # Actual last point (NOT chunk_start + n_points*step): the host
-            # series is not gap-filled, so a chunk's span is unbounded by its
-            # point count — time-range pruning must use the real extent.
-            rows["last_ts"].append(int(sec[hi - 1]))
-        return pd.DataFrame(rows)
+def _group_opens(t, keys) -> np.ndarray:
+    """True at every row of ``t`` (a pyarrow Table sorted by ``keys``) whose
+    key differs from the previous row's; NULL equals NULL, as in groupBy."""
+    import pyarrow.compute as pc
 
-    return _encode_group
+    n = t.num_rows
+    opens = _opens_first(n)
+    for k in keys:
+        a, b = t[k].slice(1), t[k].slice(0, n - 1)
+        same = pc.fill_null(pc.equal(a, b), pc.and_(pc.is_null(a), pc.is_null(b)))
+        opens[1:] |= ~same.to_numpy()
+    return opens
+
+
+def _encode_table(t, tier: str, max_points: int | None, keys: list[str]):
+    """Chunk rows for every group of ``t`` (whole groups only, sorted by
+    keys then bucket_ts): one vectorized pass over the whole table."""
+    import pyarrow as pa
+
+    n = t.num_rows
+    if n == 0:
+        return []
+    start = _group_opens(t, keys)
+    if max_points:
+        group_first = np.flatnonzero(start)
+        pos = np.arange(n) - group_first[np.cumsum(start) - 1]
+        start = pos % max_points == 0
+    first = np.flatnonzero(start)
+    # Actual last point (NOT chunk_start + n_points*step): the host series
+    # is not gap-filled, so a chunk's span is unbounded by its point count —
+    # time-range pruning must use the real extent.
+    last = np.append(first[1:], n) - 1
+    seg = (np.cumsum(start) - 1)[~start]
+    sec = t["bucket_ts"].cast(pa.int64()).to_numpy() // 1_000_000
+    dc = t["doc_count"].to_numpy().astype(np.int64)
+    bs = t["bytes_sum"].to_numpy().astype(np.int64)
+
+    def stream(fields):  # binary column straight from the packed segments
+        data, offsets = _pack_segments(*fields, seg, len(first))
+        buffers = [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)]
+        return pa.Array.from_buffers(pa.binary(), len(first), buffers)
+
+    chunk_start = pa.array(sec[first] * 1_000_000).cast(pa.timestamp("us", tz="UTC"))
+    out = pa.table(
+        {
+            "host": t["host"].take(first),
+            "tier": pa.repeat(tier, len(first)),
+            "chunk_start": chunk_start,
+            "ts_dod": stream(_dod_fields(_dod_records(sec, start))),
+            "val_gorilla": stream(_xor_fields(_xor_records(dc, start))),
+            "bytes_gorilla": stream(_xor_fields(_xor_records(bs, start))),
+            "n_points": pa.array((last - first + 1).astype(np.int32)),
+            "first_ts": pa.array(sec[first]),
+            "first_val": pa.array(dc[first]),
+            "first_bytes": pa.array(bs[first]),
+            "last_ts": pa.array(sec[last]),
+        }
+    )
+    return out.to_batches()
+
+
+def _encode_partition_fn(tier: str, max_points: int | None, keys: list[str]):
+    """mapInArrow body over the Arrow batches of one partition, sorted by
+    keys then bucket_ts. A group cut by a batch boundary is carried into the
+    next batch, so each group is encoded once, whole."""
+
+    def encode(batches):
+        import pyarrow as pa
+
+        def chunks(parts):
+            return _encode_table(pa.Table.from_batches(parts), tier, max_points, keys)
+
+        pending = []  # batches (or tails) holding the last, still-open group
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            head = pending[-1].slice(pending[-1].num_rows - 1) if pending else b.slice(0, 0)
+            opens = _group_opens(pa.Table.from_batches([head, b]), keys)[head.num_rows:]
+            starts = np.flatnonzero(opens)
+            if len(starts) == 0:  # b only continues the open group
+                pending.append(b)
+                continue
+            cut = int(starts[-1])
+            yield from chunks(pending + [b.slice(0, cut)])
+            pending = [b.slice(cut)]
+        if pending:
+            yield from chunks(pending)
+
+    return encode
 
 
 def encode_chunks(
@@ -306,16 +397,22 @@ def encode_chunks(
     at UTC month boundaries (the groupby-key time extension): every point of
     a chunk then falls inside month(chunk_start), which is what makes
     partition-level month pruning of the published chunk table EXACT — a
-    month-spanning chunk would otherwise be invisible to it."""
+    month-spanning chunk would otherwise be invisible to it.
+
+    Plan: one Exchange (hash on host), a sort within partitions by (host,
+    [month,] bucket_ts), then ``mapInArrow`` encodes each Arrow batch in one
+    vectorized pass (``_encode_table``)."""
     from pyspark.sql import functions as F
 
-    df = host_series_df.withColumn("tier", F.lit(tier))
-    keys = ["host", "tier"]
+    df = host_series_df.select("host", "bucket_ts", "doc_count", "bytes_sum")
+    keys = ["host"]
     if split_by_month:
         df = df.withColumn("_month", F.date_format("bucket_ts", "yyyy-MM"))
         keys.append("_month")
-    return df.groupBy(*keys).applyInPandas(
-        _encode_group_fn(max_points_per_chunk), schema=CHUNK_SCHEMA
+    return (
+        df.repartition("host")
+        .sortWithinPartitions(*keys, "bucket_ts")
+        .mapInArrow(_encode_partition_fn(tier, max_points_per_chunk, keys), CHUNK_SCHEMA)
     )
 
 

@@ -1093,7 +1093,7 @@ FROM j
 
 def q_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Codec path through the gate: hourly host series → DoD+Gorilla chunk
-    encode (applyInPandas) → distributed decode (mapInPandas). Since
+    encode (sorted mapInArrow) → distributed decode (mapInPandas). Since
     decode∘encode is the identity, the DuckDB oracle is simply the hourly
     series SQL — the bitstream round-trip itself is what is being verified."""
     from . import codecs

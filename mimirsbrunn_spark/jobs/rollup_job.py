@@ -405,7 +405,7 @@ def run_rollup_job(
     itself is intact and refreshable) and reported in the summary, as are
     explicit days matching no input day (``refresh_unknown``)."""
     cfg = config or EngineConfig()
-    # The codec stage runs applyInPandas — under an arbitrary session
+    # The codec stage runs mapInArrow — under an arbitrary session
     # (driver harness, bare spark-submit without --py-files) the Python
     # workers can't import this package unless it ships as a pyfile. Same
     # seam the gates use; idempotent, no-op when --py-files already did it.

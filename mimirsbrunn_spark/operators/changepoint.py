@@ -82,8 +82,9 @@ def cusum_changepoints(
         sn = np.zeros(n, dtype="float64")
         alarm = np.zeros(n, dtype="bool")
         if n:
-            s = int(xs.sum())
-            ss = int((xs.astype(object) * xs.astype(object)).sum())
+            big = xs.astype(object)  # exact Python ints: int64 sums wrap
+            s = int(big.sum())
+            ss = int((big * big).sum())
             mean = s / n
             var = max((ss - s * s / n) / n, 0.0)
             std = math.sqrt(var)

@@ -671,7 +671,7 @@ class SnapshotTable:
                 )
             from pyspark.sql.types import StructType
 
-            return spark.createDataFrame([], StructType.fromJson(json.loads(snap.schema_json)))
+            return local_frame(spark, [], StructType.fromJson(json.loads(snap.schema_json)))
         return spark.read.parquet(*files)
 
     def exists(self) -> bool:
@@ -705,6 +705,26 @@ LINEAGE_SCHEMA = (
     "row_count long, checksum string, committed_at timestamp"
 )
 METRICS_SCHEMA = "job_id string, stage string, key string, value double, ts timestamp"
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
+    """Local ``rows`` (tuples in ``schema`` order; schema a StructType
+    or DDL string) as a DataFrame built through Arrow: a LocalRelation, so
+    neither a Python RDD nor a Python worker pool is involved — the list
+    path of ``createDataFrame`` starts both, and its pandas path silently
+    falls back to the list path when Arrow is off or the frame is empty.
+    Timestamps are UTC instants (naive datetimes are read as UTC)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [[] for _ in arrow]
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
 
 
 class Lineage:
@@ -784,7 +804,7 @@ class Lineage:
                 dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
             )
         ]
-        self.table.commit(spark.createDataFrame(row, LINEAGE_SCHEMA), mode="append")
+        self.table.commit(local_frame(spark, row, LINEAGE_SCHEMA), mode="append")
 
 
 class Metrics:
@@ -796,4 +816,4 @@ class Metrics:
 
         now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         rows = [(job_id, stage, k, float(v), now) for k, v in kv.items()]
-        self.table.commit(spark.createDataFrame(rows, METRICS_SCHEMA), mode="append")
+        self.table.commit(local_frame(spark, rows, METRICS_SCHEMA), mode="append")

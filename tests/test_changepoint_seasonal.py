@@ -117,6 +117,18 @@ def test_cusum_resets_after_alarm_and_realarm(spark):
         assert r.cusum_pos <= max(r.z - 0.5, 0.0) + 1e-12
 
 
+def test_cusum_exact_sum_beyond_int64(spark):
+    """S is an exact integer sum like SS: four values of 2**62 sum to 2**64,
+    which int64 wraps to 0 (mean 0, std 2**62, z = 1 everywhere). The
+    exact sums give mean 2**62 and std 0, so z = 0 and no alarm."""
+    vals = [2**62] * 4
+    got = changepoint.cusum_changepoints(
+        _mk(spark, {"big": vals}), k=0.5, h=4.0, ts_col="bucket_sec", value_col="c"
+    ).collect()
+    exp = _py_cusum(vals, 0.5, 4.0)
+    assert [(r.z, r.cusum_pos, r.cusum_neg, r.is_change) for r in got] == exp
+
+
 def test_cusum_validates_params(spark):
     df = _mk(spark, {"a": [1, 2]})
     with pytest.raises(ValueError):

@@ -1,14 +1,18 @@
 """Codec gates: (1) vectorized numpy bitstreams byte-identical to the
-pure-Python oracle; (2) round-trip decode equality; (3) Spark applyInPandas
-chunk table round-trips to the exact tier rows (FIXTURES.md chunks table)."""
+pure-Python oracle; (2) round-trip decode equality; (3) the Spark chunk
+table (one Exchange on host, sorted mapInArrow, one vectorized encode pass
+per Arrow batch) round-trips to the exact tier rows (FIXTURES.md chunks
+table) and matches the oracle byte for byte, also when groups and
+max_points_per_chunk cuts straddle Arrow batch boundaries."""
 
 import numpy as np
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from oracle import reference as oracle
-from mimirsbrunn_spark import codecs, series, tiers
+from mimirsbrunn_spark import codecs, plans, series, tiers
 
 
 def test_dod_bitstream_matches_oracle_simple():
@@ -136,3 +140,102 @@ def test_chunk_partition_col_matches_driver_twin_beyond_9999_buckets(spark):
         for h in hosts:
             want = f"{chunk_host_bucket(h, buckets)}|2024-01"
             assert got[h] == want, (h, buckets, got[h], want)
+
+
+# --------------------------------------------------------------------------
+# encode_chunks vs the pure-Python oracle encoders, batch boundaries included
+# --------------------------------------------------------------------------
+
+SERIES_SCHEMA = "host string, bucket_ts timestamp, doc_count long, bytes_sum long"
+
+
+def _crafted_series() -> pd.DataFrame:
+    """Host series with groups of 1..40 points spanning many UTC months,
+    irregular gaps (every delta-of-delta range incl. the 64-bit one), large
+    XORs, and a NULL-host group."""
+    rng = np.random.default_rng(5)
+    rows = []
+    hosts = ["a.example", "b.example", "c.example", "d.example", "e.example", None]
+    for host, n in zip(hosts, (1, 2, 7, 13, 40, 9)):
+        t = 1_704_067_200 + int(rng.integers(0, 40)) * 86_400  # 2024-01-01 + days
+        for i in range(n):
+            t += int(rng.choice([3600, 3600, 7200, 86_400, 2_000_000, 90_000_000]))
+            rows.append(
+                (
+                    host,
+                    pd.Timestamp(t, unit="s"),
+                    int(rng.integers(0, 50)),
+                    int(rng.integers(0, 2**62)) if i % 3 else 10**6,
+                )
+            )
+    return pd.DataFrame(rows, columns=["host", "bucket_ts", "doc_count", "bytes_sum"])
+
+
+def _want_chunks(pdf: pd.DataFrame, tier: str, max_points, split_by_month) -> list:
+    sec_all = pdf["bucket_ts"].astype("datetime64[us]").astype("int64") // 1_000_000
+    pdf = pdf.assign(_sec=sec_all, _month=pdf["bucket_ts"].dt.strftime("%Y-%m"))
+    keys = ["host", "_month"] if split_by_month else ["host"]
+    out = []
+    for _, g in pdf.groupby(keys, dropna=False, sort=False):
+        g = g.sort_values("_sec", kind="mergesort")
+        sec = g["_sec"].to_numpy()
+        dc = g["doc_count"].to_numpy()
+        bs = g["bytes_sum"].to_numpy()
+        step = max_points or len(sec)
+        for lo in range(0, len(sec), step):
+            hi = min(lo + step, len(sec))
+            out.append(
+                (
+                    g["host"].iloc[0], tier, int(sec[lo]),
+                    oracle.encode_dod_py(sec[lo:hi]),
+                    oracle.encode_gorilla_py(dc[lo:hi]),
+                    oracle.encode_gorilla_py(bs[lo:hi]),
+                    hi - lo, int(sec[lo]), int(dc[lo]), int(bs[lo]), int(sec[hi - 1]),
+                )
+            )
+    return sorted(out, key=lambda r: (r[0] is not None, r[0] or "", r[2]))
+
+
+def _got_chunks(chunks_df) -> list:
+    got = [
+        (
+            r.host, r.tier, int(pd.Timestamp(r.chunk_start).timestamp()),
+            bytes(r.ts_dod), bytes(r.val_gorilla), bytes(r.bytes_gorilla),
+            r.n_points, r.first_ts, r.first_val, r.first_bytes, r.last_ts,
+        )
+        for r in chunks_df.collect()
+    ]
+    return sorted(got, key=lambda r: (r[0] is not None, r[0] or "", r[2]))
+
+
+@pytest.mark.parametrize(
+    "max_points,split_by_month", [(None, False), (None, True), (4, False), (5, True)]
+)
+def test_encode_chunks_across_arrow_batches_matches_oracle(spark, max_points, split_by_month):
+    """Arrow batches of 7 rows cut most groups (and most max_points cuts)
+    across batches; the carried group must encode exactly as one whole
+    group would. The NULL host is a group of its own, as in groupBy."""
+    pdf = _crafted_series()
+    df = spark.createDataFrame(pdf, SERIES_SCHEMA)
+    want = _want_chunks(pdf, "1h", max_points, split_by_month)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = _got_chunks(codecs.encode_chunks(df, "1h", max_points, split_by_month))
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
+    assert any(r[0] is None for r in got)
+    if split_by_month:  # the month cut is exercised: some host spans months
+        assert len(got) > len(_want_chunks(pdf, "1h", max_points, False))
+
+
+@pytest.mark.parametrize("split_by_month", [False, True])
+def test_encode_chunks_empty_input_and_one_exchange(spark, split_by_month):
+    empty = spark.createDataFrame(_crafted_series().iloc[:0], SERIES_SCHEMA)
+    ch = codecs.encode_chunks(empty, "1h", 3, split_by_month)
+    assert ch.collect() == []
+    # the only shuffle is the hash on host: no per-group Exchange, no
+    # second pass (the input is a local relation with none of its own)
+    assert plans.count_exchanges(ch) == 1

@@ -757,16 +757,21 @@ def test_drop_partitions_is_pure_metadata(spark, tmp_path):
 
 def test_read_after_all_partitions_dropped(spark, tmp_path):
     """Dropping every partition leaves an empty snapshot; read() must return
-    an empty DF with the recorded schema instead of crashing (ADVICE r1)."""
+    an empty DF with the recorded schema instead of crashing (ADVICE r1).
+    It is a LocalRelation built through Arrow: the list path of
+    createDataFrame would start a Python worker pool to produce no rows."""
     from pyspark.sql import functions as F
 
     tbl = SnapshotTable(str(tmp_path / "empty"))
-    df = spark.range(10).select("id", F.lit("2024-01-01").alias("day"))
+    df = spark.range(10).select(
+        "id", F.lit("2024-01-01").alias("day"), F.lit(None).cast("timestamp").alias("ts")
+    )
     tbl.commit(df, mode="replace", partition_by="day")
     tbl.drop_partition_values({"2024-01-01"})
     got = tbl.read(spark)
+    assert got._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation"
     assert got.count() == 0
-    assert got.columns == ["id", "day"]
+    assert [(f.name, f.dataType) for f in got.schema] == [(f.name, f.dataType) for f in df.schema]
 
 
 def test_resume_crash_before_lineage_no_duplicates(spark, small_pages_path, tmp_path):

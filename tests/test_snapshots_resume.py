@@ -7,7 +7,7 @@ import pytest
 
 from oracle import reference as oracle
 from mimirsbrunn_spark.jobs.rollup_job import SimulatedFailure, run_rollup_job
-from mimirsbrunn_spark.tables import Lineage, SnapshotTable
+from mimirsbrunn_spark.tables import Lineage, Metrics, SnapshotTable
 
 
 def test_snapshot_append_replace_timetravel(spark, tmp_path):
@@ -29,6 +29,46 @@ def test_snapshot_append_replace_timetravel(spark, tmp_path):
 def test_read_missing_table_raises(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         SnapshotTable(str(tmp_path / "missing")).read(spark)
+
+
+def test_lineage_and_metrics_rows_are_local_relations(spark, tmp_path, monkeypatch):
+    """Lineage and metrics rows reach Spark through Arrow as a LocalRelation.
+    The list path of createDataFrame (a LogicalRDD over a pickled Python RDD)
+    starts a Python worker pool for a one-row write, and Arrow conversion
+    falls back to it without a word — so the plan node is pinned here."""
+    import datetime as dt
+    import time
+
+    committed = []
+    real_commit = SnapshotTable.commit
+
+    def spy(self, df, *args, **kwargs):
+        committed.append(df)
+        return real_commit(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotTable, "commit", spy)
+    t0 = time.time()
+    lin = Lineage(str(tmp_path / "lineage"))
+    lin.record(spark, "2024-01-01", 3, 4, 10, "abc")
+    met = Metrics(str(tmp_path / "metrics"))
+    met.record(spark, "job-1", "day", {"rows": 10, "seconds": 1.5})
+    t1 = time.time()
+    nodes = [df._jdf.queryExecution().analyzed().getClass().getSimpleName() for df in committed]
+    assert nodes == ["LocalRelation"] * 2
+
+    def utc_epoch(ts):
+        return ts.replace(tzinfo=dt.timezone.utc).timestamp()
+
+    (r,) = lin.table.read(spark).collect()
+    assert (r.partition_id, r.input_snapshot, r.output_snapshot, r.row_count, r.checksum) == (
+        "2024-01-01", 3, 4, 10, "abc",
+    )
+    assert t0 - 1 <= utc_epoch(r.committed_at) <= t1 + 1
+    rows = sorted(met.table.read(spark).collect(), key=lambda r: r.key)
+    assert [(r.job_id, r.stage, r.key, r.value) for r in rows] == [
+        ("job-1", "day", "rows", 10.0), ("job-1", "day", "seconds", 1.5),
+    ]
+    assert all(t0 - 1 <= utc_epoch(r.ts) <= t1 + 1 for r in rows)
 
 
 def test_job_kill_and_resume_exact(spark, small_pages_path, small_pages_pdf, tmp_path):
