@@ -26,12 +26,20 @@ batch. No per-row or per-group Python anywhere on the encode path (north
 rule); ``encode_dod``/``encode_gorilla`` are the one-chunk case of the same
 packer.
 
-Decode is vectorized in three phases (see the decode section): a per-bit
+Decode is one kernel, ``_decode_table``: an Arrow table of chunk rows in,
+the host-series rows of all its chunks out, in three phases over the
+concatenated streams of the whole batch (see the decode section): a per-bit
 record-length table (numpy), the record-start chain (the only sequential
 step — one list-indexed add per point), and vectorized payload extraction
-with cumsum / cumulative-XOR reconstruction. ~10-40x faster than the prior
-per-field bit reader; serving reads from compressed chunks are no longer
-the slowest kernel in the engine.
+with segmented cumsum / cumulative-XOR reconstruction. No per-chunk or
+per-point Python builds rows. Where it runs:
+- ``query_api.read_chunks`` (serving) collects its pruned compressed rows
+  once and decodes them on the driver: its callers collect the answer
+  anyway, and a Python task costs ~250 ms of worker CPU before any decode
+  code runs — more than the decode of a pruned read;
+- ``decode_chunks`` (whole-table decodes: checks, gates) is a
+  ``mapInArrow`` of the same kernel on the executors;
+- ``decode_chunks_pdf`` runs it on a pandas frame (validation).
 
 Family context (PAPERS.md): Gorilla-style XOR value compression and its
 successors (e.g. Chimp, VLDB 2022) — this engine pins the simplified XOR
@@ -49,6 +57,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 # ---------------------------------------------------------------------------
@@ -173,18 +182,21 @@ def encode_gorilla(vals: np.ndarray) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# decode — vectorized three-phase scan
+# decode — vectorized three-phase scan over many chunks at once
 # ---------------------------------------------------------------------------
 # Variable-length prefix codes are sequential ONLY in where each record
-# starts. Decode therefore runs in three phases:
+# starts. Decode therefore runs in three phases over the concatenated
+# streams of a whole batch of chunks (each chunk's stream starts on a byte
+# boundary, so chunk c's records start at bit 8 * offsets[c]):
 #   1. a fully vectorized per-bit-position table L[p] = "record length if a
-#      record started at bit p" (numpy over the whole bitstream);
-#   2. the record-start chain p_{i+1} = p_i + L[p_i] — a bare list-indexed
-#      Python loop, one add per point (~50 ns/pt, vs ~1 µs/pt for the old
-#      per-field bit reader);
+#      record started at bit p" (numpy over every stream of the batch);
+#   2. the record-start chain p_{i+1} = p_i + L[p_i], restarted at each
+#      chunk's first bit — a bare Python loop, one add per point (~50 ns/pt);
 #   3. fully vectorized payload extraction (gather 9 bytes per record,
-#      big-endian uint64 window shift) and reconstruction — double cumsum
-#      for delta-of-delta timestamps, cumulative XOR for Gorilla values.
+#      big-endian uint64 window shift) and segmented reconstruction — a
+#      double cumsum for delta-of-delta timestamps, a cumulative XOR for
+#      Gorilla values, each restarted at the chunk's out-of-band first point.
+# ``decode_dod``/``decode_gorilla`` are the one-chunk case of the same pass.
 
 
 def _read_bits_at(padded: np.ndarray, pos: np.ndarray, nbits) -> np.ndarray:
@@ -207,28 +219,49 @@ def _read_bits_at(padded: np.ndarray, pos: np.ndarray, nbits) -> np.ndarray:
     return np.where(k > 0, win >> shift, np.uint64(0))
 
 
-def _record_starts(L: np.ndarray, n_records: int) -> np.ndarray:
-    """Walk the record chain p += L[p] (the only inherently sequential step).
-    ``L`` is uint8 (max record length 77 bits < 256): a `bytes` view gives
-    C-speed indexing without materializing a per-position int list."""
+def _record_starts(L: np.ndarray, offsets: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """Walk the record chain p += L[p] (the only inherently sequential
+    step) through every chunk: chunk c holds ``n[c] - 1`` records from bit
+    ``8 * offsets[c]``. ``L`` is uint8 (max record length 77 bits < 256): a
+    `bytes` view gives C-speed indexing without a per-position int list."""
     Lb = L.tobytes()
-    pos = np.empty(n_records, dtype=np.int64)
-    p = 0
-    for i in range(n_records):
-        pos[i] = p
-        p += Lb[p]
-    return pos
+    pos = []
+    add = pos.append
+    for p, k in zip((offsets[:-1] * 8).tolist(), (n - 1).tolist()):
+        for _ in range(k):
+            add(p)
+            p += Lb[p]
+    return np.array(pos, dtype=np.int64)
 
 
-def decode_dod(data: bytes, first_ts: int, n: int) -> np.ndarray:
-    out = np.empty(n, dtype=np.int64)
-    out[0] = first_ts
-    if n == 1:
-        return out
-    buf = np.frombuffer(data, dtype=np.uint8)
-    padded = np.concatenate([buf, np.zeros(12, dtype=np.uint8)])
-    bits = np.unpackbits(buf)
-    bp = np.concatenate([bits, np.zeros(4, dtype=np.uint8)])
+def _stream_bits(data: np.ndarray, slack: int):
+    """(bytes with 12 zero bytes of read slack, bits, bits with ``slack``
+    zero bits appended) of a concatenated stream buffer."""
+    padded = np.concatenate([data, np.zeros(12, dtype=np.uint8)])
+    bits = np.unpackbits(data)
+    return padded, bits, np.concatenate([bits, np.zeros(slack, dtype=np.uint8)])
+
+
+def _first_points(n: np.ndarray):
+    """Index of each chunk's first point, and a mask of every other point,
+    in the chunk-major point order."""
+    first = np.cumsum(n) - n
+    rest = np.ones(int(n.sum()), dtype=bool)
+    rest[first] = False
+    return first, rest
+
+
+def _seg_cumsum(x: np.ndarray, first: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """Cumulative sum of ``x`` restarted at every chunk's first point. int64
+    wraps mod 2**64 exactly as a per-chunk cumsum does."""
+    c = np.cumsum(x)
+    return c - np.repeat(c[first] - x[first], n)
+
+
+def _decode_dod_chunks(data, offsets, first_ts, n) -> np.ndarray:
+    """Timestamps of every point of every chunk (chunk-major): the
+    delta-of-delta streams ``data[offsets[c]:offsets[c+1]]``."""
+    padded, _, bp = _stream_bits(data, 4)
     b0, b1, b2, b3 = bp[:-4], bp[1:-3], bp[2:-2], bp[3:-1]
     # '0'→1 | '10'+7→9 | '110'+9→12 | '1110'+12→16 | '1111'+64→68
     one = np.uint8(1)
@@ -237,7 +270,7 @@ def decode_dod(data: bytes, first_ts: int, n: int) -> np.ndarray:
         one,
         np.where(b1 == 0, np.uint8(9), np.where(b2 == 0, np.uint8(12), np.where(b3 == 0, np.uint8(16), np.uint8(68)))),
     )
-    pos = _record_starts(L, n - 1)
+    pos = _record_starts(L, offsets, n)
     Lr = L[pos]
     cases = [Lr == 1, Lr == 9, Lr == 12, Lr == 16, Lr == 68]
     plen = np.select(cases, [0, 7, 9, 12, 64]).astype(np.int64)
@@ -250,18 +283,16 @@ def decode_dod(data: bytes, first_ts: int, n: int) -> np.ndarray:
         cases,
         [np.zeros(len(raw), dtype=np.int64), signed - 63, signed - 255, signed - 2047, signed],
     )
-    out[1:] = int(first_ts) + np.cumsum(np.cumsum(dod))
-    return out
+    first, rest = _first_points(n)
+    x = np.zeros(len(rest), dtype=np.int64)
+    x[rest] = dod  # a chunk's first record is its plain delta (prior delta 0)
+    return np.repeat(first_ts, n) + _seg_cumsum(_seg_cumsum(x, first, n), first, n)
 
 
-def decode_gorilla(data: bytes, first_val: int, n: int) -> np.ndarray:
-    first = np.uint64(int(first_val) & 0xFFFFFFFFFFFFFFFF)
-    if n == 1:
-        return np.array([first], dtype=np.uint64).view(np.int64).copy()
-    buf = np.frombuffer(data, dtype=np.uint8)
-    padded = np.concatenate([buf, np.zeros(12, dtype=np.uint8)])
-    bits = np.unpackbits(buf)
-    bp = np.concatenate([bits, np.zeros(13, dtype=np.uint8)])
+def _decode_gorilla_chunks(data, offsets, first_val, n) -> np.ndarray:
+    """Values of every point of every chunk (chunk-major): the XOR streams
+    ``data[offsets[c]:offsets[c+1]]``."""
+    padded, bits, bp = _stream_bits(data, 13)
     # 6-bit meaningful-length field at p+7..p+12, for every position p
     # (uint8 arithmetic throughout: max value 63, no 8-byte promotion)
     nb = len(bits)
@@ -271,14 +302,33 @@ def decode_gorilla(data: bytes, first_val: int, n: int) -> np.ndarray:
     mf += bp[12:][:nb]
     # '0'→1 | '1'+6 lead+6 mlen+(mf+1) meaningful→14+mf  (max 77, fits uint8)
     L = np.where(bits == 0, np.uint8(1), np.uint8(14) + mf)
-    pos = _record_starts(L, n - 1)
+    pos = _record_starts(L, offsets, n)
     ctrl = bits[pos]
     mbits = np.where(ctrl == 1, mf[pos].astype(np.int64) + 1, 0)
-    xors = _read_bits_at(padded, pos + 13, mbits)  # 0 where ctrl == 0
-    vals = np.empty(n, dtype=np.uint64)
-    vals[0] = first
-    vals[1:] = xors
-    return np.bitwise_xor.accumulate(vals).view(np.int64).copy()
+    first, rest = _first_points(n)
+    y = np.empty(len(rest), dtype=np.uint64)
+    y[first] = first_val.view(np.uint64)
+    y[rest] = _read_bits_at(padded, pos + 13, mbits)  # 0 where ctrl == 0
+    acc = np.bitwise_xor.accumulate(y)
+    # undo the XOR of the earlier chunks carried into each chunk's prefix
+    return (acc ^ np.repeat(acc[first] ^ y[first], n)).view(np.int64)
+
+
+def _one_chunk(data: bytes, first: int, n: int):
+    return (
+        np.frombuffer(data, dtype=np.uint8),
+        np.array([0, len(data)], dtype=np.int64),
+        np.array([first], dtype=np.int64),
+        np.array([n], dtype=np.int64),
+    )
+
+
+def decode_dod(data: bytes, first_ts: int, n: int) -> np.ndarray:
+    return _decode_dod_chunks(*_one_chunk(data, first_ts, n))
+
+
+def decode_gorilla(data: bytes, first_val: int, n: int) -> np.ndarray:
+    return _decode_gorilla_chunks(*_one_chunk(data, first_val, n))
 
 
 # ---------------------------------------------------------------------------
@@ -309,8 +359,6 @@ def _group_opens(t, keys) -> np.ndarray:
 def _encode_table(t, tier: str, max_points: int | None, keys: list[str]):
     """Chunk rows for every group of ``t`` (whole groups only, sorted by
     keys then bucket_ts): one vectorized pass over the whole table."""
-    import pyarrow as pa
-
     n = t.num_rows
     if n == 0:
         return []
@@ -359,8 +407,6 @@ def _encode_partition_fn(tier: str, max_points: int | None, keys: list[str]):
     next batch, so each group is encoded once, whole."""
 
     def encode(batches):
-        import pyarrow as pa
-
         def chunks(parts):
             return _encode_table(pa.Table.from_batches(parts), tier, max_points, keys)
 
@@ -442,43 +488,90 @@ def chunk_host_bucket(host: str, host_buckets: int) -> str:
     return format(zlib.crc32(host.encode("utf-8")) % host_buckets, "04d")
 
 
+DECODED_SCHEMA = "host string, tier string, bucket_ts timestamp, doc_count long, bytes_sum long"
+_DECODED_ARROW = pa.schema(
+    [
+        ("host", pa.string()),
+        ("tier", pa.string()),
+        ("bucket_ts", pa.timestamp("us", tz="UTC")),
+        ("doc_count", pa.int64()),
+        ("bytes_sum", pa.int64()),
+    ]
+)
+
+# compressed bytes decoded per vectorized pass: the per-bit tables cost
+# ~10 B per stream bit, so a slice holds them to tens of MB
+_DECODE_SLICE_BYTES = 1 << 20
+_STREAMS = ("ts_dod", "val_gorilla", "bytes_gorilla")
+# the chunk columns the decode reads
+DECODE_INPUT_COLS = ("host", "tier", *_STREAMS, "n_points", "first_ts", "first_val", "first_bytes")
+
+
+def _stream_buffer(col):
+    """(data uint8, byte offsets int64[n+1]) of a binary table column: the
+    concatenated streams of its chunks, read straight from Arrow buffers."""
+    a = col.combine_chunks().cast(pa.large_binary())
+    off = np.frombuffer(a.buffers()[1], dtype=np.int64)[a.offset : a.offset + len(a) + 1]
+    buf = a.buffers()[2]
+    data = np.frombuffer(buf, dtype=np.uint8) if buf is not None else np.zeros(0, dtype=np.uint8)
+    return data[off[0] : off[-1]], off - off[0]
+
+
+def _decode_slice(t):
+    n = t["n_points"].to_numpy().astype(np.int64)
+
+    def first(c):
+        return t[c].to_numpy().astype(np.int64)
+
+    ts = _decode_dod_chunks(*_stream_buffer(t["ts_dod"]), first("first_ts"), n)
+    rows = pa.array(np.repeat(np.arange(len(n)), n))
+    return pa.table(
+        {
+            "host": t["host"].take(rows),
+            "tier": t["tier"].take(rows),
+            "bucket_ts": pa.array(ts * 1_000_000, pa.timestamp("us", tz="UTC")),
+            "doc_count": _decode_gorilla_chunks(*_stream_buffer(t["val_gorilla"]), first("first_val"), n),
+            "bytes_sum": _decode_gorilla_chunks(*_stream_buffer(t["bytes_gorilla"]), first("first_bytes"), n),
+        }
+    ).cast(_DECODED_ARROW)
+
+
+def _decode_table(t):
+    """Host-level series rows (``DECODED_SCHEMA``, chunk-major) of every
+    chunk row of ``t`` (a pyarrow Table in ``CHUNK_SCHEMA``): one vectorized
+    pass per slice of at most ``_DECODE_SLICE_BYTES`` compressed bytes.
+    The one decode kernel — ``decode_chunks`` runs it on the executors,
+    ``query_api.read_chunks`` on the driver, ``decode_chunks_pdf`` locally."""
+    import pyarrow.compute as pc
+
+    size = np.zeros(t.num_rows, dtype=np.int64)
+    for c in _STREAMS:
+        size += pc.binary_length(t[c]).to_numpy(zero_copy_only=False).astype(np.int64)
+    cuts = np.flatnonzero(np.diff(np.cumsum(size) // _DECODE_SLICE_BYTES)) + 1
+    bounds = [0, *cuts.tolist(), t.num_rows]
+    return pa.concat_tables(
+        [_decode_slice(t.slice(a, b - a)) for a, b in zip(bounds, bounds[1:])]
+    )
+
+
 def decode_chunks_pdf(chunks: pd.DataFrame) -> pd.DataFrame:
-    """Round-trip: chunks (pandas) → host-level series rows (validation)."""
-    rows = []
-    for r in chunks.itertuples(index=False):
-        ts = decode_dod(r.ts_dod, r.first_ts, r.n_points)
-        dc = decode_gorilla(r.val_gorilla, r.first_val, r.n_points)
-        bs = decode_gorilla(r.bytes_gorilla, r.first_bytes, r.n_points)
-        for i in range(r.n_points):
-            rows.append((r.host, pd.Timestamp(int(ts[i]), unit="s"), int(dc[i]), int(bs[i])))
-    return pd.DataFrame(rows, columns=["host", "bucket_ts", "doc_count", "bytes_sum"])
-
-
-def _decode_group(pdf):
-    rows = {"host": [], "tier": [], "bucket_ts": [], "doc_count": [], "bytes_sum": []}
-    for r in pdf.itertuples(index=False):
-        ts = decode_dod(r.ts_dod, r.first_ts, r.n_points)
-        dc = decode_gorilla(r.val_gorilla, r.first_val, r.n_points)
-        bs = decode_gorilla(r.bytes_gorilla, r.first_bytes, r.n_points)
-        rows["host"].extend([r.host] * r.n_points)
-        rows["tier"].extend([r.tier] * r.n_points)
-        rows["bucket_ts"].extend(pd.to_datetime(ts, unit="s"))
-        rows["doc_count"].extend(dc.tolist())
-        rows["bytes_sum"].extend(bs.tolist())
-    yield pd.DataFrame(rows)
+    """Round-trip: chunks (pandas) → host-level series rows (validation),
+    through the same kernel as ``decode_chunks``; ``bucket_ts`` is naive UTC."""
+    t = pa.Table.from_pandas(chunks, preserve_index=False)
+    out = _decode_table(t).drop_columns(["tier"]).to_pandas()
+    out["bucket_ts"] = out["bucket_ts"].dt.tz_localize(None)
+    return out
 
 
 def decode_chunks(chunks_df: DataFrame) -> DataFrame:
-    """Spark-side chunk read path: compressed chunk rows → host-level series
-    rows (mapInPandas; one Arrow batch of chunks in, the decoded points out).
-    The distributed inverse of encode_chunks — used by query layers that
-    serve directly from compressed storage."""
+    """Spark-side chunk decode: compressed chunk rows → host-level series
+    rows, one ``mapInArrow`` pass of ``_decode_table`` per Arrow batch on
+    the executors. The distributed inverse of encode_chunks, for decodes
+    over whole tables; the serving read (``query_api.read_chunks``) decodes
+    its pruned rows on the driver with the same kernel."""
 
-    def batches(it):
-        for pdf in it:
-            yield from _decode_group(pdf)
+    def decode(batches):
+        for b in batches:
+            yield from _decode_table(pa.Table.from_batches([b])).to_batches()
 
-    return chunks_df.mapInPandas(
-        batches,
-        schema="host string, tier string, bucket_ts timestamp, doc_count long, bytes_sum long",
-    )
+    return chunks_df.mapInArrow(decode, DECODED_SCHEMA)

@@ -82,11 +82,3 @@ def importance_score(
     for t, w in type_weights.items():
         tw = F.when(doc_type_col == t, F.lit(float(w))).otherwise(tw)
     return tw * field_value_factor(weight_col, factor, missing, modifier)
-
-
-def fuzzy_matches(query_tokens_col, doc_tokens_col):
-    """Boolean: does the document satisfy the minimum_should_match ladder
-    for this query? (the MatchType::Fuzzy acceptance test)"""
-    return clause_overlap(query_tokens_col, doc_tokens_col) >= msm_required(
-        F.size(query_tokens_col)
-    )

@@ -10,6 +10,7 @@ derived metrics, deterministic paging. Every knob is an explicit parameter
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -531,9 +532,20 @@ def read_chunks(
        point >= t0 (last_ts, written at encode time).
     3. exact row filters after the vectorized decode.
     The compressed read path a 100 TB serving tier uses instead of the
-    uncompressed rollup tables."""
+    uncompressed rollup tables.
+
+    Decode runs on the DRIVER: the pruned compressed rows are collected
+    once as Arrow (about 9 B per point, against at least 30 B per decoded
+    point that the caller collects anyway) and decoded in one vectorized
+    pass (``codecs._decode_table``); the answer is a LocalRelation. A Python
+    task costs ~250 ms of worker CPU before any decode code runs, more than
+    the whole decode of a pruned serving read. Whole-table decodes keep
+    ``codecs.decode_chunks``, which runs the same kernel on the executors."""
+    import pyarrow as pa
+
     from . import codecs
     from .series import TIER_SECONDS
+    from .tables import local_frame
 
     tbl = SnapshotTable(f"{out_dir}/chunks_{tier}")
     pred = None
@@ -580,7 +592,7 @@ def read_chunks(
         sf["chunk_start"] = (None, t1 - 1)
     if t0 is not None:
         sf["last_ts"] = (t0, None)
-    df = tbl.read(spark, partition_filter=pred, stats_filters=sf or None).drop("pkey")
+    df = tbl.read(spark, partition_filter=pred, stats_filters=sf or None)
     if hosts:
         df = df.filter(F.col("host").isin(hosts))
     _ = TIER_SECONDS[tier]  # validates the tier name
@@ -592,9 +604,11 @@ def read_chunks(
         # chunk_start + n_points*step under-counts any chunk with gaps and
         # would silently drop chunks that still hold points >= t0.
         df = df.filter(F.col("last_ts") >= t0)
-    out = codecs.decode_chunks(df)
+    out = codecs._decode_table(df.select(*codecs.DECODE_INPUT_COLS).toArrow())
+    sec = out["bucket_ts"].cast(pa.int64()).to_numpy() // 1_000_000
+    keep = np.ones(len(sec), dtype=bool)
     if t0 is not None:
-        out = out.filter(F.col("bucket_ts").cast("long") >= t0)
+        keep &= sec >= t0
     if t1 is not None:
-        out = out.filter(F.col("bucket_ts").cast("long") < t1)
-    return out
+        keep &= sec < t1
+    return local_frame(spark, out.filter(pa.array(keep)), codecs.DECODED_SCHEMA)

@@ -27,14 +27,6 @@ LANGS = ["en", "de", "fr", "es", "zh", "unknown"]
 EPOCH_START = np.datetime64("2024-01-01T00:00:00", "s")
 
 
-def extract_text_bytes(html: bytes) -> str:
-    """Pinned text-extraction spec: keep printable-ASCII bytes (0x20..0x7E),
-    decode as ASCII. Identical in oracle and engine (per-row invariant,
-    BASELINE.json input_hint)."""
-    keep = bytes(b for b in html if 0x20 <= b <= 0x7E)
-    return keep.decode("ascii")
-
-
 def generate_pages(
     n_rows: int = 100_000,
     n_hosts: int = 50,

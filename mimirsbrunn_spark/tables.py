@@ -659,20 +659,27 @@ class SnapshotTable:
                 for f in files
                 if self._stats_pass(snap.file_stats.get(f, {}), stats_filters)
             ]
-        if not files:
-            # Pruned-to-nothing OR a genuinely empty snapshot (every partition
-            # dropped): synthesize an empty DF from the manifest schema instead
-            # of handing parquet() zero paths (which raises).
-            if snap.files:
-                return spark.read.parquet(*snap.files).limit(0)
-            if snap.schema_json is None:
-                raise FileNotFoundError(
-                    f"snapshot {snapshot_id} of {self.path} is empty and has no recorded schema"
-                )
+        # The manifest's schema pins the scan: no footer is read to infer it
+        # (inference is one Spark job per read). Only manifests older than
+        # schema_json still infer.
+        schema = None
+        if snap.schema_json is not None:
             from pyspark.sql.types import StructType
 
-            return local_frame(spark, [], StructType.fromJson(json.loads(snap.schema_json)))
-        return spark.read.parquet(*files)
+            schema = StructType.fromJson(json.loads(snap.schema_json))
+        if not files:
+            # Pruned-to-nothing OR a genuinely empty snapshot (every partition
+            # dropped): a typed empty LocalRelation instead of handing
+            # parquet() zero paths (which raises).
+            if schema is None:
+                if not snap.files:
+                    raise FileNotFoundError(
+                        f"snapshot {snapshot_id} of {self.path} is empty and has no recorded schema"
+                    )
+                schema = spark.read.parquet(*snap.files).schema
+            return local_frame(spark, [], schema)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*files)
 
     def exists(self) -> bool:
         return self.current_snapshot_id() is not None
@@ -707,23 +714,27 @@ LINEAGE_SCHEMA = (
 METRICS_SCHEMA = "job_id string, stage string, key string, value double, ts timestamp"
 
 
-def local_frame(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
-    """Local ``rows`` (tuples in ``schema`` order; schema a StructType
-    or DDL string) as a DataFrame built through Arrow: a LocalRelation, so
-    neither a Python RDD nor a Python worker pool is involved — the list
-    path of ``createDataFrame`` starts both, and its pandas path silently
-    falls back to the list path when Arrow is off or the frame is empty.
-    Timestamps are UTC instants (naive datetimes are read as UTC)."""
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Local ``rows`` (tuples in ``schema`` order, or a pyarrow Table
+    holding ``schema``'s columns; schema a StructType or DDL string) as a
+    DataFrame built through Arrow: a LocalRelation, so neither a Python RDD
+    nor a Python worker pool is involved — the list path of
+    ``createDataFrame`` starts both, and its pandas path silently falls back
+    to the list path when Arrow is off or the frame is empty. Timestamps are
+    UTC instants (naive datetimes are read as UTC)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
     struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
     arrow = to_arrow_schema(struct)
-    cols = list(zip(*rows)) if rows else [[] for _ in arrow]
-    table = pa.Table.from_arrays(
-        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
-    )
+    if isinstance(rows, pa.Table):
+        table = rows.select(arrow.names).cast(arrow)
+    else:
+        cols = list(zip(*rows)) if rows else [[] for _ in arrow]
+        table = pa.Table.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+        )
     return spark.createDataFrame(table, struct)
 
 

@@ -255,13 +255,6 @@ def incremental_refresh(
     return len(buckets)
 
 
-def with_avg_page_size(tier_df: DataFrame) -> DataFrame:
-    """Read-time derived metric (never stored, never re-averaged)."""
-    return tier_df.withColumn(
-        "avg_page_size", F.col("bytes_sum") / F.col("doc_count")
-    )
-
-
 def host_series(tier_df: DataFrame) -> DataFrame:
     """Host-level series (summed across langs) — gap-fill input."""
     return tier_df.groupBy("host", "bucket_ts").agg(

@@ -239,3 +239,68 @@ def test_encode_chunks_empty_input_and_one_exchange(spark, split_by_month):
     # the only shuffle is the hash on host: no per-group Exchange, no
     # second pass (the input is a local relation with none of its own)
     assert plans.count_exchanges(ch) == 1
+
+
+CHUNK_COLS = [
+    "host", "tier", "chunk_start", "ts_dod", "val_gorilla", "bytes_gorilla",
+    "n_points", "first_ts", "first_val", "first_bytes", "last_ts",
+]
+
+
+def test_decode_batch_of_chunks_matches_per_chunk_and_oracle(spark):
+    """One batch of many chunks — bitstreams from ``oracle.encode_*_py``,
+    with 1-point chunks, 64-bit delta-of-delta escapes and 62-bit XORs —
+    decodes in one pass (``_decode_table``, also sliced into many passes,
+    and through ``decode_chunks`` over 7-row Arrow batches) to exactly the
+    per-chunk ``decode_dod``/``decode_gorilla`` points and the source
+    series."""
+    import pyarrow as pa
+
+    pdf = _crafted_series()
+    sec = pdf["bucket_ts"].astype("datetime64[us]").astype("int64") // 1_000_000
+    want = sorted(
+        zip(pdf["host"].fillna("~"), sec, pdf["doc_count"], pdf["bytes_sum"])
+    )
+    for max_points in (None, 5):
+        rows = _want_chunks(pdf, "1h", max_points, True)
+        assert any(r[6] == 1 for r in rows)
+        t = pa.Table.from_pylist([dict(zip(CHUNK_COLS, r)) for r in rows])
+        per_chunk = [
+            np.concatenate([dec(r[i], r[f], r[6]) for r in rows])
+            for dec, i, f in (
+                (codecs.decode_dod, 3, 7),
+                (codecs.decode_gorilla, 4, 8),
+                (codecs.decode_gorilla, 5, 9),
+            )
+        ]
+        assert np.diff(per_chunk[0]).max() > 2048  # 64-bit dod escapes
+        assert np.abs(per_chunk[2]).max() >= 2**61  # 62-bit XORs
+        one = codecs._decode_table(t)
+        got = [
+            one["bucket_ts"].cast(pa.int64()).to_numpy() // 1_000_000,
+            one["doc_count"].to_numpy(),
+            one["bytes_sum"].to_numpy(),
+        ]
+        for g, w in zip(got, per_chunk):
+            assert np.array_equal(g, w)
+        hosts = [h or "~" for h in one["host"].to_pylist()]
+        assert sorted(zip(hosts, *got)) == want
+        assert one["tier"].to_pylist() == ["1h"] * len(want)
+
+        old = codecs._DECODE_SLICE_BYTES
+        codecs._DECODE_SLICE_BYTES = 16
+        try:
+            assert codecs._decode_table(t).equals(one)
+        finally:
+            codecs._DECODE_SLICE_BYTES = old
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        dec = codecs.decode_chunks(spark.createDataFrame(t)).toArrow()
+    finally:
+        spark.conf.set(key, old)
+    secs = dec["bucket_ts"].cast(pa.int64()).to_numpy() // 1_000_000
+    hosts = [h or "~" for h in dec["host"].to_pylist()]
+    assert sorted(zip(hosts, secs, dec["doc_count"].to_numpy(), dec["bytes_sum"].to_numpy())) == want

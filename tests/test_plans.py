@@ -5,15 +5,15 @@ These inspect plans only — no job execution."""
 from pyspark.sql import functions as F
 
 from mimirsbrunn_spark import gate_rel, series, tiers
-from mimirsbrunn_spark.plans import plan_str
+from mimirsbrunn_spark.plans import assert_broadcast_join, assert_no_sort_aggregate, plan_str
 
 
 def test_series_plan_hash_agg_only(pages_df):
     """Dedup must compile to hash aggregation — a SortAggregate here means
     the full input gets sorted twice (the dropDuplicates-subset regression)."""
-    p = plan_str(series.series_1m(pages_df))
-    assert "SortAggregate" not in p
-    assert "HashAggregate" in p
+    df = series.series_1m(pages_df)
+    assert_no_sort_aggregate(df)
+    assert "HashAggregate" in plan_str(df)
 
 
 def test_series_scan_prunes_columns(pages_df):
@@ -31,9 +31,7 @@ def test_filter_pushdown_reaches_scan(pages_df):
 
 def test_hierarchy_join_is_broadcast(spark):
     df = gate_rel.q_hierarchy_denorm(spark, "/root/testdata/sf0.001")
-    p = plan_str(df)
-    assert "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
+    assert_broadcast_join(df)
 
 
 def test_cascade_reuses_partitioning(pages_df):
@@ -150,7 +148,7 @@ def test_distinct_and_topn_plan_shapes(spark):
 
     p = plan_str(sketch_rollup(pg, "1h"), "simple")
     assert p.count("Exchange") == 1
-    assert "SortAggregate" not in plan_str(sketch_rollup(pg, "1h"))
+    assert_no_sort_aggregate(sketch_rollup(pg, "1h"))
 
     p2 = plan_str(sketch_cascade(sketch_rollup(pg, "1h"), "1d"), "simple")
     assert p2.count("Exchange") == 2  # child build + sketch-row merge

@@ -162,3 +162,81 @@ def test_append_inherits_declared_layout(spark, tmp_path):
     # a PARTIAL append (partition_by only) still inherits the rest
     tbl.commit(df2.withColumn("pkey", F.lit("2024-01-04")), mode="append", partition_by="pkey")
     assert tbl.snapshot(tbl.current_snapshot_id()).layout == declared
+
+
+# -- the read path: scans pinned to the manifest schema ----------------------
+
+
+def _jobs_of(spark, fn, group):
+    """(fn(), ids of the Spark jobs it ran), counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _served_table(spark, tmp_path):
+    import datetime as dt
+
+    rows = [
+        (f"2024-01-0{1 + i % 3}", f"host-{i % 5}", dt.datetime(2024, 1, 1 + i % 3, i % 24), i)
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(rows, "pkey string, host string, ts timestamp, v long")
+    tbl = SnapshotTable(str(tmp_path / "served"))
+    tbl.commit(df, partition_by="pkey", stats_cols=("host",), cluster_by=("host",), cluster_files=2)
+    return tbl
+
+
+def test_read_runs_no_job_and_equals_inferred_read(spark, tmp_path):
+    """A read takes its schema from the manifest: planning it runs no Spark
+    job (schema inference reads a footer in one), and it answers with the
+    same schema and rows as the inferred read of the same files."""
+    tbl = _served_table(spark, tmp_path)
+    for i, kw in enumerate(
+        ({}, {"partition_values": {"2024-01-02"}}, {"stats_filters": {"host": {"host-1"}}})
+    ):
+        _, jobs = _jobs_of(spark, lambda: tbl.read(spark, **kw), f"pinned-read-{i}")
+        assert jobs == [], kw
+    got = tbl.read(spark)
+    inferred = spark.read.parquet(*tbl.snapshot(tbl.current_snapshot_id()).files)
+    assert got.schema == inferred.schema
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, inferred.collect()))
+
+
+def test_read_without_schema_json_infers(spark, tmp_path):
+    """A manifest older than ``schema_json`` still reads — through schema
+    inference — in full and pruned to nothing."""
+    import json
+
+    tbl = _served_table(spark, tmp_path)
+    want = sorted(map(tuple, tbl.read(spark).collect()))
+    want_schema = tbl.read(spark).schema
+    path = tbl._manifest_path(tbl.current_snapshot_id())
+    with open(path) as f:
+        m = json.load(f)
+    del m["schema_json"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    assert tbl.snapshot(tbl.current_snapshot_id()).schema_json is None
+    got = tbl.read(spark)
+    assert got.schema == want_schema
+    assert sorted(map(tuple, got.collect())) == want
+    empty = tbl.read(spark, partition_values={"1999-01-01"})
+    assert empty.schema == want_schema and empty.count() == 0
+
+
+def test_read_pruned_to_nothing_is_typed_empty(spark, tmp_path):
+    """A read that prunes every file is a typed empty LocalRelation built
+    from the manifest schema — no scan is planned over the table's files."""
+    tbl = _served_table(spark, tmp_path)
+    got, jobs = _jobs_of(
+        spark, lambda: tbl.read(spark, stats_filters={"host": {"no-such-host"}}), "pruned-empty"
+    )
+    assert jobs == []
+    assert got._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation"
+    assert got.schema == tbl.read(spark).schema
+    assert got.count() == 0

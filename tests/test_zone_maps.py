@@ -183,3 +183,21 @@ def test_read_chunks_host_scoped_results_exact(spark, served):
     got = sorted(map(tuple, scoped.collect()))
     exp = sorted(map(tuple, full.filter(F.col("host") == host).collect()))
     assert got == exp
+
+
+def test_read_rollup_pinned_scan_keeps_pushdown_and_pruning(spark, served):
+    """The scan under ``read_rollup`` reads with the manifest's schema and
+    still gets the optimizer's work: the host and bucket_ts predicates are
+    pushed to parquet, and the dropped partition-key column is pruned from
+    the read schema."""
+    from mimirsbrunn_spark import plans
+
+    host = read_rollup(spark, served, "1h").select("host").first().host
+    t0 = int(dt.datetime(2024, 1, 2, tzinfo=dt.timezone.utc).timestamp())
+    df = read_rollup(spark, served, "1h", t0=t0, t1=t0 + 6 * 3600, hosts=[host])
+    (pushed,) = plans.pushed_filters(df)
+    assert f"In(host, [{host}])" in pushed or f"EqualTo(host,{host})" in pushed
+    assert "IsNotNull(bucket_ts)" in pushed
+    (schema,) = plans.scan_read_schemas(df)
+    assert "bucket_ts:timestamp" in schema and "host:string" in schema
+    assert "pkey" not in schema
