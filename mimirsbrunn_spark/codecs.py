@@ -33,8 +33,9 @@ record-length table (numpy), the record-start chain (the only sequential
 step — one list-indexed add per point), and vectorized payload extraction
 with segmented cumsum / cumulative-XOR reconstruction. No per-chunk or
 per-point Python builds rows. Where it runs:
-- ``query_api.read_chunks`` (serving) collects its pruned compressed rows
-  once and decodes them on the driver: its callers collect the answer
+- ``query_api.read_chunks`` (serving) reads its pruned compressed rows
+  with pyarrow (``SnapshotTable.read_arrow``, no Spark job) and decodes
+  them on the driver: its callers collect the answer
   anyway, and a Python task costs ~250 ms of worker CPU before any decode
   code runs — more than the decode of a pruned read;
 - ``decode_chunks`` (whole-table decodes: checks, gates) is a

@@ -113,10 +113,7 @@ def read_histogram(
         .read(spark, partition_min=p_lo, partition_max=p_hi)
         .drop("pkey")
     )
-    if t0 is not None:
-        df = df.filter(F.col("bucket_ts").cast("long") >= t0)
-    if t1 is not None:
-        df = df.filter(F.col("bucket_ts").cast("long") < t1)
+    df = tiers.time_window(df, t0, t1)
     if hosts:
         df = df.filter(F.col("host").isin(hosts))
     return df

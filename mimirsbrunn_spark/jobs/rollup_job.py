@@ -757,9 +757,12 @@ def run_rollup_job(
             # next tier's coverage starts at THIS tier's oldest surviving
             # instant (one tiny driver agg over the rolled-up tier — the
             # rebuild path is rare and the tier is retention-bounded)
-            if src_min is not None and tier != "30d":
-                # (guarded: a dead agg job on the plain-rebuild path and on
-                # the last tier would be pure waste)
+            nxt = {"1h": "1d", "1d": "30d"}.get(tier)
+            if src_min is not None and nxt and tier_tables[f"rollup_{nxt}"].exists():
+                # (guarded: the next tier reads src_min only when its table
+                # already exists, so on a first publish, on the
+                # plain-rebuild path and on the last tier the agg job would
+                # be pure waste)
                 row = prev_full.agg(F.min(F.col("bucket_ts").cast("long"))).first()
                 # empty tier content ⇒ the next tier can rebuild nothing
                 src_min = row[0] if row and row[0] is not None else _NOTHING_COVERED

@@ -6,9 +6,26 @@ tier selection, time-range pruning, host/lang filters, on-demand gap-fill,
 derived metrics, deterministic paging. Every knob is an explicit parameter
 (the reference's explicitly-parameterized query-settings discipline,
 /root/reference/libs/bragi/src/query_settings.rs:1-83).
+
+Where a read runs follows from its input: a read whose input is bounded by
+its answer runs on the DRIVER, and a read that reduces its input keeps a
+Spark scan. ``read_rollup``, ``read_gapfill`` and ``read_chunks`` return
+stored rows (decoded, for chunks) that the caller collects anyway, so they
+read the manifest-pruned files with pyarrow (``SnapshotTable.read_arrow``,
+the exact row predicate pushed into the Arrow scan) and answer with a
+LocalRelation: no Spark job runs until the caller forces it, and none of
+Spark's fixed per-query cost (relation analysis, jobs, a range-sampling
+sort, code generation per time window) is paid for a few hundred rows.
+``read_plot``, ``read_anomaly``, ``read_forecast``, ``read_corr``,
+``read_range_total`` and ``histogram_job.read_quantile`` aggregate what
+they scan, so they read through Spark (``_tier_scan``), where the time and
+host predicates are pushed to parquet.
 """
 
 from __future__ import annotations
+
+import functools
+import operator
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +63,86 @@ def pick_tier(t0: int, t1: int, max_points: int = 10_000) -> str:
     return TIER_ORDER[-1]
 
 
+def _tier_table(out_dir: str, tier: str) -> SnapshotTable:
+    return SnapshotTable(f"{out_dir}/rollup_{tier}" if tier != "1m" else f"{out_dir}/series_1m")
+
+
+def _tier_scan(
+    spark: SparkSession,
+    out_dir: str,
+    tier: str,
+    t0: int | None = None,
+    t1: int | None = None,
+    hosts: list[str] | None = None,
+) -> DataFrame:
+    """Spark scan of a published tier for the reads that reduce it: the
+    manifest prunes files by partition key and zone maps, then [t0, t1) and
+    the hosts are re-applied as exact row predicates, which parquet also
+    receives. Partition-key columns ride in the data files and are dropped."""
+    from .tiers import partition_bounds, time_window
+
+    p_lo, p_hi = partition_bounds(tier, t0, t1)
+    df = _tier_table(out_dir, tier).read(
+        spark,
+        partition_min=p_lo,
+        partition_max=p_hi,
+        stats_filters=_serving_stats_filters(t0, t1, hosts),
+    ).drop("pkey", "day")
+    df = time_window(df, t0, t1)
+    if hosts:
+        df = df.filter(F.col("host").isin(hosts))
+    return df
+
+
+def _all_of(conds: list):
+    """The conjunction of Arrow dataset expressions; None for no condition."""
+    return functools.reduce(operator.and_, conds) if conds else None
+
+
+def _utc(sec: int):
+    """Epoch seconds as an Arrow UTC timestamp scalar, the type of every
+    timestamp column that ``SnapshotTable.read_arrow`` returns."""
+    import pyarrow as pa
+
+    return pa.scalar(int(sec) * 1_000_000, pa.timestamp("us", tz="UTC"))
+
+
+def _arrow_rows(
+    tbl: SnapshotTable,
+    tier: str,
+    t0: int | None,
+    t1: int | None,
+    hosts: list[str] | None,
+    columns: list[str] | None = None,
+    **equal,
+):
+    """The stored rows of a serving table in [t0, t1) for ``hosts`` (and
+    each ``column=values`` of ``equal``), read on the driver through
+    ``SnapshotTable.read_arrow`` with the same manifest and zone-map pruning
+    as ``_tier_scan``. Bounds compare as UTC timestamps, which for integer
+    bounds equals Spark's floored ``cast("long")`` comparison."""
+    import pyarrow.dataset as ds
+
+    from .tiers import partition_bounds
+
+    conds = []
+    if t0 is not None:
+        conds.append(ds.field("bucket_ts") >= _utc(t0))
+    if t1 is not None:
+        conds.append(ds.field("bucket_ts") < _utc(t1))
+    for col, values in (("host", hosts), *equal.items()):
+        if values:
+            conds.append(ds.field(col).isin(values))
+    p_lo, p_hi = partition_bounds(tier, t0, t1)
+    return tbl.read_arrow(
+        columns=columns,
+        row_filter=_all_of(conds),
+        partition_min=p_lo,
+        partition_max=p_hi,
+        stats_filters=_serving_stats_filters(t0, t1, hosts),
+    )
+
+
 def read_rollup(
     spark: SparkSession,
     out_dir: str,
@@ -60,46 +157,44 @@ def read_rollup(
 ) -> DataFrame:
     """Query a published tier. t0/t1 are translated into a partition-key
     string range first (MANIFEST pruning — only files whose coarse time
-    partition can intersect [t0, t1) are handed to the scan; see
-    tiers.partition_bounds), then re-applied as exact row predicates;
-    ``fill`` ∈ {None, 'locf', 'linear'} applies on-demand gap-fill to the
-    host-level series."""
-    from .tiers import partition_bounds
+    partition can intersect [t0, t1) are read; see tiers.partition_bounds),
+    then re-applied as exact row predicates; ``fill`` ∈ {None, 'locf',
+    'linear'} applies on-demand gap-fill to the host-level series.
 
-    tbl = SnapshotTable(f"{out_dir}/rollup_{tier}" if tier != "1m" else f"{out_dir}/series_1m")
-    p_lo, p_hi = partition_bounds(tier, t0, t1)
-    df = tbl.read(
-        spark,
-        partition_min=p_lo,
-        partition_max=p_hi,
-        stats_filters=_serving_stats_filters(t0, t1, hosts),
-    )
+    Runs on the driver: the answer holds every row read, so the pruned
+    files are read with pyarrow (``_arrow_rows``), sorted by (host,
+    bucket_ts, lang) with NULLs first as Spark's ``orderBy`` sorts them,
+    paged by slicing, and returned as a LocalRelation; no Spark job runs
+    before the caller collects. With ``fill``, those rows feed the Spark
+    gap-fill (``gapfill.gapfill``), whose result is sorted and paged there."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from .tables import local_frame
+
+    if fill is not None and fill not in ("locf", "linear"):
+        raise ValueError(f"unknown fill {fill!r} (expected 'locf' or 'linear')")
+    rows = _arrow_rows(_tier_table(out_dir, tier), tier, t0, t1, hosts, lang=langs)
     # partition-key columns ride in the data files; not part of the API
-    df = df.drop("pkey", "day")
-    if t0 is not None:
-        df = df.filter(F.col("bucket_ts").cast("long") >= t0)
-    if t1 is not None:
-        df = df.filter(F.col("bucket_ts").cast("long") < t1)
-    if hosts:
-        df = df.filter(F.col("host").isin(hosts))
-    if langs:
-        df = df.filter(F.col("lang").isin(langs))
+    rows = rows.drop_columns([c for c in ("pkey", "day") if c in rows.column_names])
 
     if fill is None:
-        out = df.withColumn("avg_page_size", F.col("bytes_sum") / F.col("doc_count"))
-        order = ["host", "bucket_ts", "lang"]
-    else:
-        if fill not in ("locf", "linear"):
-            raise ValueError(f"unknown fill {fill!r} (expected 'locf' or 'linear')")
-        hs = df.groupBy("host", "bucket_ts").agg(
-            F.sum("doc_count").alias("doc_count"), F.sum("bytes_sum").alias("bytes_sum")
+        rows = rows.append_column(
+            "avg_page_size",
+            pc.divide(rows["bytes_sum"].cast(pa.float64()), rows["doc_count"].cast(pa.float64())),
         )
-        filled = gf.gapfill(hs, tier)
-        value = F.col("value_locf") if fill == "locf" else F.col("value_linear")
-        out = filled.select("host", "bucket_ts", "metric", value.alias("value"), "is_filled")
-        order = ["host", "metric", "bucket_ts"]
+        rows = rows.sort_by(
+            [(c, "ascending") for c in ("host", "bucket_ts", "lang")], null_placement="at_start"
+        )
+        return local_frame(spark, rows.slice(offset, limit))
 
-    out = out.orderBy(*order)
+    hs = local_frame(spark, rows).groupBy("host", "bucket_ts").agg(
+        F.sum("doc_count").alias("doc_count"), F.sum("bytes_sum").alias("bytes_sum")
+    )
+    filled = gf.gapfill(hs, tier)
+    value = F.col("value_locf") if fill == "locf" else F.col("value_linear")
+    out = filled.select("host", "bucket_ts", "metric", value.alias("value"), "is_filled")
+    out = out.orderBy("host", "metric", "bucket_ts")
     if offset:
         out = out.offset(offset)
     if limit is not None:
@@ -121,7 +216,7 @@ def read_plot(
     """Downsample-on-read for dashboards: pick the finest tier that keeps
     the per-series point count near the renderer's budget (~``points_per_px``
     raw points per pixel so the downsampler has material), serve it with
-    manifest pruning (read_rollup), collapse langs to the host series, then
+    manifest pruning (``_tier_scan``), collapse langs to the host series, then
     reduce to ~``n_px`` points per host — ``method='m4'`` (pixel-exact row
     set, ≤4 rows/px) or ``'lttb'`` (perceptual, exactly n_px). Output:
     (host, ts_sec, value[, bucket_ts_sec for m4]).
@@ -141,7 +236,7 @@ def read_plot(
         raise ValueError(f"unknown method {method!r} (expected 'm4' or 'lttb')")
     cap = max(n_px * points_per_px, n_px)
     tier = pick_tier(t0, t1, max_points=cap)
-    df = read_rollup(spark, out_dir, tier, t0=t0, t1=t1, hosts=hosts)
+    df = _tier_scan(spark, out_dir, tier, t0=t0, t1=t1, hosts=hosts)
     hs = _host_series_sec(df, metric)
     step = TIER_SECONDS[tier]
     if (t1 - t0) // step > cap:
@@ -206,7 +301,7 @@ def read_anomaly(
 
     tier = tier or pick_tier(t0, t1)
     warm = t0 - (warm_buckets if warm_buckets is not None else window_n) * TIER_SECONDS[tier]
-    df = read_rollup(spark, out_dir, tier, t0=warm, t1=t1, hosts=hosts)
+    df = _tier_scan(spark, out_dir, tier, t0=warm, t1=t1, hosts=hosts)
     hs = _host_series_sec(df, metric)
     out = zscore_anomaly(
         hs, keys=("host",), ts_col="ts_sec", value_col="value",
@@ -231,12 +326,9 @@ def read_forecast(
     found by scanning only the last coarse partition; the source season is
     then a pruned t0/t1 read. Output: (host, ts_sec, predicted)."""
     from .operators.anomaly import forecast_seasonal_naive
-    from .tables import SnapshotTable
 
     step = TIER_SECONDS[tier]
-    tbl = SnapshotTable(
-        f"{out_dir}/rollup_{tier}" if tier != "1m" else f"{out_dir}/series_1m"
-    )
+    tbl = _tier_table(out_dir, tier)
     snap = tbl.snapshot(tbl.current_snapshot_id())
     parts = sorted({v for v in snap.partitions.values() if v})
     last = tbl.read(spark, partition_values={parts[-1]} if parts else None)
@@ -246,7 +338,7 @@ def read_forecast(
             f"read_forecast: {tbl.path} holds no rows (fully expired or "
             "empty publish) — nothing to anchor a forecast on"
         )
-    df = read_rollup(
+    df = _tier_scan(
         spark, out_dir, tier,
         t0=anchor - (season_n - 1) * step, t1=anchor + 1, hosts=hosts,
     )
@@ -279,7 +371,7 @@ def read_corr(
     from .operators.stats import series_corr
 
     tier = tier or pick_tier(t0, t1)
-    df = read_rollup(spark, out_dir, tier, t0=t0, t1=t1, hosts=hosts)
+    df = _tier_scan(spark, out_dir, tier, t0=t0, t1=t1, hosts=hosts)
     hs = df.groupBy("host", "bucket_ts").agg(
         F.sum(x_metric).alias("_x"), F.sum(y_metric).alias("_y")
     )
@@ -307,29 +399,24 @@ def read_gapfill(
     fill anchors on observations WITHIN the requested range only — buckets
     between t0 and a host's first in-range observation exist here but not
     there, and linear edge anchors differ. Serve stored fills for
-    dashboard reads; use the on-demand form for range-local analysis."""
-    from .tiers import partition_bounds
+    dashboard reads; use the on-demand form for range-local analysis.
+
+    Runs on the driver, like ``read_rollup``: the stored rows are the
+    answer, so the pruned files are read with pyarrow and returned as a
+    LocalRelation."""
+    from .tables import local_frame
 
     if fill not in ("locf", "linear"):
         raise ValueError(f"unknown fill {fill!r} (expected 'locf' or 'linear')")
-    tbl = SnapshotTable(f"{out_dir}/gapfill_{tier}")
-    p_lo, p_hi = partition_bounds(tier, t0, t1)
-    df = tbl.read(
-        spark,
-        partition_min=p_lo,
-        partition_max=p_hi,
-        stats_filters=_serving_stats_filters(t0, t1, hosts),
-    ).drop("pkey")
-    if t0 is not None:
-        df = df.filter(F.col("bucket_ts").cast("long") >= t0)
-    if t1 is not None:
-        df = df.filter(F.col("bucket_ts").cast("long") < t1)
-    if hosts:
-        df = df.filter(F.col("host").isin(hosts))
-    if metric:
-        df = df.filter(F.col("metric") == metric)
-    value = F.col("value_locf") if fill == "locf" else F.col("value_linear")
-    return df.select("host", "bucket_ts", "metric", value.alias("value"), "is_filled")
+    value = "value_locf" if fill == "locf" else "value_linear"
+    rows = _arrow_rows(
+        SnapshotTable(f"{out_dir}/gapfill_{tier}"), tier, t0, t1, hosts,
+        columns=["host", "bucket_ts", "metric", value, "is_filled"],
+        metric=[metric] if metric else None,
+    )
+    return local_frame(
+        spark, rows.rename_columns(["host", "bucket_ts", "metric", "value", "is_filled"])
+    )
 
 
 def read_range_total(
@@ -346,29 +433,15 @@ def read_range_total(
     partition pruning, so a year-long query scans ~12 30d rows per key plus
     edge files — not 525k 1m rows. Exact by the cascade invariant (every
     tier is an exact aggregate of the finer one)."""
-    from functools import reduce
+    from .tiers import decompose_range
 
-    from .tiers import decompose_range, partition_bounds
-
-    pieces = []
-    for tier, a, b in decompose_range(t0, t1):
-        name = "series_1m" if tier == "1m" else f"rollup_{tier}"
-        tbl = SnapshotTable(f"{out_dir}/{name}")
-        p_lo, p_hi = partition_bounds(tier, a, b)
-        df = tbl.read(
-            spark,
-            partition_min=p_lo,
-            partition_max=p_hi,
-            stats_filters=_serving_stats_filters(a, b, hosts),
-        ).drop("pkey", "day")
-        sec = F.col("bucket_ts").cast("long")
-        df = df.filter((sec >= a) & (sec < b))
-        if hosts:
-            df = df.filter(F.col("host").isin(hosts))
-        pieces.append(df.select("host", "doc_count", "bytes_sum"))
+    pieces = [
+        _tier_scan(spark, out_dir, tier, a, b, hosts).select("host", "doc_count", "bytes_sum")
+        for tier, a, b in decompose_range(t0, t1)
+    ]
     if not pieces:
         raise ValueError("empty range")
-    u = reduce(lambda x, y: x.unionByName(y), pieces)
+    u = functools.reduce(lambda x, y: x.unionByName(y), pieces)
     return u.groupBy("host").agg(
         F.sum("doc_count").alias("doc_count"),
         F.sum("bytes_sum").alias("bytes_sum"),
@@ -398,7 +471,7 @@ def read_realtime(
 
     from . import series as series_mod
     from .series import TIER_SECONDS
-    from .tiers import partition_bounds
+    from .tiers import partition_bounds, time_window
     from .tiers import rollup as tier_rollup
 
     s_tbl = SnapshotTable(f"{out_dir}/series_1m")
@@ -412,7 +485,7 @@ def read_realtime(
     step = TIER_SECONDS[tier]
     wm_floor = wm - (wm % step)
 
-    fresh = pages.filter(F.col("warc_ts").cast("long") >= wm)
+    fresh = time_window(pages, wm, None, col="warc_ts")
     tail_1m = series_mod.series_1m(fresh)
 
     host_sf = _serving_stats_filters(None, None, hosts)
@@ -428,13 +501,13 @@ def read_realtime(
             partition_max=p_hi,
             stats_filters=_serving_stats_filters(None, wm_floor, hosts),
         ).drop("pkey")
-        mat = mat.filter(F.col("bucket_ts").cast("long") < wm_floor)
+        mat = time_window(mat, None, wm_floor)
         # straddling bucket: materialized 1m rows in [wm_floor, wm) + tail
         e_lo, e_hi = partition_bounds("1m", wm_floor, wm)
         edge_1m = s_tbl.read(
             spark, partition_min=e_lo, partition_max=e_hi, stats_filters=host_sf
         ).drop("pkey", "day")
-        edge_1m = edge_1m.filter(F.col("bucket_ts").cast("long") >= wm_floor)
+        edge_1m = time_window(edge_1m, wm_floor, None)
         out = mat.unionByName(tier_rollup(edge_1m.unionByName(tail_1m), tier))
     if hosts:
         out = out.filter(F.col("host").isin(hosts))
@@ -534,14 +607,17 @@ def read_chunks(
     The compressed read path a 100 TB serving tier uses instead of the
     uncompressed rollup tables.
 
-    Decode runs on the DRIVER: the pruned compressed rows are collected
-    once as Arrow (about 9 B per point, against at least 30 B per decoded
-    point that the caller collects anyway) and decoded in one vectorized
-    pass (``codecs._decode_table``); the answer is a LocalRelation. A Python
-    task costs ~250 ms of worker CPU before any decode code runs, more than
-    the whole decode of a pruned serving read. Whole-table decodes keep
-    ``codecs.decode_chunks``, which runs the same kernel on the executors."""
+    Runs on the DRIVER, with no Spark job: levels 1 and 2 prune inside
+    ``SnapshotTable.read_arrow`` (the chunk-row predicates are pushed into
+    the Arrow scan), the pruned compressed rows (about 9 B per point,
+    against at least 30 B per decoded point that the caller collects
+    anyway) are decoded in one vectorized pass (``codecs._decode_table``),
+    and the answer is a LocalRelation. A Python task costs ~250 ms of
+    worker CPU before any decode code runs, more than the whole decode of a
+    pruned serving read. Whole-table decodes keep ``codecs.decode_chunks``,
+    which runs the same kernel on the executors."""
     import pyarrow as pa
+    import pyarrow.dataset as ds
 
     from . import codecs
     from .series import TIER_SECONDS
@@ -585,26 +661,30 @@ def read_chunks(
     # commit) refine the bucket-key pruning: a probed host bucket holds many
     # hosts, but a file whose host range misses every requested host — or
     # whose chunk extents miss [t0, t1) — never reaches the scan.
+    # The same bounds, exact, are the chunk-row predicates of level 2.
     sf: dict = {}
+    conds = []
     if hosts:
         sf["host"] = set(hosts)
+        conds.append(ds.field("host").isin(hosts))
     if t1 is not None:
         sf["chunk_start"] = (None, t1 - 1)
-    if t0 is not None:
-        sf["last_ts"] = (t0, None)
-    df = tbl.read(spark, partition_filter=pred, stats_filters=sf or None)
-    if hosts:
-        df = df.filter(F.col("host").isin(hosts))
-    _ = TIER_SECONDS[tier]  # validates the tier name
-    if t1 is not None:
-        df = df.filter(F.col("chunk_start").cast("long") < t1)
+        conds.append(ds.field("chunk_start") < _utc(t1))
     if t0 is not None:
         # Prune on the chunk's RECORDED last point (last_ts, written at encode
         # time). The host series is not gap-filled, so estimating the extent as
         # chunk_start + n_points*step under-counts any chunk with gaps and
         # would silently drop chunks that still hold points >= t0.
-        df = df.filter(F.col("last_ts") >= t0)
-    out = codecs._decode_table(df.select(*codecs.DECODE_INPUT_COLS).toArrow())
+        sf["last_ts"] = (t0, None)
+        conds.append(ds.field("last_ts") >= t0)
+    _ = TIER_SECONDS[tier]  # validates the tier name
+    chunks = tbl.read_arrow(
+        columns=list(codecs.DECODE_INPUT_COLS),
+        row_filter=_all_of(conds),
+        partition_filter=pred,
+        stats_filters=sf or None,
+    )
+    out = codecs._decode_table(chunks)
     sec = out["bucket_ts"].cast(pa.int64()).to_numpy() // 1_000_000
     keep = np.ones(len(sec), dtype=bool)
     if t0 is not None:

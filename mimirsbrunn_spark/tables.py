@@ -605,6 +605,107 @@ class SnapshotTable:
                 continue
         return True
 
+    def _pruned_files(
+        self,
+        snap: Snapshot,
+        partition_min: str | None = None,
+        partition_max: str | None = None,
+        partition_values: set[str] | None = None,
+        partition_filter=None,
+        stats_filters: dict | None = None,
+    ) -> list[str]:
+        """The files of ``snap`` that manifest pruning keeps (see
+        ``read_at``): the one pruning step shared by ``read_at`` and
+        ``read_arrow``."""
+        files = snap.files
+        if (
+            partition_min is not None
+            or partition_max is not None
+            or partition_values is not None
+            or partition_filter is not None
+        ):
+            def ok(f):
+                v = snap.partitions.get(f, "")
+                if v == "":
+                    return True
+                if partition_values is not None and v not in partition_values:
+                    return False
+                if partition_filter is not None and not partition_filter(v):
+                    return False
+                return (partition_min is None or v >= partition_min) and (
+                    partition_max is None or v <= partition_max
+                )
+
+            files = [f for f in files if ok(f)]
+        if stats_filters:
+            files = [
+                f
+                for f in files
+                if self._stats_pass(snap.file_stats.get(f, {}), stats_filters)
+            ]
+        return files
+
+    def read_arrow(
+        self,
+        columns: list[str] | None = None,
+        row_filter=None,
+        partition_min: str | None = None,
+        partition_max: str | None = None,
+        partition_values: set[str] | None = None,
+        partition_filter=None,
+        stats_filters: dict | None = None,
+    ):
+        """Read the current snapshot into driver memory as a pyarrow Table:
+        the serving path for reads whose answer bounds their input. Files are
+        pruned exactly as ``read_at`` prunes them, then scanned by pyarrow
+        (no Spark job); ``row_filter`` (a ``pyarrow.dataset`` expression) is
+        applied inside the scan, with row-group statistics, so only matching
+        rows are materialized. Columns carry the Arrow form of the
+        manifest's ``schema_json``, all nullable as in a Spark parquet scan;
+        manifests older than the field take the first file's footer schema,
+        with every timestamp read as a UTC instant, as Spark reads it."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+        import pyarrow.fs as pafs
+
+        sid = self.current_snapshot_id()
+        if sid is None:
+            raise FileNotFoundError(f"table {self.path} has no snapshot")
+        snap = self.snapshot(sid)
+        files = self._pruned_files(
+            snap, partition_min, partition_max, partition_values,
+            partition_filter, stats_filters,
+        )
+        if snap.schema_json is not None:
+            from pyspark.sql.pandas.types import to_arrow_schema
+            from pyspark.sql.types import StructType
+
+            types = [
+                (f.name, f.type)
+                for f in to_arrow_schema(StructType.fromJson(json.loads(snap.schema_json)))
+            ]
+        elif snap.files:
+            import pyarrow.parquet as pq
+
+            types = [
+                (f.name, pa.timestamp("us", tz="UTC") if pa.types.is_timestamp(f.type) else f.type)
+                for f in pq.read_schema(snap.files[0])
+            ]
+        else:
+            raise FileNotFoundError(
+                f"snapshot {sid} of {self.path} is empty and has no recorded schema"
+            )
+        schema = pa.schema([pa.field(name, t, nullable=True) for name, t in types])
+        fmt = ds.ParquetFileFormat(
+            read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+        )
+        dataset = ds.FileSystemDataset.from_paths(
+            files, schema=schema, format=fmt, filesystem=pafs.LocalFileSystem()
+        )
+        # on the calling thread: a serving read touches a few small files,
+        # and its CPU then lands on the thread that asked for it
+        return dataset.to_table(columns=columns, filter=row_filter, use_threads=False)
+
     def read_at(
         self,
         spark: SparkSession,
@@ -633,32 +734,10 @@ class SnapshotTable:
         time-partitioned tier table when files are host-clustered. Files
         without recorded stats always pass."""
         snap = self.snapshot(snapshot_id)
-        files = snap.files
-        if (
-            partition_min is not None
-            or partition_max is not None
-            or partition_values is not None
-            or partition_filter is not None
-        ):
-            def ok(f):
-                v = snap.partitions.get(f, "")
-                if v == "":
-                    return True
-                if partition_values is not None and v not in partition_values:
-                    return False
-                if partition_filter is not None and not partition_filter(v):
-                    return False
-                return (partition_min is None or v >= partition_min) and (
-                    partition_max is None or v <= partition_max
-                )
-
-            files = [f for f in files if ok(f)]
-        if stats_filters:
-            files = [
-                f
-                for f in files
-                if self._stats_pass(snap.file_stats.get(f, {}), stats_filters)
-            ]
+        files = self._pruned_files(
+            snap, partition_min, partition_max, partition_values,
+            partition_filter, stats_filters,
+        )
         # The manifest's schema pins the scan: no footer is read to infer it
         # (inference is one Spark job per read). Only manifests older than
         # schema_json still infer.
@@ -714,18 +793,21 @@ LINEAGE_SCHEMA = (
 METRICS_SCHEMA = "job_id string, stage string, key string, value double, ts timestamp"
 
 
-def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+def local_frame(spark: SparkSession, rows, schema=None) -> DataFrame:
     """Local ``rows`` (tuples in ``schema`` order, or a pyarrow Table
     holding ``schema``'s columns; schema a StructType or DDL string) as a
     DataFrame built through Arrow: a LocalRelation, so neither a Python RDD
     nor a Python worker pool is involved — the list path of
     ``createDataFrame`` starts both, and its pandas path silently falls back
     to the list path when Arrow is off or the frame is empty. Timestamps are
-    UTC instants (naive datetimes are read as UTC)."""
+    UTC instants (naive datetimes are read as UTC). A pyarrow Table may
+    omit ``schema``: its own Arrow schema is then the DataFrame's."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
     from pyspark.sql.types import StructType
 
+    if schema is None:
+        schema = from_arrow_schema(rows.schema)
     struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
     arrow = to_arrow_schema(struct)
     if isinstance(rows, pa.Table):

@@ -70,6 +70,18 @@ def partition_bounds(tier: str, t0: int | None, t1: int | None) -> tuple[str | N
     return lo, hi
 
 
+def time_window(df: DataFrame, t0: int | None, t1: int | None, col: str = "bucket_ts") -> DataFrame:
+    """Rows of ``df`` with t0 <= ``col`` < t1 in epoch seconds (either end
+    None = open). Compared as timestamps, so the scan pushes both bounds to
+    parquet; for integer bounds this equals comparing the floored
+    ``cast("long")``, which parquet cannot take."""
+    if t0 is not None:
+        df = df.filter(F.col(col) >= F.timestamp_seconds(F.lit(t0)))
+    if t1 is not None:
+        df = df.filter(F.col(col) < F.timestamp_seconds(F.lit(t1)))
+    return df
+
+
 def dirty_partition_keys(days: list[str], tier: str) -> set[str]:
     """Partition keys (TIER_PARTITION_FMT strings) of the tier's serving
     table dirtied by new 1m data for the given ISO days — the invalidation

@@ -47,3 +47,39 @@ def pages_pdf(pages_path):
 @pytest.fixture(scope="session")
 def pages_df(spark, pages_path):
     return spark.read.parquet(pages_path)
+
+
+@pytest.fixture
+def scanned(monkeypatch):
+    """The file list of every manifest-pruned read, in call order, recorded
+    from ``SnapshotTable._pruned_files`` (the one pruning step of ``read_at``
+    and ``read_arrow``). Reads answered on the driver return a LocalRelation,
+    which has no ``inputFiles()`` to assert pruning on."""
+    from mimirsbrunn_spark.tables import SnapshotTable
+
+    calls = []
+    pruned = SnapshotTable._pruned_files
+
+    def spy(self, *args, **kwargs):
+        calls.append(pruned(self, *args, **kwargs))
+        return calls[-1]
+
+    monkeypatch.setattr(SnapshotTable, "_pruned_files", spy)
+    return calls
+
+
+@pytest.fixture
+def jobs_of():
+    """``jobs_of(spark, fn, group)`` → (fn(), ids of the Spark jobs it ran),
+    counted through a job group."""
+
+    def run(spark, fn, group):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
+    return run

@@ -329,13 +329,14 @@ def test_read_chunks_equals_rollup(spark, small_pages_path, tmp_path):
     assert got.exceptAll(want).count() == 0
 
 
-def test_serving_tables_partitioned_and_pruned(spark, small_pages_path, tmp_path, monkeypatch):
+def test_serving_tables_partitioned_and_pruned(spark, small_pages_path, tmp_path, scanned):
     """Published rollup/gapfill/chunks tables are partitioned, and the
     serving read path prunes at the MANIFEST level: a narrow t0/t1 (or host)
     query's scan touches ONLY files whose partition key can match (VERDICT r2
-    item 1 — the read path must never scan every file). ``read_chunks``
-    decodes on the driver, so its plan holds no Python node and the files
-    it touched are those of the compressed read it scans."""
+    item 1 — the read path must never scan every file). ``read_rollup`` and
+    ``read_chunks`` read on the driver, so the files they touched are those
+    their pruning step handed to the scan, and ``read_chunks``' plan holds
+    no Python node."""
     from pyspark.sql import functions as F
 
     from mimirsbrunn_spark import tiers
@@ -344,13 +345,6 @@ def test_serving_tables_partitioned_and_pruned(spark, small_pages_path, tmp_path
 
     out = str(tmp_path / "out_prune")
     run_rollup_job(spark, small_pages_path, out)
-
-    def local(files):
-        # inputFiles() returns URIs (percent-encoded; the manifest stores
-        # raw paths)
-        from urllib.parse import unquote
-
-        return [unquote(f[7:] if f.startswith("file://") else f) for f in files]
 
     # -- rollup_1h: partitioned by ISO day of bucket_ts --------------------
     tbl = SnapshotTable(f"{out}/rollup_1h")
@@ -362,8 +356,9 @@ def test_serving_tables_partitioned_and_pruned(spark, small_pages_path, tmp_path
 
     d = dt.datetime.fromisoformat(one_day).replace(tzinfo=dt.timezone.utc)
     t0, t1 = int(d.timestamp()), int(d.timestamp()) + 86400
+    scanned.clear()
     got = read_rollup(spark, out, "1h", t0=t0, t1=t1)
-    touched = local(got.inputFiles())
+    (touched,) = scanned
     assert touched and all(snap.partitions[f] == one_day for f in touched)
     assert len(touched) < len(snap.files)
     # pruned read == unpruned read with the same row filters
@@ -388,22 +383,13 @@ def test_serving_tables_partitioned_and_pruned(spark, small_pages_path, tmp_path
     assert csnap.meta.get("host_buckets") and csnap.meta.get("month_split")
     hs = tiers.host_series(tbl.read(spark))
     host = hs.select("host").distinct().orderBy("host").first().host
-    scans = []
-    table_read = SnapshotTable.read
-
-    def spy(self, *args, **kwargs):
-        scans.append(table_read(self, *args, **kwargs))
-        return scans[-1]
-
-    monkeypatch.setattr(SnapshotTable, "read", spy)
+    scanned.clear()
     got_c = read_chunks(spark, out, "1h", hosts=[host])
-    monkeypatch.undo()
     from mimirsbrunn_spark.codecs import chunk_host_bucket
     from mimirsbrunn_spark.plans import plan_str
 
     hb = chunk_host_bucket(host, int(csnap.meta["host_buckets"]))
-    (scan,) = scans
-    touched_c = local(scan.inputFiles())
+    (touched_c,) = scanned
     assert touched_c and all(
         csnap.partitions[f].split("|")[0] == hb for f in touched_c
     )
@@ -568,7 +554,7 @@ def test_incremental_derived_refresh_equals_full_rebuild(spark, small_pages_path
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, name
 
 
-def test_read_gapfill_pruned_equals_on_demand(spark, small_pages_path, tmp_path):
+def test_read_gapfill_pruned_equals_on_demand(spark, small_pages_path, tmp_path, scanned):
     """The stored gap-fill serving path: manifest-pruned, and equal to the
     on-demand fill over the same range/host. Caveat pinned here: a narrow
     t0/t1 read of the STORED fill returns exactly the stored rows in range
@@ -592,13 +578,13 @@ def test_read_gapfill_pruned_equals_on_demand(spark, small_pages_path, tmp_path)
     d = dt.datetime.fromisoformat(day).replace(tzinfo=dt.timezone.utc)
     t0, t1 = int(d.timestamp()), int(d.timestamp()) + 86400
 
+    scanned.clear()
     got = read_gapfill(spark, out, "1h", t0=t0, t1=t1, metric="doc_count", fill="locf")
-    # manifest pruning: only the day's files are touched
+    # manifest pruning: only the day's files are touched (``read_gapfill``
+    # reads on the driver: the files its pruning step handed to the scan)
+    (touched,) = scanned
     gf_tbl = SnapshotTable(f"{out}/gapfill_1h")
     gf_snap = gf_tbl.snapshot(gf_tbl.current_snapshot_id())
-    from urllib.parse import unquote
-
-    touched = [unquote(f[7:] if f.startswith("file://") else f) for f in got.inputFiles()]
     assert touched and all(gf_snap.partitions[f] == day for f in touched)
     assert len(touched) < len(gf_snap.files)
 
@@ -615,3 +601,25 @@ def test_read_gapfill_pruned_equals_on_demand(spark, small_pages_path, tmp_path)
     )
     assert got.count() == want.count() > 0
     assert got.exceptAll(want).count() == 0
+
+
+def test_first_publish_runs_no_coverage_agg(spark, small_pages_path, tmp_path, monkeypatch):
+    """A first publish into an empty output dir runs no ``min(bucket_ts)``
+    coverage aggregation between cascade tiers: the next tier reads that
+    bound only when its table already exists, and on a first publish it
+    never does."""
+    from mimirsbrunn_spark.jobs.rollup_job import run_rollup_job
+
+    DataFrame = type(spark.range(1))  # the session's concrete DataFrame class
+    calls = []
+    first = DataFrame.first
+
+    def spy(self):
+        calls.append(self)
+        return first(self)
+
+    monkeypatch.setattr(DataFrame, "first", spy)
+    run_rollup_job(spark, small_pages_path, str(tmp_path / "cold"))
+    monkeypatch.undo()
+    assert calls == []
+    assert SnapshotTable(str(tmp_path / "cold" / "rollup_30d")).row_count() > 0

@@ -167,17 +167,6 @@ def test_append_inherits_declared_layout(spark, tmp_path):
 # -- the read path: scans pinned to the manifest schema ----------------------
 
 
-def _jobs_of(spark, fn, group):
-    """(fn(), ids of the Spark jobs it ran), counted through a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, sc.statusTracker().getJobIdsForGroup(group)
-
-
 def _served_table(spark, tmp_path):
     import datetime as dt
 
@@ -191,7 +180,7 @@ def _served_table(spark, tmp_path):
     return tbl
 
 
-def test_read_runs_no_job_and_equals_inferred_read(spark, tmp_path):
+def test_read_runs_no_job_and_equals_inferred_read(spark, tmp_path, jobs_of):
     """A read takes its schema from the manifest: planning it runs no Spark
     job (schema inference reads a footer in one), and it answers with the
     same schema and rows as the inferred read of the same files."""
@@ -199,7 +188,7 @@ def test_read_runs_no_job_and_equals_inferred_read(spark, tmp_path):
     for i, kw in enumerate(
         ({}, {"partition_values": {"2024-01-02"}}, {"stats_filters": {"host": {"host-1"}}})
     ):
-        _, jobs = _jobs_of(spark, lambda: tbl.read(spark, **kw), f"pinned-read-{i}")
+        _, jobs = jobs_of(spark, lambda: tbl.read(spark, **kw), f"pinned-read-{i}")
         assert jobs == [], kw
     got = tbl.read(spark)
     inferred = spark.read.parquet(*tbl.snapshot(tbl.current_snapshot_id()).files)
@@ -229,14 +218,67 @@ def test_read_without_schema_json_infers(spark, tmp_path):
     assert empty.schema == want_schema and empty.count() == 0
 
 
-def test_read_pruned_to_nothing_is_typed_empty(spark, tmp_path):
+def test_read_pruned_to_nothing_is_typed_empty(spark, tmp_path, jobs_of):
     """A read that prunes every file is a typed empty LocalRelation built
     from the manifest schema — no scan is planned over the table's files."""
     tbl = _served_table(spark, tmp_path)
-    got, jobs = _jobs_of(
+    got, jobs = jobs_of(
         spark, lambda: tbl.read(spark, stats_filters={"host": {"no-such-host"}}), "pruned-empty"
     )
     assert jobs == []
     assert got._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation"
     assert got.schema == tbl.read(spark).schema
     assert got.count() == 0
+
+
+def test_read_arrow_prunes_like_read_and_reads_without_schema_json(spark, tmp_path, jobs_of):
+    """``read_arrow`` reads the files that ``read`` would scan, on the driver
+    with no Spark job: the same rows, typed by the manifest schema, with the
+    row filter applied inside the scan. A manifest older than
+    ``schema_json`` still reads, in full and pruned to nothing."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    tbl = _served_table(spark, tmp_path)
+
+    def rows(t):
+        return sorted(zip(*(t[c].to_pylist() for c in ("pkey", "host", "ts", "v"))))
+
+    def spark_rows(df):
+        return sorted(map(tuple, df.select("pkey", "host", "ts", "v").collect()))
+
+    full, jobs = jobs_of(spark, tbl.read_arrow, "arrow-read")
+    assert jobs == []
+    want_types = [pa.string(), pa.string(), pa.timestamp("us", tz="UTC"), pa.int64()]
+    assert full.schema.types == want_types
+    assert [_utc_naive(r) for r in rows(full)] == spark_rows(tbl.read(spark))
+    pruned = tbl.read_arrow(
+        columns=["pkey", "host", "ts", "v"],
+        row_filter=ds.field("v") >= 30,
+        partition_values={"2024-01-02"},
+        stats_filters={"host": {"host-1", "host-2"}},
+    )
+    want = tbl.read(
+        spark, partition_values={"2024-01-02"}, stats_filters={"host": {"host-1", "host-2"}}
+    ).filter("v >= 30")
+    assert [_utc_naive(r) for r in rows(pruned)] == spark_rows(want) != []
+
+    path = tbl._manifest_path(tbl.current_snapshot_id())
+    with open(path) as f:
+        m = json.load(f)
+    del m["schema_json"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    assert tbl.snapshot(tbl.current_snapshot_id()).schema_json is None
+    legacy = tbl.read_arrow()
+    assert legacy.schema.types == want_types and rows(legacy) == rows(full)
+    empty = tbl.read_arrow(partition_values={"1999-01-01"})
+    assert empty.num_rows == 0 and empty.schema.types == want_types
+
+
+def _utc_naive(row):
+    """A pyarrow row's UTC timestamp as the naive datetime Spark collects
+    under the engine's UTC session."""
+    return tuple(v.replace(tzinfo=None) if hasattr(v, "tzinfo") else v for v in row)

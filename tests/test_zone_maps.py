@@ -155,24 +155,27 @@ def served(spark, small_pages_path, tmp_path_factory):
     return out
 
 
-def test_read_rollup_host_scoped_skips_files(spark, served):
+def test_read_rollup_host_scoped_skips_files(spark, served, scanned):
     """End-to-end: rollup_job publishes host-clustered files with zone maps;
     a host-scoped read touches strictly fewer files and returns exactly the
-    full read filtered to that host."""
+    full read filtered to that host. ``read_rollup`` reads on the driver, so
+    the touched files are those its pruning step handed to the scan."""
     full = read_rollup(spark, served, "1h")
     host = full.select("host").first().host
     scoped = read_rollup(spark, served, "1h", hosts=[host])
-    assert 0 < len(scoped.inputFiles()) < len(full.inputFiles())
+    full_files, scoped_files = scanned
+    assert 0 < len(scoped_files) < len(full_files)
     got = sorted(map(tuple, scoped.collect()))
     exp = sorted(map(tuple, full.filter(F.col("host") == host).collect()))
     assert got == exp
 
 
-def test_read_gapfill_host_scoped_skips_files(spark, served):
+def test_read_gapfill_host_scoped_skips_files(spark, served, scanned):
     full = read_gapfill(spark, served, "1h")
     host = full.select("host").first().host
     scoped = read_gapfill(spark, served, "1h", hosts=[host])
-    assert 0 < len(scoped.inputFiles()) < len(full.inputFiles())
+    full_files, scoped_files = scanned
+    assert 0 < len(scoped_files) < len(full_files)
     assert scoped.count() == full.filter(F.col("host") == host).count()
 
 
@@ -186,18 +189,107 @@ def test_read_chunks_host_scoped_results_exact(spark, served):
 
 
 def test_read_rollup_pinned_scan_keeps_pushdown_and_pruning(spark, served):
-    """The scan under ``read_rollup`` reads with the manifest's schema and
-    still gets the optimizer's work: the host and bucket_ts predicates are
-    pushed to parquet, and the dropped partition-key column is pruned from
-    the read schema."""
+    """The Spark tier scan (``query_api._tier_scan``, under the reads that
+    reduce a tier) reads with the manifest's schema and still gets the
+    optimizer's work: the host and both bucket_ts bounds are pushed to
+    parquet, and the dropped partition-key column is pruned from the read
+    schema."""
     from mimirsbrunn_spark import plans
+    from mimirsbrunn_spark.query_api import _tier_scan
 
     host = read_rollup(spark, served, "1h").select("host").first().host
     t0 = int(dt.datetime(2024, 1, 2, tzinfo=dt.timezone.utc).timestamp())
-    df = read_rollup(spark, served, "1h", t0=t0, t1=t0 + 6 * 3600, hosts=[host])
+    df = _tier_scan(spark, served, "1h", t0=t0, t1=t0 + 6 * 3600, hosts=[host])
     (pushed,) = plans.pushed_filters(df)
     assert f"In(host, [{host}])" in pushed or f"EqualTo(host,{host})" in pushed
     assert "IsNotNull(bucket_ts)" in pushed
+    assert "GreaterThanOrEqual(bucket_ts,2024-01-02 00:00:00.0)" in pushed
+    assert "LessThan(bucket_ts,2024-01-02 06:00:00.0)" in pushed
     (schema,) = plans.scan_read_schemas(df)
     assert "bucket_ts:timestamp" in schema and "host:string" in schema
     assert "pkey" not in schema
+
+
+@pytest.mark.parametrize("fn", [read_rollup, read_gapfill, read_chunks])
+def test_stored_row_reads_run_no_job_until_forced(spark, served, fn, jobs_of):
+    """A read whose answer is its stored rows runs on the driver: the call
+    runs no Spark job, its plan is a bare LocalTableScan, and forcing it
+    into pandas runs exactly one job."""
+    from mimirsbrunn_spark import plans
+
+    t0 = int(dt.datetime(2024, 1, 2, tzinfo=dt.timezone.utc).timestamp())
+    host = read_rollup(spark, served, "1h").select("host").first().host
+    df, jobs = jobs_of(
+        spark, lambda: fn(spark, served, "1h", t0=t0, t1=t0 + 12 * 3600, hosts=[host]),
+        f"call-{fn.__name__}",
+    )
+    assert jobs == []
+    plan = plans.plan_str(df, "simple")
+    assert "LocalTableScan" in plan
+    assert not any(n in plan for n in ("FileScan", "Exchange", "Filter", "Sort", "Project"))
+    pdf, jobs = jobs_of(spark, df.toPandas, f"force-{fn.__name__}")
+    assert len(jobs) == 1 and len(pdf) > 0
+
+
+def test_read_rollup_equals_spark_tier_scan_in_order(spark, served, tmp_path):
+    """``read_rollup`` (driver read, Arrow sort and slice) equals the Spark
+    tier scan sorted by ``orderBy(host, bucket_ts, lang)``, row for row and
+    in order, over several windows: a NULL host and a NULL lang sort first,
+    ``offset``/``limit`` page the same rows, ``langs`` filters, and a window
+    pruned to nothing returns the typed empty schema."""
+    from mimirsbrunn_spark import tiers
+    from mimirsbrunn_spark.jobs.rollup_job import SERVING_CLUSTER, SERVING_STATS
+    from mimirsbrunn_spark.query_api import _tier_scan
+
+    src = SnapshotTable(f"{served}/rollup_1h").read(spark)
+    t_day = int(dt.datetime(2024, 1, 2, tzinfo=dt.timezone.utc).timestamp())
+    row = tiers.time_window(src, t_day, t_day + 86400).orderBy("host", "bucket_ts").first()
+    extra = spark.createDataFrame(
+        [
+            row.asDict() | {"host": None},
+            row.asDict() | {"lang": None},
+        ],
+        src.schema,
+    )
+    out = str(tmp_path / "nulls")
+    SnapshotTable(f"{out}/rollup_1h").commit(
+        src.unionByName(extra), mode="replace", partition_by="pkey",
+        stats_cols=SERVING_STATS, cluster_by=SERVING_CLUSTER, cluster_files=4,
+    )
+    hosts = sorted(r.host for r in src.select("host").distinct().collect())[:3]
+    lang = src.filter(F.col("host").isin(hosts)).select("lang").first().lang
+
+    def spark_path(t0=None, t1=None, hosts=None, langs=None, offset=0, limit=None):
+        df = _tier_scan(spark, out, "1h", t0=t0, t1=t1, hosts=hosts)
+        if langs:
+            df = df.filter(F.col("lang").isin(langs))
+        df = df.withColumn("avg_page_size", F.col("bytes_sum") / F.col("doc_count"))
+        df = df.orderBy("host", "bucket_ts", "lang")
+        if offset:
+            df = df.offset(offset)
+        return df if limit is None else df.limit(limit)
+
+    cases = [
+        {},
+        {"t0": t_day, "t1": t_day + 86400},
+        {"t0": t_day + 3 * 3600, "t1": t_day + 9 * 3600, "hosts": hosts},
+        {"t0": t_day, "t1": t_day + 86400, "langs": [lang]},
+        {"offset": 3, "limit": 7},
+        {"t0": t_day, "t1": t_day + 86400, "offset": 2},
+        {"t0": t_day, "t1": t_day + 86400, "limit": 4},
+        {"t0": 0, "t1": 3600},
+    ]
+    for kw in cases:
+        got = read_rollup(spark, out, "1h", **kw)
+        want = spark_path(**kw)
+        assert got.schema == want.schema, kw
+        rows = got.collect()
+        assert rows == want.collect(), kw
+        if kw.get("t0") == 0:
+            assert rows == []
+        else:
+            assert rows, kw
+    day = {"t0": t_day, "t1": t_day + 86400}
+    assert read_rollup(spark, out, "1h", limit=1, **day).first().host is None
+    own = read_rollup(spark, out, "1h", hosts=[row.host], **day).collect()
+    assert own[0].lang is None and own[0].bucket_ts == row.bucket_ts
