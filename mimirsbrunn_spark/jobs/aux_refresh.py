@@ -1,120 +1,144 @@
-"""Incremental (invalidation-based) refresh shared by the auxiliary
-aggregate tier jobs (distinct/topn/histogram) — the TimescaleDB
-continuous-aggregate invalidation pattern the numeric tiers already have
-(tiers.incremental_refresh), applied to the pkey-partitioned aux layout.
+"""Continuous aggregates over the raw pages: one spec, three operations.
 
-A daily run with ``days=[...]`` touches:
-1. finest tier (pkey = day): rebuild exactly the dirty day partitions from
-   the pages of those days (metadata-only drop + append — the idempotent
-   resume primitive rollup_job uses);
-2. each parent tier: the dirty parent PARTITIONS are those holding a
-   bucket that covers a dirty day (a 30d bucket that started in December
-   dirties the PRIOR year's partition when a January day changes — the
-   covering-bucket start, not the day's own year, picks the pkey). Those
-   partitions' buckets are recomputed from the child tier read over just
-   the covering child-partition range (manifest pruning), then swapped in.
+A ``ContinuousAggregate`` is what the distinct/topn/histogram/stats/SLO
+jobs publish (the TimescaleDB continuous-aggregate pattern, applied to
+mergeable states): a list of tiers, a builder of the finest tier from
+raw pages, and a merge of a finer tier's rows into a coarser tier.
 
-At 100 TB a daily refresh reads one day of raw pages plus a bounded slice
-of the (already tiny) child tiers, instead of re-scanning the raw table
-per tier per run. Full-history rebuild remains the bootstrap path.
+Layout. One table per tier, ``{name}_{tier}``, partitioned by the tier's
+coarse time key (``pkey``: day for 1h, month for 1d, year for 30d, see
+``tiers.TIER_PARTITION_FMT``), so reads prune at the manifest level
+exactly like ``read_rollup``. Each full-build snapshot's meta records
+``tier``, ``partition_fmt`` and the family's parameters (``lgk``, ``n``,
+``slack``).
+
+Single raw touch. The finest tier is the ONLY one built from raw pages;
+every coarser tier merges the published child tier's rows (HLL unions,
+top-n candidate lists, integer sums). After the finest build the raw data
+is never read again, by a coarser tier or by a serving read. ``exact``
+marks the families whose merge is an integer sum: a tier then equals the
+merge of its child bit for bit, which ``verify_job`` checks.
+
+Refresh rule. A daily run with ``days=[...]`` rebuilds only the dirty
+partitions of each tier (``tiers.dirty_partition_keys``): the finest tier
+from the pages of those days, each coarser tier by merging the child rows
+of exactly the span its dirty partitions cover (``tiers.source_span``; a
+30d bucket that starts in December dirties the PRIOR year's partition when
+a January day changes). Each tier swaps its dirty partitions in with one
+``replace_partitions`` snapshot, so a reader never sees them empty. At
+100 TB a daily refresh reads one day of raw pages plus a bounded slice of
+the (already tiny) child tiers; the full build is the bootstrap path.
 """
 
 from __future__ import annotations
 
-import datetime as dt
+from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tiers
-from ..series import TIER_SECONDS
 from ..tables import SnapshotTable
 
-_UTC = dt.timezone.utc
+Builder = Callable[[DataFrame, str], DataFrame]
 
 
-def _day_sec(day: str) -> int:
-    return int(dt.datetime.strptime(day, "%Y-%m-%d").replace(tzinfo=_UTC).timestamp())
+@dataclass(frozen=True)
+class ContinuousAggregate:
+    """``finest(pages, tier)`` builds the finest tier from raw pages;
+    ``merge(child, tier)`` builds ``tier`` from the next finer tier's rows.
+    ``meta``: the family's parameters, recorded in every tier's meta."""
 
+    name: str
+    tiers: tuple[str, ...]
+    finest: Builder
+    merge: Builder
+    exact: bool = False
+    meta: dict = field(default_factory=dict)
 
-def dirty_parent_pkeys(days: list[str], tier: str) -> list[str]:
-    """Partition keys of the ``tier`` buckets covering the dirty days —
-    keyed by the COVERING BUCKET's start (an epoch-aligned 30d bucket that
-    began in the prior year claims that year's pkey)."""
-    step = TIER_SECONDS[tier]
-    fmt = tiers.TIER_PARTITION_FMT[tier][1]
-    out = set()
-    for d in days:
-        sec = _day_sec(d)
-        # every bucket overlapping [day, day+24h): first start <= day start
-        start = sec - sec % step
-        while start < sec + 86400:
-            out.add(dt.datetime.fromtimestamp(start, _UTC).strftime(fmt))
-            start += step
-    return sorted(out)
+    def table(self, out_dir: str, tier: str) -> SnapshotTable:
+        return SnapshotTable(f"{out_dir}/{self.name}_{tier}")
 
+    def tier_meta(self, tier: str) -> dict:
+        return {"tier": tier, **self.meta, "partition_fmt": tiers.TIER_PARTITION_FMT[tier][1]}
 
-def _child_range(pkeys: list[str], tier: str, child_tier: str) -> tuple[str, str]:
-    """Child-tier partition-key range covering every bucket in the given
-    parent partitions (the last bucket of a partition may extend one full
-    bucket width past the partition's nominal end — include it)."""
-    step = TIER_SECONDS[tier]
-    fmt_c = tiers.TIER_PARTITION_FMT[child_tier][1]
-    fmt_p = "%Y-%m" if tier == "1d" else "%Y"
-    lo = dt.datetime.strptime(min(pkeys), fmt_p).replace(tzinfo=_UTC)
-    hi = dt.datetime.strptime(max(pkeys), fmt_p).replace(tzinfo=_UTC)
-    # nominal end of the max partition period + one bucket width
-    hi_end = (hi.replace(year=hi.year + 1, month=1) if tier == "30d"
-              else (hi.replace(year=hi.year + 1, month=1) if hi.month == 12
-                    else hi.replace(month=hi.month + 1)))
-    hi_sec = int(hi_end.timestamp()) + step
-    return lo.strftime(fmt_c), dt.datetime.fromtimestamp(hi_sec, _UTC).strftime(fmt_c)
+    def publish(self, spark: SparkSession, pages: DataFrame, out_dir: str) -> dict:
+        """Full build of every tier from ``pages``. Returns {tier: table}."""
+        out: dict[str, SnapshotTable] = {}
+        child: DataFrame | None = None
+        for tier in self.tiers:
+            df = self.finest(pages, tier) if child is None else self.merge(child, tier)
+            tbl = self.table(out_dir, tier)
+            tbl.commit(
+                df.withColumn("pkey", tiers.partition_key_col(tier)),
+                mode="replace",
+                meta=self.tier_meta(tier),
+                partition_by="pkey",
+            )
+            child = tbl.read(spark).drop("pkey")
+            out[tier] = tbl
+        return out
+
+    def refresh(
+        self, spark: SparkSession, pages: DataFrame, out_dir: str, days: list[str]
+    ) -> dict:
+        """Rebuild the partitions dirtied by ``days`` (the module docstring's
+        refresh rule); a layout never published is built in full. Returns
+        {tier: table}."""
+        if not self.table(out_dir, self.tiers[0]).exists():
+            return self.publish(spark, pages, out_dir)
+        refresh_aux_tiers(spark, self, out_dir, days, pages)
+        return {t: self.table(out_dir, t) for t in self.tiers}
+
+    def read(
+        self,
+        spark: SparkSession,
+        out_dir: str,
+        tier: str,
+        t0: int | None = None,
+        t1: int | None = None,
+        hosts: list[str] | None = None,
+    ) -> DataFrame:
+        """Pruned read of one tier: [t0, t1) picks the partition-key range
+        from the manifest, then both bounds and the hosts are applied as row
+        predicates that parquet also receives."""
+        p_lo, p_hi = tiers.partition_bounds(tier, t0, t1)
+        df = (
+            self.table(out_dir, tier)
+            .read(spark, partition_min=p_lo, partition_max=p_hi)
+            .drop("pkey")
+        )
+        df = tiers.time_window(df, t0, t1)
+        if hosts:
+            df = df.filter(F.col("host").isin(hosts))
+        return df
 
 
 def refresh_aux_tiers(
     spark: SparkSession,
+    spec: ContinuousAggregate,
     out_dir: str,
-    prefix: str,
     days: list[str],
-    day_pages: DataFrame,
-    build_finest,
-    build_cascade,
-    tier_list: tuple[str, ...] = ("1h", "1d", "30d"),
-) -> dict:
-    """Incrementally refresh ``{prefix}_{tier}`` tables for ``days``.
-
-    ``day_pages``: the raw pages ALREADY restricted to the dirty days.
-    ``build_finest(day_pages, tier) -> DataFrame``; ``build_cascade(child,
-    tier) -> DataFrame`` (same contracts as the jobs' full-build path).
-    Returns {tier: refreshed partition keys}."""
-    if not days:
-        return {}
-    refreshed: dict = {}
-
-    finest = tier_list[0]
-    tbl = SnapshotTable(f"{out_dir}/{prefix}_{finest}")
-    fresh = build_finest(day_pages, finest).withColumn(
-        "pkey", tiers.partition_key_col(finest)
-    )
-    tbl.drop_partition_values(set(days), meta={"refresh_days": days})
-    tbl.commit(fresh, mode="append", partition_by="pkey", meta={"refresh_days": days})
-    refreshed[finest] = sorted(set(days))
-    child_tbl, child_tier = tbl, finest
-
-    for tier in tier_list[1:]:
-        pkeys = dirty_parent_pkeys(days, tier)
-        c_lo, c_hi = _child_range(pkeys, tier, child_tier)
-        child = child_tbl.read(
-            spark, partition_min=c_lo, partition_max=c_hi
-        ).drop("pkey")
-        parent = (
-            build_cascade(child, tier)
-            .withColumn("pkey", tiers.partition_key_col(tier))
-            .filter(F.col("pkey").isin(pkeys))
+    pages: DataFrame,
+) -> None:
+    """Swap in fresh rows for every partition of ``spec``'s tiers that
+    ``days`` dirty; only the pages of those days are read."""
+    day_pages = pages.filter(F.date_format("warc_ts", "yyyy-MM-dd").isin(days))
+    child_tier = None
+    for tier in spec.tiers:
+        pkeys = sorted(tiers.dirty_partition_keys(days, tier))
+        if child_tier is None:
+            df = spec.finest(day_pages, tier)
+        else:
+            lo, hi = tiers.source_span(tier, set(pkeys))
+            df = spec.merge(spec.read(spark, out_dir, child_tier, lo, hi), tier)
+        spec.table(out_dir, tier).replace_partitions(
+            df.withColumn("pkey", tiers.partition_key_col(tier)).filter(
+                F.col("pkey").isin(pkeys)
+            ),
+            pkeys,
+            meta={**spec.tier_meta(tier), "refresh_days": days},
+            partition_by="pkey",
         )
-        tbl = SnapshotTable(f"{out_dir}/{prefix}_{tier}")
-        tbl.drop_partition_values(set(pkeys), meta={"refresh_days": days})
-        tbl.commit(parent, mode="append", partition_by="pkey", meta={"refresh_days": days})
-        refreshed[tier] = pkeys
-        child_tbl, child_tier = tbl, tier
-    return refreshed
+        child_tier = tier

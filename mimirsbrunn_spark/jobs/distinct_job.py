@@ -1,15 +1,9 @@
 """Published distinct-count continuous aggregates: the HLL sketch cascade of
-operators/distinct.py materialized as serving tables.
-
-Layout mirrors the numeric tiers (rollup_job): one table per tier
-(``distinct_1h/1d/30d``), partitioned by the tier's coarse time key, so
-``read_distinct`` prunes at the manifest level exactly like ``read_rollup``.
-The finest tier is the ONLY one that touches raw pages; every coarser tier
-merges the published child tier's sketch bytes (``hll_union_agg``) — the
-single-raw-touch property that makes distinct counts a true continuous
-aggregate instead of a per-query re-scan. Sketches are stored alongside
-their estimates, so a future finer->coarser refresh (or an ad-hoc "distinct
-over [t0,t1)" union) never needs the raw data either.
+operators/distinct.py materialized as serving tables (``distinct_1h/1d/30d``,
+laid out and refreshed as jobs/aux_refresh.py describes). Coarser tiers
+merge the child tier's sketch bytes (``hll_union_agg``); sketches are
+stored alongside their estimates, so an ad-hoc "distinct over [t0, t1)"
+union of a pruned read never needs the raw data either.
 
 At 100 TB: the 1h build shuffles (host, bucket, url) once; after that each
 tier is ≤ 2^lgk bytes per (host, bucket) regardless of cardinality.
@@ -17,15 +11,23 @@ tier is ≤ 2^lgk bytes per (host, bucket) regardless of cardinality.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
-from .. import tiers
 from ..ingest import read_pages, with_host
 from ..operators.distinct import sketch_cascade, sketch_rollup
-from ..tables import SnapshotTable
+from .aux_refresh import ContinuousAggregate
 
-DISTINCT_TIERS = ["1h", "1d", "30d"]
+
+def spec(lgk: int = 12) -> ContinuousAggregate:
+    """Distinct-url sketches; a read yields (host, bucket_ts, distinct_est,
+    url_sketch), merge further with ``agg(hll_union_agg('url_sketch'))``."""
+    return ContinuousAggregate(
+        "distinct",
+        ("1h", "1d", "30d"),
+        finest=lambda p, t: sketch_rollup(p, t, lgk=lgk),
+        merge=sketch_cascade,
+        meta={"lgk": lgk},
+    )
 
 
 def run_distinct_job(
@@ -33,76 +35,13 @@ def run_distinct_job(
     pages_path: str,
     out_dir: str,
     lgk: int = 12,
-    table_factory=None,
     days: list[str] | None = None,
 ) -> dict:
     """Build + publish the distinct-url sketch tiers. Returns {tier: table}.
 
     ``days``: incremental mode — refresh only the partitions dirtied by
-    those days (jobs/aux_refresh.py) instead of rebuilding every tier from
-    the full raw table; requires an existing SnapshotTable publish."""
-    pages = with_host(read_pages(spark, pages_path))
-    if days and SnapshotTable(f"{out_dir}/distinct_{DISTINCT_TIERS[0]}").exists():
-        from .aux_refresh import refresh_aux_tiers
-
-        dp = pages.filter(
-            F.date_format("warc_ts", "yyyy-MM-dd").isin(days)
-        )
-        refresh_aux_tiers(
-            spark, out_dir, "distinct", days, dp,
-            lambda p, t: sketch_rollup(p, t, lgk=lgk),
-            lambda c, t: sketch_cascade(c, t),
-            tier_list=tuple(DISTINCT_TIERS),
-        )
-        return {t: SnapshotTable(f"{out_dir}/distinct_{t}") for t in DISTINCT_TIERS}
-    tf = table_factory or (lambda name: SnapshotTable(f"{out_dir}/{name}"))
-    out: dict[str, object] = {}
-    prev_read: DataFrame | None = None
-    for tier in DISTINCT_TIERS:
-        df = (
-            sketch_rollup(pages, tier, lgk=lgk)
-            if prev_read is None
-            else sketch_cascade(prev_read, tier)
-        )
-        tbl = tf(f"distinct_{tier}")
-        tbl.commit(
-            df.withColumn("pkey", tiers.partition_key_col(tier)),
-            mode="replace",
-            meta={
-                "tier": tier,
-                "lgk": lgk,
-                "partition_fmt": tiers.TIER_PARTITION_FMT[tier][1],
-            },
-            partition_by="pkey",
-        )
-        prev_read = tbl.read(spark).drop("pkey")
-        out[tier] = tbl
-    return out
-
-
-def read_distinct(
-    spark: SparkSession,
-    out_dir: str,
-    tier: str,
-    t0: int | None = None,
-    t1: int | None = None,
-    hosts: list[str] | None = None,
-) -> DataFrame:
-    """Serve a published distinct tier with manifest pruning (t0/t1 →
-    partition-key range, then exact row predicates). Output: (host,
-    bucket_ts, distinct_est, url_sketch) — the sketch rides along so
-    callers can merge further (e.g. distinct over the whole range:
-    ``df.agg(hll_union_agg('url_sketch'))``)."""
-    p_lo, p_hi = tiers.partition_bounds(tier, t0, t1)
-    df = (
-        SnapshotTable(f"{out_dir}/distinct_{tier}")
-        .read(spark, partition_min=p_lo, partition_max=p_hi)
-        .drop("pkey")
-    )
-    if t0 is not None:
-        df = df.filter(F.col("bucket_ts").cast("long") >= t0)
-    if t1 is not None:
-        df = df.filter(F.col("bucket_ts").cast("long") < t1)
-    if hosts:
-        df = df.filter(F.col("host").isin(hosts))
-    return df
+    those days instead of rebuilding every tier from the full raw table."""
+    s, pages = spec(lgk), with_host(read_pages(spark, pages_path))
+    if days:
+        return s.refresh(spark, pages, out_dir, days)
+    return s.publish(spark, pages, out_dir)

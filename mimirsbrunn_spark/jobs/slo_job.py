@@ -1,7 +1,6 @@
 """Published error-budget stats tiers + burn-rate serving: the SLO read
-path materialized, mirroring histogram_job's shape (one table per tier,
-partitioned by the coarse time key, exact integer-sum cascades,
-aux_refresh-compatible incremental mode).
+path materialized (``slo_1h/1d``, laid out and refreshed as
+jobs/aux_refresh.py describes, exact integer-sum cascade).
 
 The finest tier counts (tot, err) per (host, 1h bucket) from raw pages
 with a caller-supplied boolean predicate; the 1d tier SUMs the 1h rows.
@@ -20,16 +19,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import tiers
 from ..ingest import read_pages, with_host
 from ..operators.slo import multiwindow_burn
 from ..series import bucket_col
-from ..tables import SnapshotTable
-
-SLO_TIERS = ["1h", "1d"]
+from .aux_refresh import ContinuousAggregate
 
 
-def _finest_stats(pages: DataFrame, tier: str, err_predicate_sql: str) -> DataFrame:
+def _finest_stats(pages: DataFrame, tier: str, err_predicate_sql: str = "is_err") -> DataFrame:
+    """(host, bucket_ts, tot, err) counts. The default predicate is the
+    ``is_err`` column into which ``run_slo_job`` evaluates its own."""
     return (
         pages.select(
             "host",
@@ -55,70 +53,25 @@ def _rollup_stats(stats: DataFrame, tier: str) -> DataFrame:
     )
 
 
+# a read yields (host, bucket_ts, tot, err)
+SLO = ContinuousAggregate("slo", ("1h", "1d"), _finest_stats, _rollup_stats, exact=True)
+
+
 def run_slo_job(
     spark: SparkSession,
     pages_path: str,
     out_dir: str,
     err_predicate_sql: str,
-    table_factory=None,
     days: list[str] | None = None,
 ) -> dict:
     """Build + publish slo_1h/slo_1d error-stat tiers. ``days`` = the
     incremental mode (bit-identical to full rebuild: integer sums)."""
-    pages = with_host(read_pages(spark, pages_path))
-
-    def _finest(p, tier):
-        return _finest_stats(p, tier, err_predicate_sql)
-
-    if days and SnapshotTable(f"{out_dir}/slo_{SLO_TIERS[0]}").exists():
-        from .aux_refresh import refresh_aux_tiers
-
-        dp = pages.filter(F.date_format("warc_ts", "yyyy-MM-dd").isin(days))
-        refresh_aux_tiers(
-            spark, out_dir, "slo", days, dp, _finest, _rollup_stats,
-            tier_list=tuple(SLO_TIERS),
-        )
-        return {t: SnapshotTable(f"{out_dir}/slo_{t}") for t in SLO_TIERS}
-    tf = table_factory or (lambda name: SnapshotTable(f"{out_dir}/{name}"))
-    out: dict[str, object] = {}
-    prev_read: DataFrame | None = None
-    for tier in SLO_TIERS:
-        df = _finest(pages, tier) if prev_read is None else _rollup_stats(prev_read, tier)
-        tbl = tf(f"slo_{tier}")
-        tbl.commit(
-            df.withColumn("pkey", tiers.partition_key_col(tier)),
-            mode="replace",
-            meta={"tier": tier, "partition_fmt": tiers.TIER_PARTITION_FMT[tier][1]},
-            partition_by="pkey",
-        )
-        prev_read = tbl.read(spark).drop("pkey")
-        out[tier] = tbl
-    return out
-
-
-def read_error_stats(
-    spark: SparkSession,
-    out_dir: str,
-    tier: str = "1h",
-    t0: int | None = None,
-    t1: int | None = None,
-    hosts: list[str] | None = None,
-) -> DataFrame:
-    """Pruned read of a published stats tier: (host, bucket_ts, tot, err)."""
-    p_lo, p_hi = tiers.partition_bounds(tier, t0, t1)
-    df = (
-        SnapshotTable(f"{out_dir}/slo_{tier}")
-        .read(spark, partition_min=p_lo, partition_max=p_hi)
-        .drop("pkey")
+    pages = with_host(read_pages(spark, pages_path)).withColumn(
+        "is_err", F.expr(err_predicate_sql)
     )
-    sec = F.col("bucket_ts").cast("long")
-    if t0 is not None:
-        df = df.filter(sec >= t0)
-    if t1 is not None:
-        df = df.filter(sec < t1)
-    if hosts:
-        df = df.filter(F.col("host").isin(hosts))
-    return df
+    if days:
+        return SLO.refresh(spark, pages, out_dir, days)
+    return SLO.publish(spark, pages, out_dir)
 
 
 def read_burn(
@@ -134,7 +87,7 @@ def read_burn(
     Reads ``long_buckets - 1`` buckets before t0 (pruned, never raw pages)
     so in-range buckets see their full long window, then clips."""
     pre_t0 = None if t0 is None else t0 - (long_buckets - 1) * 3600
-    stats = read_error_stats(spark, out_dir, "1h", t0=pre_t0, t1=t1, hosts=hosts)
+    stats = SLO.read(spark, out_dir, "1h", t0=pre_t0, t1=t1, hosts=hosts)
     hourly = stats.select(
         "host", F.col("bucket_ts").cast("long").alias("bucket_sec"), "tot", "err"
     )

@@ -1,13 +1,9 @@
 """Published two-series sufficient-stat continuous aggregates: the six-sum
-corr state of operators/stats.py materialized as serving tables.
-
-Layout mirrors the other aux tiers (distinct/topn/histogram jobs): one
-table per tier (``stats_1h/1d/30d``), partitioned by the tier's coarse time
-key, so serving reads prune at the manifest level exactly like
-``read_rollup``. The finest tier is the ONLY one that touches raw pages;
-every coarser tier ADDS the child tier's six BIGINT sums — unlike the HLL
-cascade this merge is EXACT, so a stats row served from any tier is
-bit-identical state to a fresh raw-data build.
+corr state of operators/stats.py materialized as serving tables
+(``stats_1h/1d/30d``, laid out and refreshed as jobs/aux_refresh.py
+describes). Coarser tiers ADD the child tier's six BIGINT sums — unlike
+the HLL cascade this merge is EXACT, so a stats row served from any tier
+is bit-identical state to a fresh raw-data build.
 
 What this buys at 100 TB: "corr(doc_count, bytes_sum) per host over
 [t0, t1)" becomes a pruned read of ≤ span/tier_step rows per host plus one
@@ -19,88 +15,29 @@ tests/test_stats_analytics.py).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .. import tiers
 from ..ingest import read_pages, with_host
 from ..operators.stats import corr_from_stats, stats_cascade, stats_rollup
-from ..tables import SnapshotTable
+from .aux_refresh import ContinuousAggregate
 
-STATS_TIERS = ["1h", "1d", "30d"]
+# a read yields (host, bucket_ts, n, sx, sy, sxx, syy, sxy), mergeable downstream
+STATS = ContinuousAggregate("stats", ("1h", "1d", "30d"), stats_rollup, stats_cascade, exact=True)
 
 
 def run_stats_job(
     spark: SparkSession,
     pages_path: str,
     out_dir: str,
-    table_factory=None,
     days: list[str] | None = None,
 ) -> dict:
     """Build + publish the sufficient-stat tiers. Returns {tier: table}.
 
     ``days``: incremental mode — refresh only the partitions dirtied by
-    those days (jobs/aux_refresh.py invalidation) instead of rebuilding
-    every tier from the full raw table."""
+    those days instead of rebuilding every tier from the full raw table."""
     pages = with_host(read_pages(spark, pages_path))
-    if days and SnapshotTable(f"{out_dir}/stats_{STATS_TIERS[0]}").exists():
-        from .aux_refresh import refresh_aux_tiers
-
-        dp = pages.filter(F.date_format("warc_ts", "yyyy-MM-dd").isin(days))
-        refresh_aux_tiers(
-            spark, out_dir, "stats", days, dp,
-            lambda p, t: stats_rollup(p, t),
-            lambda c, t: stats_cascade(c, t),
-            tier_list=tuple(STATS_TIERS),
-        )
-        return {t: SnapshotTable(f"{out_dir}/stats_{t}") for t in STATS_TIERS}
-    tf = table_factory or (lambda name: SnapshotTable(f"{out_dir}/{name}"))
-    out: dict[str, object] = {}
-    prev_read: DataFrame | None = None
-    for tier in STATS_TIERS:
-        df = (
-            stats_rollup(pages, tier)
-            if prev_read is None
-            else stats_cascade(prev_read, tier)
-        )
-        tbl = tf(f"stats_{tier}")
-        tbl.commit(
-            df.withColumn("pkey", tiers.partition_key_col(tier)),
-            mode="replace",
-            meta={
-                "tier": tier,
-                "partition_fmt": tiers.TIER_PARTITION_FMT[tier][1],
-            },
-            partition_by="pkey",
-        )
-        prev_read = tbl.read(spark).drop("pkey")
-        out[tier] = tbl
-    return out
-
-
-def read_stats(
-    spark: SparkSession,
-    out_dir: str,
-    tier: str,
-    t0: int | None = None,
-    t1: int | None = None,
-    hosts: list[str] | None = None,
-) -> DataFrame:
-    """Serve a published stats tier with manifest pruning (t0/t1 →
-    partition-key range, then exact row predicates). Output: (host,
-    bucket_ts, n, sx, sy, sxx, syy, sxy) — mergeable downstream."""
-    p_lo, p_hi = tiers.partition_bounds(tier, t0, t1)
-    df = (
-        SnapshotTable(f"{out_dir}/stats_{tier}")
-        .read(spark, partition_min=p_lo, partition_max=p_hi)
-        .drop("pkey")
-    )
-    if t0 is not None:
-        df = df.filter(F.col("bucket_ts").cast("long") >= t0)
-    if t1 is not None:
-        df = df.filter(F.col("bucket_ts").cast("long") < t1)
-    if hosts:
-        df = df.filter(F.col("host").isin(hosts))
-    return df
+    if days:
+        return STATS.refresh(spark, pages, out_dir, days)
+    return STATS.publish(spark, pages, out_dir)
 
 
 def read_corr_range(
@@ -119,13 +56,12 @@ def read_corr_range(
     finer-aligned bounds; raises if not even the finest tier aligns."""
     from ..series import TIER_SECONDS
 
-    order = [t for t in reversed(STATS_TIERS)]  # coarsest first
-    tier_list = [tier] if tier else order
+    tier_list = [tier] if tier else list(reversed(STATS.tiers))  # coarsest first
     for t in tier_list:
         step = TIER_SECONDS[t]
         if t0 % step == 0 and t1 % step == 0:
             return corr_from_stats(
-                read_stats(spark, out_dir, t, t0=t0, t1=t1, hosts=hosts),
+                STATS.read(spark, out_dir, t, t0=t0, t1=t1, hosts=hosts),
                 min_points=min_points,
             )
     raise ValueError(

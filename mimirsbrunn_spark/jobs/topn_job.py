@@ -1,14 +1,9 @@
 """Published top-N heavy-hitter tiers: the candidate-list cascade of
-operators/topn.py materialized as serving tables, mirroring the layout of
-distinct_job/rollup_job.
-
-One table per tier (``topn_1h/1d/30d``), partitioned by the tier's coarse
-time key so ``read_topn`` prunes at the manifest level exactly like
-``read_rollup``. The finest tier is the ONLY one that touches raw pages;
-every coarser tier merges the published child tier's candidate LISTS
-(topn_cascade) — the single-raw-touch property — and stores the
-space-saving ``max_missed`` bound alongside, so a served top-n is provably
-exact whenever the n-th count clears the bound.
+operators/topn.py materialized as serving tables (``topn_1h/1d/30d``, laid
+out and refreshed as jobs/aux_refresh.py describes). Coarser tiers merge
+the child tier's candidate LISTS (topn_cascade) and store the space-saving
+``max_missed`` bound alongside, so a served top-n is provably exact
+whenever the n-th count clears the bound.
 
 At 100 TB: the 1h build shuffles (host?, bucket, item) once; after that
 each tier shuffles ≤ n*slack rows per child bucket."""
@@ -16,14 +11,23 @@ each tier shuffles ≤ n*slack rows per child bucket."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .. import tiers
 from ..ingest import read_pages, with_host
 from ..operators.topn import topn_cascade, topn_rollup, topn_serve
-from ..tables import SnapshotTable
+from .aux_refresh import ContinuousAggregate
 
-TOPN_TIERS = ["1h", "1d", "30d"]
+
+def spec(
+    n: int = 10, slack: int = 4, by: tuple[str, ...] = (), item_col: str = "url"
+) -> ContinuousAggregate:
+    """Top-n candidate lists, n*slack kept per bucket."""
+    return ContinuousAggregate(
+        "topn",
+        ("1h", "1d", "30d"),
+        finest=lambda p, t: topn_rollup(p, t, n, by=by, item_col=item_col, slack=slack),
+        merge=lambda c, t: topn_cascade(c, t, n, by=by, slack=slack),
+        meta={"n": n, "slack": slack},
+    )
 
 
 def run_topn_job(
@@ -34,49 +38,16 @@ def run_topn_job(
     slack: int = 4,
     by: tuple[str, ...] = (),
     item_col: str = "url",
-    table_factory=None,
     days: list[str] | None = None,
 ) -> dict:
     """Build + publish the top-N url candidate tiers. Returns {tier: table}.
 
     ``days``: incremental mode — refresh only the partitions dirtied by
-    those days (jobs/aux_refresh.py); requires an existing publish."""
-    pages = with_host(read_pages(spark, pages_path))
-    if days and SnapshotTable(f"{out_dir}/topn_{TOPN_TIERS[0]}").exists():
-        from .aux_refresh import refresh_aux_tiers
-
-        dp = pages.filter(F.date_format("warc_ts", "yyyy-MM-dd").isin(days))
-        refresh_aux_tiers(
-            spark, out_dir, "topn", days, dp,
-            lambda p, t: topn_rollup(p, t, n, by=by, item_col=item_col, slack=slack),
-            lambda c, t: topn_cascade(c, t, n, by=by, slack=slack),
-            tier_list=tuple(TOPN_TIERS),
-        )
-        return {t: SnapshotTable(f"{out_dir}/topn_{t}") for t in TOPN_TIERS}
-    tf = table_factory or (lambda name: SnapshotTable(f"{out_dir}/{name}"))
-    out: dict[str, object] = {}
-    prev_read: DataFrame | None = None
-    for tier in TOPN_TIERS:
-        df = (
-            topn_rollup(pages, tier, n, by=by, item_col=item_col, slack=slack)
-            if prev_read is None
-            else topn_cascade(prev_read, tier, n, by=by, slack=slack)
-        )
-        tbl = tf(f"topn_{tier}")
-        tbl.commit(
-            df.withColumn("pkey", tiers.partition_key_col(tier)),
-            mode="replace",
-            meta={
-                "tier": tier,
-                "n": n,
-                "slack": slack,
-                "partition_fmt": tiers.TIER_PARTITION_FMT[tier][1],
-            },
-            partition_by="pkey",
-        )
-        prev_read = tbl.read(spark).drop("pkey")
-        out[tier] = tbl
-    return out
+    those days instead of rebuilding every tier from the full raw table."""
+    s, pages = spec(n, slack, by, item_col), with_host(read_pages(spark, pages_path))
+    if days:
+        return s.refresh(spark, pages, out_dir, days)
+    return s.publish(spark, pages, out_dir)
 
 
 def read_topn(
@@ -87,18 +58,13 @@ def read_topn(
     t0: int | None = None,
     t1: int | None = None,
 ) -> DataFrame:
-    """Serve a published top-N tier with manifest pruning (t0/t1 →
-    partition-key range, then exact row predicates). ``n`` cuts the stored
-    candidate list down to the serve size (must be ≤ the published n*slack;
-    default: the job's n from the snapshot meta). Output: (*, bucket_ts,
-    item, cnt, rank, max_missed)."""
-    tbl = SnapshotTable(f"{out_dir}/topn_{tier}")
-    p_lo, p_hi = tiers.partition_bounds(tier, t0, t1)
-    df = tbl.read(spark, partition_min=p_lo, partition_max=p_hi).drop("pkey")
-    if t0 is not None:
-        df = df.filter(F.col("bucket_ts").cast("long") >= t0)
-    if t1 is not None:
-        df = df.filter(F.col("bucket_ts").cast("long") < t1)
+    """Serve a published top-N tier through the pruned read. ``n`` cuts the
+    stored candidate list down to the serve size (must be ≤ the published
+    n*slack; default: the job's n from the snapshot meta). Output: (*,
+    bucket_ts, item, cnt, rank, max_missed)."""
+    s = spec()
+    df = s.read(spark, out_dir, tier, t0, t1)
     if n is None:
+        tbl = s.table(out_dir, tier)
         n = int(tbl.snapshot(tbl.current_snapshot_id()).meta["n"])
     return topn_serve(df, n)

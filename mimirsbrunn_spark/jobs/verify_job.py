@@ -233,34 +233,34 @@ def check_chunks_decode(
     return {"ok": n_bad == 0, "hosts": hosts, "mismatch_rows": n_bad}
 
 
-def check_aux_cascade(spark: SparkSession, out_dir: str, prefix: str, child: str) -> dict:
-    """Published aux tier ↔ exact re-aggregation of its finer sibling
-    (exact-merge families only: the log-2 ``hist_*`` / HDR ``hdr_*``
-    histograms and the ``slo_*`` error stats all merge by integer sums, so
-    cascade equality is EXACT). Aux tiers are replace-published with no
-    history-preservation contract (histogram_job/slo_job; aux_refresh is
-    bit-identical by design), so strict equality is the invariant — unlike
-    the rollup tiers there is no preserved span to exclude. The HLL/topn
-    cascades are intentionally NOT checked here: their merge is lossy
+def _exact_specs() -> dict:
+    """The published aux families whose tier merge is exact, by table
+    prefix. The HLL/topn cascades are not among them: their merge is lossy
     relative to a direct rebuild."""
-    from ..operators.histograms import rollup_histogram
+    from . import distinct_job, histogram_job, slo_job, stats_job, topn_job
 
-    parent = TIER_PARENT[child]
-    p_tbl = SnapshotTable(f"{out_dir}/{prefix}_{parent}")
-    c_tbl = SnapshotTable(f"{out_dir}/{prefix}_{child}")
+    specs = (
+        distinct_job.spec(), topn_job.spec(), histogram_job.spec("log2"),
+        histogram_job.spec("hdr"), stats_job.STATS, slo_job.SLO,
+    )
+    return {s.name: s for s in specs if s.exact}
+
+
+def check_aux_cascade(spark: SparkSession, out_dir: str, prefix: str, child: str) -> dict:
+    """Published aux tier ↔ its spec's merge of the next finer tier, for the
+    exact-merge families (the log-2 ``hist_*`` / HDR ``hdr_*`` histograms,
+    the ``stats_*`` six-sums and the ``slo_*`` error counts all merge by
+    integer sums). Aux tiers are replace-published with no
+    history-preservation contract (an aux refresh is bit-identical by
+    design), so strict equality is the invariant — unlike the rollup tiers
+    there is no preserved span to exclude."""
+    spec = _exact_specs()[prefix]
+    finer = spec.tiers[spec.tiers.index(child) - 1]
+    p_tbl, c_tbl = spec.table(out_dir, finer), spec.table(out_dir, child)
     if not p_tbl.exists() or not c_tbl.exists():
-        return {"ok": False, "error": f"missing {prefix}_{parent} or {prefix}_{child}"}
-    if prefix == "slo":
-        from .slo_job import _rollup_stats
-
-        cols = ["host", "bucket_ts", "tot", "err"]
-        cascade = _rollup_stats
-    else:
-        cols = ["host", "bucket_ts", "bin", "n"]
-        cascade = lambda df, t: rollup_histogram(df, t, keys=("host",))  # noqa: E731
-    p_df = p_tbl.read(spark).select(*cols)
-    c_df = c_tbl.read(spark).select(*cols)
-    expected = cascade(p_df, child).select(*cols)
+        return {"ok": False, "error": f"missing {prefix}_{finer} or {prefix}_{child}"}
+    c_df = c_tbl.read(spark).drop("pkey")
+    expected = spec.merge(p_tbl.read(spark).drop("pkey"), child).select(*c_df.columns)
     extra = c_df.exceptAll(expected)
     missing = expected.exceptAll(c_df)
     n_extra, n_missing = extra.count(), missing.count()
@@ -304,19 +304,18 @@ def verify_publication(
         report["checks"][f"chunks:{child}"] = _safe(
             check_chunks_decode, spark, out_dir, child, n_hosts=chunk_hosts
         )
-    # aux-tier layouts (histogram_job/slo_job) sharing the directory:
-    # exact-merge families get manifest + cascade checks; absent families
-    # are skipped.
-    for prefix, children in (("hist", ("1d", "30d")), ("hdr", ("1d", "30d")), ("slo", ("1d",))):
-        if not SnapshotTable(f"{out_dir}/{prefix}_1h").exists():
+    # exact-merge aux layouts sharing the directory get manifest + cascade
+    # checks; absent families are skipped.
+    for prefix, spec in _exact_specs().items():
+        if not spec.table(out_dir, spec.tiers[0]).exists():
             continue
-        for t in ("1h",) + children:
-            tbl = SnapshotTable(f"{out_dir}/{prefix}_{t}")
+        for t in spec.tiers:
+            tbl = spec.table(out_dir, t)
             if tbl.exists():
                 report["checks"][f"manifest:{prefix}_{t}"] = _safe(
                     check_manifest, tbl, deep=deep
                 )
-        for child in children:
+        for child in spec.tiers[1:]:
             report["checks"][f"aux:{prefix}:{child}"] = _safe(
                 check_aux_cascade, spark, out_dir, prefix, child
             )

@@ -188,85 +188,6 @@ def affected_buckets(days: list[str], tier: str) -> list[int]:
     return sorted(out)
 
 
-def incremental_refresh(
-    spark,
-    series_tbl,
-    tier_tbl,
-    tier: str,
-    days: list[str],
-) -> int:
-    """Refresh only the tier buckets dirtied by ``days`` (TimescaleDB-style
-    continuous-aggregate invalidation, instead of a full tier rebuild):
-
-    1. map the processed days to affected tier bucket starts;
-    2. read ONLY the 1m-series day partitions covering those buckets
-       (manifest pruning — a 30d bucket pulls in its sibling days);
-    3. recompute those buckets and swap them in with a metadata-only
-       partition drop + append (tier tables are partitioned by bucket).
-
-    At 100 TB a daily run recomputes |dirty buckets| ≪ |all buckets|; the
-    full-history rebuild this replaces reads the whole series table every
-    run. Returns the number of refreshed buckets."""
-    import datetime as dt
-
-    from .series import TIER_SECONDS
-
-    if not days:
-        return 0
-    if tier_tbl.exists():
-        # Refuse tables not laid out for bucket invalidation: pointed at an
-        # unpartitioned publish (files with '' partition values) or a schema
-        # without the `bucket` column, drop_partition_values would no-op and
-        # the append would double-count the refreshed buckets while mixing
-        # parquet schemas. Fail loudly; callers fall back to a full rebuild.
-        import json as _json
-
-        snap = tier_tbl.snapshot(tier_tbl.current_snapshot_id())
-        if any(snap.partitions.get(f, "") == "" for f in snap.files):
-            raise ValueError(
-                f"incremental_refresh({tier}): existing table has unpartitioned "
-                "files — rebuild it with partition_by='bucket' (or use cascade + "
-                "replace-commit) before refreshing incrementally"
-            )
-        if snap.schema_json is not None:
-            fields = {f["name"] for f in _json.loads(snap.schema_json)["fields"]}
-            if "bucket" not in fields:
-                raise ValueError(
-                    f"incremental_refresh({tier}): existing table schema lacks the "
-                    "'bucket' partition column — not a bucket-partitioned tier table"
-                )
-    buckets = affected_buckets(days, tier)
-    step = TIER_SECONDS[tier]
-    # day partitions needed: every day intersecting [min_bucket, max_bucket+step)
-    lo = dt.datetime.fromtimestamp(buckets[0], dt.timezone.utc).date()
-    hi = dt.datetime.fromtimestamp(buckets[-1] + step - 1, dt.timezone.utc).date()
-    src = series_tbl.read(spark, partition_min=lo.isoformat(), partition_max=hi.isoformat())
-    bucket_set = set(buckets)
-    fresh = (
-        rollup(src, tier)
-        .filter(F.col("bucket_ts").cast("long").isin([int(b) for b in bucket_set]))
-        .withColumn("bucket", F.col("bucket_ts").cast("long").cast("string"))
-    )
-    meta = {"tier": tier, "refreshed_buckets": len(buckets)}
-    if tier_tbl.exists() and hasattr(tier_tbl, "replace_partitions"):
-        # ATOMIC swap (one published snapshot) — the drop-then-append
-        # sequence exposes a crash window where the dirty buckets' rows are
-        # missing from the current snapshot until the append lands
-        tier_tbl.replace_partitions(
-            fresh, {str(b) for b in buckets}, meta=meta, partition_by="bucket"
-        )
-    else:
-        if tier_tbl.exists():
-            tier_tbl.drop_partition_values(
-                {str(b) for b in buckets}, meta={"refresh": tier, "days": days}
-            )
-        tier_tbl.commit(
-            fresh, mode="append" if tier_tbl.exists() else "replace",
-            meta=meta, partition_by="bucket",
-        )
-    return len(buckets)
-
-
 def host_series(tier_df: DataFrame) -> DataFrame:
     """Host-level series (summed across langs) — gap-fill input."""
     return tier_df.groupBy("host", "bucket_ts").agg(

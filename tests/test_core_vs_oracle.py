@@ -107,45 +107,3 @@ def test_gapfill_per_lang_exact_match(pages_df, pages_pdf):
     got = got[["host", "lang", "bucket_ts", "metric", "value_locf", "value_linear", "is_filled"]]
     want = want[["host", "lang", "bucket_ts", "metric", "value_locf", "value_linear", "is_filled"]]
     assert_frames_equal(got, want, keys=["host", "lang", "metric", "bucket_ts"])
-
-
-def test_incremental_tier_refresh_equals_full(spark, small_pages_path, tmp_path):
-    """Continuous-aggregate invalidation: refreshing only the dirtied
-    buckets across two ingest phases equals the full rebuild exactly —
-    including a 30d bucket dirtied by both phases (sibling-day re-read)."""
-    from pyspark.sql import functions as F
-
-    from mimirsbrunn_spark import series, tiers
-    from mimirsbrunn_spark.tables import SnapshotTable
-
-    pages = spark.read.parquet(small_pages_path)
-    s_all = series.series_1m(pages).withColumn("day", F.to_date("bucket_ts"))
-    days = sorted(r.day.isoformat() for r in s_all.select("day").distinct().collect())
-    phase1, phase2 = days[:3], days[3:]
-    assert phase2, "fixture needs >3 days"
-
-    series_tbl = SnapshotTable(str(tmp_path / "s1m"))
-    for tier in ("1h", "30d"):
-        tier_tbl = SnapshotTable(str(tmp_path / f"t_{tier}"))
-        # phase 1
-        series_tbl_path_fresh = tier  # noqa: F841
-        if not series_tbl.exists():
-            series_tbl.commit(
-                s_all.filter(F.col("day").isin(phase1)), mode="replace", partition_by="day"
-            )
-        n1 = tiers.incremental_refresh(spark, series_tbl, tier_tbl, tier, phase1)
-        assert n1 > 0
-        # phase 2: append the remaining days, refresh only their buckets
-        if series_tbl.read(spark).select("day").distinct().count() == len(phase1):
-            series_tbl.commit(
-                s_all.filter(F.col("day").isin(phase2)), mode="append", partition_by="day"
-            )
-        n2 = tiers.incremental_refresh(spark, series_tbl, tier_tbl, tier, phase2)
-        assert n2 > 0
-        got = tier_tbl.read(spark).drop("bucket")
-        want = tiers.rollup(s_all.drop("day"), tier)
-        assert got.count() == want.count()
-        assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-    # the 30d tier: both phases dirty the same month bucket(s) -> second
-    # refresh recomputed them from ALL sibling days, not just phase2
-    assert n2 >= 1

@@ -94,9 +94,11 @@ def test_distinct_job_publish_and_serve(spark, small_pages_path, tmp_path):
     """Published sketch tiers: parents are built from the CHILD TABLE's
     stored sketch bytes and agree with a direct sketch over raw pages to
     within the estimator gap (register-losslessness survives the parquet
-    round-trip); read_distinct pruning equals the unpruned filter."""
+    round-trip); the pruned read equals the unpruned filter."""
     from mimirsbrunn_spark.ingest import read_pages, with_host
-    from mimirsbrunn_spark.jobs.distinct_job import read_distinct, run_distinct_job
+    from mimirsbrunn_spark.jobs.distinct_job import run_distinct_job, spec
+
+    read_distinct = spec().read
 
     out = str(tmp_path / "distinct_out")
     run_distinct_job(spark, small_pages_path, out)

@@ -5,11 +5,7 @@ operator applied to the same counts, and pruned reads touch fewer files."""
 from pyspark.sql import functions as F
 
 from mimirsbrunn_spark.ingest import read_pages, with_host
-from mimirsbrunn_spark.jobs.histogram_job import (
-    read_histogram,
-    read_quantile,
-    run_histogram_job,
-)
+from mimirsbrunn_spark.jobs.histogram_job import read_quantile, run_histogram_job, spec
 from mimirsbrunn_spark.operators.histograms import (
     hdr_histogram,
     hdr_quantile,
@@ -17,6 +13,10 @@ from mimirsbrunn_spark.operators.histograms import (
     size_histogram,
 )
 from mimirsbrunn_spark.series import bucket_col
+
+
+def read_histogram(spark, out, tier, t0=None, t1=None, sketch="log2"):
+    return spec(sketch).read(spark, out, tier, t0, t1)
 
 
 def test_histogram_job_publish_exact(spark, small_pages_path, tmp_path):

@@ -6,15 +6,11 @@ files."""
 from pyspark.sql import functions as F
 
 from mimirsbrunn_spark.ingest import read_pages, with_host
-from mimirsbrunn_spark.jobs.slo_job import (
-    _finest_stats,
-    read_burn,
-    read_error_stats,
-    run_slo_job,
-)
+from mimirsbrunn_spark.jobs.slo_job import SLO, _finest_stats, read_burn, run_slo_job
 from mimirsbrunn_spark.operators.slo import multiwindow_burn
 
 ERR_SQL = "page_size % 7 = 0"
+read_error_stats = SLO.read
 
 
 def test_slo_job_publish_exact_and_serving(spark, small_pages_path, tmp_path):

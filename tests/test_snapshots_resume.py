@@ -453,26 +453,6 @@ def test_enumerate_days_is_manifest_only(spark, small_pages_path, tmp_path):
     assert days == want
 
 
-def test_incremental_refresh_rejects_unpartitioned_tier(spark, small_pages_path, tmp_path):
-    """ADVICE r2 (medium): pointed at a tier table without the bucket layout,
-    incremental_refresh must fail loudly instead of double-counting."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from mimirsbrunn_spark import series, tiers
-
-    base = series.series_1m(spark.read.parquet(small_pages_path))
-    t1h = tiers.rollup(base, "1h")
-    day_tbl = SnapshotTable(str(tmp_path / "s1m"))
-    day_tbl.commit(
-        base.withColumn("day", F.to_date("bucket_ts")), mode="replace", partition_by="day"
-    )
-    bad = SnapshotTable(str(tmp_path / "bad_tier"))
-    bad.commit(t1h, mode="replace")  # unpartitioned, no bucket column
-    with _pytest.raises(ValueError, match="unpartitioned|bucket"):
-        tiers.incremental_refresh(spark, day_tbl, bad, "1h", days=["2024-01-01"])
-
-
 def test_legacy_manifest_footer_fallback(spark, tmp_path):
     """ADVICE r2 (low): manifests that predate file_rows must fall back to
     parquet footers — never silently report 0 rows."""

@@ -201,13 +201,13 @@ def test_stats_cascade_equals_direct_build(spark, small_pages_path, stats_publis
     """Every cascaded tier's six sums equal a direct raw build of that tier
     (integer addition is exact — no approximation gap)."""
     from mimirsbrunn_spark.ingest import read_pages, with_host
-    from mimirsbrunn_spark.jobs.stats_job import STATS_TIERS, read_stats
+    from mimirsbrunn_spark.jobs.stats_job import STATS
     from mimirsbrunn_spark.operators.stats import stats_rollup
 
     pages = with_host(read_pages(spark, small_pages_path))
-    for tier in STATS_TIERS:
+    for tier in STATS.tiers:
         want = stats_rollup(pages, tier)
-        got = read_stats(spark, stats_published, tier)
+        got = STATS.read(spark, stats_published, tier)
         assert got.count() == want.count() > 0, tier
         assert got.exceptAll(want).count() == 0, tier
 
@@ -253,7 +253,7 @@ def test_stats_job_incremental_refresh_equals_full(spark, small_pages_path, tmp_
     """days=[...] incremental mode converges to the same tables as a full
     rebuild (aux_refresh invalidation pattern)."""
     from mimirsbrunn_spark.ingest import read_pages
-    from mimirsbrunn_spark.jobs.stats_job import STATS_TIERS, read_stats, run_stats_job
+    from mimirsbrunn_spark.jobs.stats_job import STATS, run_stats_job
 
     pages = read_pages(spark, small_pages_path)
     days = sorted(
@@ -272,9 +272,9 @@ def test_stats_job_incremental_refresh_equals_full(spark, small_pages_path, tmp_
 
     full = str(tmp_path / "full")
     run_stats_job(spark, small_pages_path, full)
-    for tier in STATS_TIERS:
-        a = read_stats(spark, inc, tier)
-        b = read_stats(spark, full, tier)
+    for tier in STATS.tiers:
+        a = STATS.read(spark, inc, tier)
+        b = STATS.read(spark, full, tier)
         assert a.count() == b.count() > 0, tier
         assert a.exceptAll(b).count() == 0, tier
 

@@ -43,26 +43,3 @@ def test_topn_job_publish_and_serve(spark, small_pages_path, tmp_path):
     assert narrow.count() == ref.count() > 0
     assert narrow.select(*key).exceptAll(ref.select(*key)).count() == 0
     assert len(narrow.inputFiles()) < len(full.inputFiles())
-
-
-def test_topn_job_backend_agnostic(spark, small_pages_path, tmp_path):
-    """run_topn_job through the same table_factory seam as rollup_job: a
-    second SnapshotTable root produces identical tables (the seam is
-    exercised, not bypassed)."""
-    from mimirsbrunn_spark.tables import SnapshotTable
-
-    out_a = str(tmp_path / "a")
-    out_b = str(tmp_path / "b")
-    run_topn_job(spark, small_pages_path, out_a, n=3, slack=2)
-    run_topn_job(
-        spark,
-        small_pages_path,
-        out_b,
-        n=3,
-        slack=2,
-        table_factory=lambda name: SnapshotTable(f"{out_b}/{name}"),
-    )
-    for tier in ("1h", "1d", "30d"):
-        a = read_topn(spark, out_a, tier)
-        b = read_topn(spark, out_b, tier)
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0

@@ -147,3 +147,25 @@ def test_aux_sketch_tiers_checked(spark, small_pages_path, tmp_path):
     assert all(row["bin"] == victim_bin for row in r["sample_extra"])
     assert not check_aux_cascade(spark, out, "hdr", "30d")["ok"]  # built from clean 1d
     assert check_aux_cascade(spark, out, "hist", "1d")["ok"]  # log2 untouched
+
+
+def test_stats_six_sums_checked(spark, small_pages_path, tmp_path):
+    """The stats six-sums merge exactly too: once published they join the
+    fsck as aux:stats:1d/30d, pass on the clean layout, and one doctored
+    stats_1d row fails aux:stats:1d."""
+    from mimirsbrunn_spark.jobs.stats_job import run_stats_job
+
+    out = str(tmp_path / "out")
+    run_stats_job(spark, small_pages_path, out)
+    checks = verify_publication(spark, out)["checks"]
+    for k in ("aux:stats:1d", "aux:stats:30d", "manifest:stats_1h", "manifest:stats_30d"):
+        assert checks[k]["ok"], k
+
+    tbl = SnapshotTable(f"{out}/stats_1d")
+    snap = tbl.snapshot(tbl.current_snapshot_id())
+    victim = tbl.read(spark).orderBy("host", "bucket_ts").first()
+    hit = (F.col("host") == victim.host) & (F.col("bucket_ts") == victim.bucket_ts)
+    doctored = tbl.read(spark).withColumn("sx", F.col("sx") + F.when(hit, 1).otherwise(0))
+    tbl.commit(doctored, mode="replace", meta=snap.meta, partition_by="pkey")
+    r = verify_publication(spark, out)["checks"]["aux:stats:1d"]
+    assert not r["ok"] and r["extra_rows"] == 1 and r["missing_rows"] == 1
