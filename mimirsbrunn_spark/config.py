@@ -15,20 +15,14 @@ from dataclasses import dataclass, field, fields
 
 @dataclass
 class EngineConfig:
-    # tiers
-    tiers: list[str] = field(default_factory=lambda: ["1m", "1h", "1d", "30d"])
     # skew handling (None = auto: min(16, shuffle partitions) resolved at
     # runtime — salts beyond the reducer count only inflate the partial-agg
     # exchange; see series._auto_salts)
     n_salts: int | None = None
-    # gap-fill
-    gapfill_metrics: list[str] = field(default_factory=lambda: ["doc_count", "bytes_sum"])
     # retention (seconds per tier; None/absent = keep forever)
     retention: dict = field(
         default_factory=lambda: {"1m": 7 * 86400, "1h": 90 * 86400, "1d": 730 * 86400}
     )
-    # codecs
-    chunk_tiers: list[str] = field(default_factory=lambda: ["1h", "1d"])
     # max points per compressed chunk (None = one chunk per (host, tier)).
     # Bounded chunks are the 100 TB path: bounded decode/update units and
     # time-range pruning by chunk_start.
@@ -36,24 +30,11 @@ class EngineConfig:
     # published chunk tables: host-bucket count of the composite
     # '<host bucket>|<month>' partition key (read-path host pruning)
     host_buckets: int = 16
-    # derived-stage invalidation: when the serving tables already exist with
-    # the partition layout, refresh only the partitions dirtied by the
-    # newly-processed days (TimescaleDB continuous-aggregate style) instead
-    # of rebuilding every tier from the full series each run
-    incremental_derived: bool = True
-    # dedup / similarity defaults
-    minhash_k: int = 32
-    minhash_bands: int = 16
-    shingle_n: int = 3
-    lsh_planes: int = 12
     # serving-table write clustering: number of range partitions (→ files)
     # the host-clustered commit splits each write into. None = let AQE pick
     # (advisory-partition-size right-sizing — the 100 TB default); tests pin
     # a small explicit count so zone-map pruning is observable on tiny data.
     cluster_files: int | None = None
-    # io
-    shuffle_partitions: int | None = None
-    max_bucket: int = 64
 
     @classmethod
     def load(cls, toml_path: str | None = None, **overrides) -> "EngineConfig":

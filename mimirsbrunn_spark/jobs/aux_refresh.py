@@ -1,9 +1,16 @@
-"""Continuous aggregates over the raw pages: one spec, three operations.
+"""Continuous aggregates: one spec, three operations.
 
 A ``ContinuousAggregate`` is what the distinct/topn/histogram/stats/SLO
 jobs publish (the TimescaleDB continuous-aggregate pattern, applied to
 mergeable states): a list of tiers, a builder of the finest tier from
 raw pages, and a merge of a finer tier's rows into a coarser tier.
+
+The numeric rollup tiers are the same spec with the 1m series as input:
+``rollup_job`` refreshes ``rollup_1h/1d/30d`` through
+``refresh_aux_tiers`` with ``finest = merge = tiers.rollup`` and the
+series snapshot recorded in ``meta``. Its full build is its own
+history-preserving rebuild, not ``publish``: once retention has truncated
+the series, coarse-tier rows the series can no longer rebuild are kept.
 
 Layout. One table per tier, ``{name}_{tier}``, partitioned by the tier's
 coarse time key (``pkey``: day for 1h, month for 1d, year for 30d, see
@@ -21,7 +28,7 @@ merge of its child bit for bit, which ``verify_job`` checks.
 
 Refresh rule. A daily run with ``days=[...]`` rebuilds only the dirty
 partitions of each tier (``tiers.dirty_partition_keys``): the finest tier
-from the pages of those days, each coarser tier by merging the child rows
+from the input rows of those days, each coarser tier by merging the child rows
 of exactly the span its dirty partitions cover (``tiers.source_span``; a
 30d bucket that starts in December dirties the PRIOR year's partition when
 a January day changes). Each tier swaps its dirty partitions in with one
@@ -88,7 +95,8 @@ class ContinuousAggregate:
         {tier: table}."""
         if not self.table(out_dir, self.tiers[0]).exists():
             return self.publish(spark, pages, out_dir)
-        refresh_aux_tiers(spark, self, out_dir, days, pages)
+        day_pages = pages.filter(F.date_format("warc_ts", "yyyy-MM-dd").isin(days))
+        refresh_aux_tiers(spark, self, out_dir, days, day_pages)
         return {t: self.table(out_dir, t) for t in self.tiers}
 
     def read(
@@ -120,16 +128,18 @@ def refresh_aux_tiers(
     spec: ContinuousAggregate,
     out_dir: str,
     days: list[str],
-    pages: DataFrame,
+    day_rows: DataFrame,
 ) -> None:
     """Swap in fresh rows for every partition of ``spec``'s tiers that
-    ``days`` dirty; only the pages of those days are read."""
-    day_pages = pages.filter(F.date_format("warc_ts", "yyyy-MM-dd").isin(days))
+    ``days`` dirty. ``day_rows`` are the finest tier's input rows covering
+    those days (rows of other days are built and then filtered out); each
+    coarser tier merges the published child rows of its source span. Every
+    swap keeps the table's declared layout."""
     child_tier = None
     for tier in spec.tiers:
         pkeys = sorted(tiers.dirty_partition_keys(days, tier))
         if child_tier is None:
-            df = spec.finest(day_pages, tier)
+            df = spec.finest(day_rows, tier)
         else:
             lo, hi = tiers.source_span(tier, set(pkeys))
             df = spec.merge(spec.read(spark, out_dir, child_tier, lo, hi), tier)

@@ -18,9 +18,10 @@ dedup/aggregate → atomic publish, one dataset at a time):
 Resume = rerun the job: step 2 skips days already in lineage (the analog of
 the reference's per-dataset alias republish — a crashed import rerun republishes
 only missing datasets, rubber.rs:553-602). Step 3 is idempotent either way:
-the incremental path drops dirty partitions before re-appending them, and a
-crash mid-refresh leaves the tables out of sync with the series snapshot
-marker, which forces a full rebuild on the next run.
+the incremental path swaps dirty partitions in with one atomic
+replace_partitions snapshot per table, and a crash mid-refresh leaves the
+tables out of sync with the series snapshot marker, which forces a full
+rebuild on the next run.
 
 Why days: 1m buckets never span a day boundary, so per-day series appends are
 disjoint and the concatenation is exactly the global series. The expensive,
@@ -41,6 +42,9 @@ is tools/submit_rollup.py; the zip comes from
 
 from __future__ import annotations
 
+import datetime as dt
+import hashlib
+import os
 import time
 
 from pyspark.sql import SparkSession
@@ -50,6 +54,7 @@ from .. import codecs, gapfill, retention, series, tiers
 from ..config import EngineConfig
 from ..ingest import read_pages
 from ..tables import Lineage, Metrics, SnapshotTable
+from . import aux_refresh
 
 
 class SimulatedFailure(RuntimeError):
@@ -64,6 +69,7 @@ class SimulatedFailure(RuntimeError):
 # sort-order + data-file-bounds analog).
 SERVING_STATS = ("host", "bucket_ts")
 SERVING_CLUSTER = ("host",)
+TIERS = ("1h", "1d", "30d")
 
 
 def enumerate_days(spark, input_tbl, pages) -> list[str]:
@@ -93,8 +99,6 @@ def _input_day_fingerprints(input_tbl) -> dict[str, int]:
     fingerprint — the late-data detection key for ``refresh_days='auto'``.
     Driver-side manifest arithmetic, NO Spark job (Iceberg analog: the
     per-partition data-file set from the ``.files`` metadata view)."""
-    import hashlib
-
     snap = input_tbl.snapshot(input_tbl.current_snapshot_id())
     by_day: dict[str, list[str]] = {}
     for f in snap.files:
@@ -168,130 +172,109 @@ def _derived_in_sync(tbl, series_tbl, series_sid) -> bool:
         return False
 
 
-def _swap_partitions(tbl, df, values, **commit_kw) -> None:
-    """Atomic partition overwrite when the backend supports it
-    (SnapshotTable.replace_partitions / Iceberg overwritePartitions —
-    ONE published snapshot), falling back to drop + append for minimal
-    backends. The fallback has a crash window (dirty partitions missing
-    from the current snapshot until the append lands); on backends with
-    the primitive there is no such window."""
-    if hasattr(tbl, "replace_partitions"):
-        tbl.replace_partitions(df, values, **commit_kw)
-    else:
-        # the DROP commit must NOT carry the series_snapshot marker: a crash
-        # before the append would otherwise leave a hole that reads as
-        # in-sync forever — marker-free, the next run safely rebuilds
-        drop_meta = {
-            k: v for k, v in (commit_kw.get("meta") or {}).items() if k != "series_snapshot"
-        }
-        tbl.drop_partition_values(values, meta=drop_meta)
-        tbl.commit(df, mode="append", **commit_kw)
+def _rollup_spec(sid_now) -> aux_refresh.ContinuousAggregate:
+    """The rollup tiers as a continuous aggregate whose meta records the
+    series snapshot they reflect. Built per run, so the spec calls
+    whatever ``tiers.rollup`` is bound to at that moment."""
+    return aux_refresh.ContinuousAggregate(
+        "rollup", TIERS, finest=tiers.rollup, merge=tiers.rollup, exact=True,
+        meta={"series_snapshot": sid_now},
+    )
 
 
 def _refresh_derived_incremental(
-    spark, tier_tables, series_tbl, processed_days, cfg, sid_now
+    spark, out_dir, tier_tables, series_tbl, processed_days, cfg, sid_now
 ) -> dict:
     """Refresh ONLY the serving-table partitions dirtied by the processed
     days (continuous-aggregate invalidation over the published layout):
 
-    - rollup_{tier}: dirty partition keys (tiers.dirty_partition_keys) are
-      recomputed IN FULL from the previous tier's table — a manifest-pruned
-      read of exactly the source span the dirty periods need
+    - rollup_{tier}: the ``rollup`` ContinuousAggregate
+      (jobs/aux_refresh.py) recomputes each dirty partition key IN FULL —
+      1h from the manifest-pruned series days, 1d/30d from the child
+      tier's table over exactly the source span the dirty periods need
       (tiers.source_span handles the epoch-anchored 30d buckets that reach
-      across partition boundaries) — then swapped in with a metadata-only
-      drop + append.
-    - chunks_{tier}: chunk groups are (host, tier, month) — independent by
-      construction (split_by_month) — so only the months containing dirty
-      buckets are re-encoded and swapped (all host buckets of those months).
-    - gapfill_{tier}: rebuilt in full. locf/linear windows reach across
-      partition boundaries (an observed point fills forward indefinitely),
-      so partition-local recompute would be WRONG; the input is the
-      rolled-up tier series (bounded by time range, not doc count), which
-      keeps the rebuild cheap at any raw-data scale.
+      across partition boundaries) — and swaps it in with one atomic
+      replace_partitions snapshot per tier.
+    - chunks_{tier}, gapfill_{tier}: see ``_publish_serving`` — only the
+      chunk months holding dirty buckets are re-encoded; gap-fill is
+      rebuilt in full.
 
     Returns per-stage refreshed-partition counts (metrics payload)."""
-    import datetime as dt
-
+    spec = _rollup_spec(sid_now)
+    day_rows = series_tbl.read(
+        spark, partition_min=min(processed_days), partition_max=max(processed_days)
+    )
+    aux_refresh.refresh_aux_tiers(spark, spec, out_dir, processed_days, day_rows)
     stats: dict[str, float] = {}
-    prev_tbl = series_tbl  # 1h cascades from the 1m series; 1d from 1h; 30d from 1d
-    prev_fmt = "%Y-%m-%d"
-    for tier in ("1h", "1d", "30d"):
-        tbl = tier_tables[f"rollup_{tier}"]
-        pkeys = tiers.dirty_partition_keys(processed_days, tier)
-        span = tiers.source_span(tier, pkeys)
-        if span is None:
-            continue
-        lo, hi = span
-        src_min = dt.datetime.fromtimestamp(lo, dt.timezone.utc).strftime(prev_fmt)
-        src_max = dt.datetime.fromtimestamp(hi - 1, dt.timezone.utc).strftime(prev_fmt)
-        src = prev_tbl.read(spark, partition_min=src_min, partition_max=src_max).select(
-            "host", "bucket_ts", "lang", "doc_count", "bytes_sum"
-        )
-        fresh = tiers.rollup(src, tier).withColumn("pkey", tiers.partition_key_col(tier))
-        fresh = fresh.filter(F.col("pkey").isin(sorted(pkeys)))
-        _swap_partitions(
-            tbl,
-            fresh,
-            pkeys,
-            meta={"tier": tier, "partition_fmt": tiers.TIER_PARTITION_FMT[tier][1],
-                  "refreshed": sorted(pkeys), "series_snapshot": sid_now},
-            partition_by="pkey",
-            stats_cols=SERVING_STATS,
-            cluster_by=SERVING_CLUSTER,
-            cluster_files=cfg.cluster_files,
-        )
-        stats[f"rollup_{tier}_partitions"] = len(pkeys)
-
-        # chunk months containing dirty buckets (a tier row belongs to the
-        # chunk month of its own bucket_ts)
+    for tier in TIERS:
+        # a tier row belongs to the chunk month of its own bucket_ts
         months = {
             dt.datetime.fromtimestamp(b, dt.timezone.utc).strftime("%Y-%m")
             for b in tiers.affected_buckets(processed_days, tier)
         }
-        tier_read = tbl.read(
-            spark,
-            partition_filter=lambda v, M=months: any(
-                v.startswith(m) or m.startswith(v) for m in M
-            ),
-        ).drop("pkey")
-        in_months = tier_read.filter(
-            F.date_format("bucket_ts", "yyyy-MM").isin(sorted(months))
-        )
-        hs = tiers.host_series(in_months)
-        ch = codecs.encode_chunks(
-            hs, tier, max_points_per_chunk=cfg.chunk_max_points, split_by_month=True
-        ).withColumn("pkey", codecs.chunk_partition_col(cfg.host_buckets))
-        ch_tbl = tier_tables[f"chunks_{tier}"]
-        _swap_partitions(
-            ch_tbl,
-            ch,
-            {f"{hb:04d}|{m}" for hb in range(cfg.host_buckets) for m in months},
-            meta={"tier": tier, "host_buckets": cfg.host_buckets, "month_split": True,
-                  "series_snapshot": sid_now},
-            partition_by="pkey",
-            stats_cols=("host", "chunk_start", "last_ts"),
-        )
+        _publish_serving(spark, tier_tables, tier, cfg, spec.meta, months)
+        stats[f"rollup_{tier}_partitions"] = len(tiers.dirty_partition_keys(processed_days, tier))
         stats[f"chunks_{tier}_months"] = len(months)
-
-        # gapfill: full rebuild from the refreshed tier table (see docstring)
-        full_hs = tiers.host_series(tbl.read(spark).drop("pkey"))
-        tier_tables[f"gapfill_{tier}"].commit(
-            gapfill.gapfill(full_hs, tier).withColumn("pkey", tiers.partition_key_col(tier)),
-            mode="replace",
-            meta={"tier": tier, "partition_fmt": tiers.TIER_PARTITION_FMT[tier][1],
-                  "series_snapshot": sid_now},
-            partition_by="pkey",
-            stats_cols=SERVING_STATS,
-            cluster_by=SERVING_CLUSTER,
-            cluster_files=cfg.cluster_files,
-        )
-
-        prev_tbl = tbl
-        prev_fmt = tiers.TIER_PARTITION_FMT[tier][1]
     return stats
 
 
+def _publish_serving(spark, tier_tables, tier, cfg, meta, months=None) -> None:
+    """Publish the serving tables derived from the committed rollup_{tier}:
+
+    - gapfill_{tier}: rebuilt in full. locf/linear windows reach across
+      partition boundaries (an observed point fills forward indefinitely),
+      so partition-local recompute would be WRONG; the input is the
+      rolled-up tier (bounded by time range, not doc count), which keeps
+      the rebuild cheap at any raw-data scale.
+    - chunks_{tier}: replace-committed when ``months`` is None; otherwise
+      only those months are re-encoded and swapped (all host buckets of
+      each). Chunk groups are (host, tier, month), independent by
+      construction (split_by_month).
+
+    ``meta`` (the sync marker) is recorded on both with the tier's own
+    keys."""
+    tbl = tier_tables[f"rollup_{tier}"]
+    hs = tiers.host_series(tbl.read(spark).drop("pkey"))
+    tier_tables[f"gapfill_{tier}"].commit(
+        gapfill.gapfill(hs, tier).withColumn("pkey", tiers.partition_key_col(tier)),
+        mode="replace",
+        meta={"tier": tier, "partition_fmt": tiers.TIER_PARTITION_FMT[tier][1], **meta},
+        partition_by="pkey",
+        stats_cols=SERVING_STATS,
+        cluster_by=SERVING_CLUSTER,
+        cluster_files=cfg.cluster_files,
+    )
+    if months is not None:
+        in_months = tbl.read(
+            spark,
+            partition_filter=lambda v: any(v.startswith(m) or m.startswith(v) for m in months),
+        ).drop("pkey")
+        hs = tiers.host_series(
+            in_months.filter(F.date_format("bucket_ts", "yyyy-MM").isin(sorted(months)))
+        )
+    ch = codecs.encode_chunks(
+        hs, tier, max_points_per_chunk=cfg.chunk_max_points, split_by_month=True
+    ).withColumn("pkey", codecs.chunk_partition_col(cfg.host_buckets))
+    ch_meta = {"tier": tier, "host_buckets": cfg.host_buckets, "month_split": True, **meta}
+    ch_tbl = tier_tables[f"chunks_{tier}"]
+    if months is None:
+        ch_tbl.commit(
+            ch, mode="replace", meta=ch_meta, partition_by="pkey",
+            stats_cols=("host", "chunk_start", "last_ts"),
+        )
+    else:
+        ch_tbl.replace_partitions(
+            ch, {f"{hb:04d}|{m}" for hb in range(cfg.host_buckets) for m in months},
+            meta=ch_meta,
+        )
+
+
 _STATS_INCONCLUSIVE = object()
+
+
+def _day_epoch(day: str) -> int:
+    """Epoch second of an ISO day's UTC midnight."""
+    return int(dt.datetime.fromisoformat(day).replace(tzinfo=dt.timezone.utc).timestamp())
 
 
 def _manifest_max_below(tbl, bound: int):
@@ -322,8 +305,6 @@ def _truncation_watermark_epoch(tbl) -> int | None:
     no surviving evidence — either never truncated (a plain rebuild from
     this source is exact) or the evidence was vacuumed (the caller falls
     back to a content-based conservative floor)."""
-    import datetime as dt
-
     best = None
     try:
         snaps = tbl.snapshots()
@@ -338,14 +319,9 @@ def _truncation_watermark_epoch(tbl) -> int | None:
             # tier drops record pkey-format keys here, covered by
             # retention_cutoff in the same meta
             try:
-                e = int(
-                    dt.datetime.fromisoformat(db)
-                    .replace(tzinfo=dt.timezone.utc)
-                    .timestamp()
-                )
+                best = max(best or 0, _day_epoch(db))
             except ValueError:
                 continue
-            best = max(best or 0, e)
     return best
 
 
@@ -358,6 +334,32 @@ def _tier_has_rows_strictly_below(spark, tbl, bound: int) -> bool:
         sec = F.col("bucket_ts").cast("long")
         return tbl.read(spark).filter(sec < bound).limit(1).count() > 0
     return mx is not None
+
+
+def _preserve_floor(spark, tbl, step: int, src_min: int, src_wm: int | None) -> int | None:
+    """First bucket start (epoch sec) of ``tbl`` that its source — whose
+    oldest surviving instant is ``src_min`` and whose retention truncation
+    watermark is ``src_wm`` — can rebuild; the tier's rows below it are
+    preserved history. None = the source covers everything the tier knows,
+    so a plain rebuild is exact.
+
+    The floor is the source's truncation bound when evidence survives, NOT
+    its min observed instant: flooring at the observed minimum would
+    preserve the coarse bucket straddling the data's NATURAL start from the
+    old tier, pinning a stale value whenever a backfill (refresh_days)
+    legitimately rewrote history inside it. With no evidence the rule is
+    content-based: floor at the observed minimum only when the tier
+    provably holds buckets STRICTLY before the one containing ``src_min``
+    (pre-source history ⇒ a truncation whose evidence was vacuumed). That
+    bound equals ceil(src_min) − step when src_min straddles a bucket, but
+    ceil(src_min) itself when src_min is grid-aligned (e.g. the 1h tier,
+    whose src_min is a day start) — probing one step lower there would miss
+    history in between. Shared by the rebuild and verify_job."""
+    if src_wm is not None:
+        return -(-src_wm // step) * step
+    if _tier_has_rows_strictly_below(spark, tbl, (src_min // step) * step):
+        return -(-src_min // step) * step
+    return None
 
 
 def _checksum(df) -> str:
@@ -426,8 +428,6 @@ def run_rollup_job(
     # with _snapshots/) additionally gets MANIFEST pruning — each day
     # iteration hands the scan only that day's files, the Iceberg
     # partition-pruning shape the 100 TB deployment relies on.
-    import os
-
     input_tbl = None
     if os.path.isdir(os.path.join(pages_path, "_snapshots")):
         input_tbl = SnapshotTable(pages_path)
@@ -588,20 +588,20 @@ def run_rollup_job(
     # already exist with this layout, ONLY the partitions dirtied by the
     # newly-processed days are recomputed — each tier cascades from the
     # previous tier's TABLE with a manifest-pruned read, so a daily run
-    # touches O(dirty partitions), never the full series history. First run
-    # (or cfg.incremental_derived=False) takes the full-rebuild path.
+    # touches O(dirty partitions), never the full series history. The first
+    # run, a desynced run and any non-default table_factory (the refresh
+    # addresses its tables at out_dir/rollup_{tier}) take the full rebuild.
     t0 = time.time()
-    out_tables = {}
-    derived_names = [
-        f"{kind}_{tier}" for tier in ("1h", "1d", "30d") for kind in ("rollup", "gapfill", "chunks")
-    ]
-    tier_tables = {name: tf(name) for name in derived_names}
-    out_tables.update(tier_tables)
+    tier_tables = {
+        f"{kind}_{tier}": tf(f"{kind}_{tier}")
+        for tier in TIERS
+        for kind in ("rollup", "gapfill", "chunks")
+    }
     processed_days = todo[:processed]
     sid_now = series_tbl.current_snapshot_id() if series_tbl.exists() else None
     all_exist = all(t.exists() for t in tier_tables.values())
     incremental_ok = (
-        cfg.incremental_derived
+        table_factory is None
         and all_exist
         and processed > 0
         and all(_derived_in_sync(t, series_tbl, sid_before) for t in tier_tables.values())
@@ -611,13 +611,14 @@ def run_rollup_job(
     )
     if incremental_ok:
         stats = _refresh_derived_incremental(
-            spark, tier_tables, series_tbl, processed_days, cfg, sid_now
+            spark, out_dir, tier_tables, series_tbl, processed_days, cfg, sid_now
         )
         metrics.record(
             spark, job_id, stage="derived_incremental",
             kv={"seconds": time.time() - t0, **stats},
         )
     elif not in_sync_now:
+        spec = _rollup_spec(sid_now)
         base = series_tbl.read(spark)
         # HISTORY-PRESERVING rebuild: once 1m retention has truncated the
         # series, a naive rebuild-from-series would replace the coarse tiers
@@ -636,8 +637,6 @@ def run_rollup_job(
         # the plain full rebuild. This makes EVERY desync trigger (crash
         # mid-refresh, maintenance, backend swap) non-destructive by
         # construction.
-        import datetime as _dt
-
         # Coverage lower bound of the surviving series. A series with NO
         # surviving partitions (everything expired, e.g. a long idle gap)
         # covers nothing — the sentinel makes every tier preserve ALL its
@@ -650,11 +649,7 @@ def run_rollup_job(
             s_snap = series_tbl.snapshot(series_tbl.current_snapshot_id())
             s_days = sorted({v for v in s_snap.partitions.values() if v})
             if s_days:
-                series_min_epoch = int(
-                    _dt.datetime.fromisoformat(s_days[0])
-                    .replace(tzinfo=_dt.timezone.utc)
-                    .timestamp()
-                )
+                series_min_epoch = _day_epoch(s_days[0])
             elif not s_snap.files:
                 series_min_epoch = _NOTHING_COVERED  # truly empty series
             else:
@@ -668,47 +663,24 @@ def run_rollup_job(
         src_min = series_min_epoch  # coverage lower bound of the source below
         # truncation watermark of the source (None = no surviving evidence)
         src_wm = _truncation_watermark_epoch(series_tbl) if src_min is not None else None
-        for tier in ("1h", "1d", "30d"):
+        for tier in TIERS:
             tbl = tier_tables[f"rollup_{tier}"]
             src = base if prev_full is None else prev_full
             fresh = tiers.rollup(src, tier)
             # EVERY tier preserves its existing rows for buckets the source
-            # CANNOT REBUILD — and only those. Not just 1h: once expire_tier
-            # has trimmed the 1h tier to its (90-day default) window, a
-            # 1d/30d rebuild from it alone would erase their longer history
-            # the same way a series-truncated 1h rebuild would. The
-            # preservation floor is the source's retention TRUNCATION bound
-            # (surviving snapshot meta: expire_tier's retention_cutoff /
-            # the series stage's ISO-day dropped_below), NOT its min
-            # observed instant: flooring at the observed minimum would
-            # preserve the coarse bucket straddling the data's NATURAL
-            # start from the old tier, pinning a stale value whenever a
-            # backfill (refresh_days) legitimately rewrote history inside
-            # it. With no truncation evidence the fallback is content-based:
-            # preserve at the observed-min floor only when the tier provably
-            # holds buckets STRICTLY before the straddling one (pre-source
-            # history ⇒ a truncation whose evidence was vacuumed);
-            # otherwise the source covers everything the tier knows and the
-            # plain rebuild is exact.
+            # CANNOT REBUILD — and only those (_preserve_floor). Not just
+            # 1h: once expire_tier has trimmed the 1h tier to its (90-day
+            # default) window, a 1d/30d rebuild from it alone would erase
+            # their longer history the same way a series-truncated 1h
+            # rebuild would.
             step = series.TIER_SECONDS[tier]
             floor_b = None
             if src_min is not None and tbl.exists():
-                if src_min == _NOTHING_COVERED:
-                    floor_b = _NOTHING_COVERED
-                elif src_wm is not None:
-                    floor_b = -(-src_wm // step) * step
-                else:
-                    cand = -(-src_min // step) * step
-                    # pre-source bound = start of the bucket CONTAINING
-                    # src_min: equals cand−step when src_min straddles a
-                    # bucket, but cand itself when src_min is grid-aligned
-                    # (no straddling bucket — e.g. the 1h tier, whose
-                    # src_min is always a day start); probing cand−step
-                    # there would miss history in [cand−step, cand)
-                    if _tier_has_rows_strictly_below(
-                        spark, tbl, (src_min // step) * step
-                    ):
-                        floor_b = cand
+                floor_b = (
+                    _NOTHING_COVERED
+                    if src_min == _NOTHING_COVERED
+                    else _preserve_floor(spark, tbl, step, src_min, src_wm)
+                )
             if floor_b is not None:
                 sec = F.col("bucket_ts").cast("long")
                 old = tbl.read(spark).select(*fresh.columns).filter(sec < floor_b)
@@ -744,8 +716,7 @@ def run_rollup_job(
             tbl.commit(
                 fresh.withColumn("pkey", tiers.partition_key_col(tier)),
                 mode="replace",
-                meta={"tier": tier, "partition_fmt": tiers.TIER_PARTITION_FMT[tier][1],
-                      "series_snapshot": sid_now},
+                meta=spec.tier_meta(tier),
                 partition_by="pkey",
                 stats_cols=SERVING_STATS,
                 cluster_by=SERVING_CLUSTER,
@@ -753,7 +724,7 @@ def run_rollup_job(
             )
             # re-read the committed tier (small, manifest-backed) instead of
             # recomputing the union lineage for the next cascade step
-            prev_full = tbl.read(spark).drop("pkey") if hasattr(tbl, "snapshot") else fresh
+            prev_full = tbl.read(spark).drop("pkey")
             # next tier's coverage starts at THIS tier's oldest surviving
             # instant (one tiny driver agg over the rolled-up tier — the
             # rebuild path is rare and the tier is retention-bounded)
@@ -770,28 +741,7 @@ def run_rollup_job(
                 # tier's own expiry evidence (the preserve∪rebuild above
                 # already restored everything down to it)
                 src_wm = _truncation_watermark_epoch(tbl)
-            hs = tiers.host_series(prev_full)
-            tier_tables[f"gapfill_{tier}"].commit(
-                gapfill.gapfill(hs, tier).withColumn("pkey", tiers.partition_key_col(tier)),
-                mode="replace",
-                meta={"tier": tier, "partition_fmt": tiers.TIER_PARTITION_FMT[tier][1],
-                      "series_snapshot": sid_now},
-                partition_by="pkey",
-                stats_cols=SERVING_STATS,
-                cluster_by=SERVING_CLUSTER,
-                cluster_files=cfg.cluster_files,
-            )
-            ch = codecs.encode_chunks(
-                hs, tier, max_points_per_chunk=cfg.chunk_max_points, split_by_month=True
-            ).withColumn("pkey", codecs.chunk_partition_col(cfg.host_buckets))
-            tier_tables[f"chunks_{tier}"].commit(
-                ch,
-                mode="replace",
-                meta={"tier": tier, "host_buckets": cfg.host_buckets, "month_split": True,
-                      "series_snapshot": sid_now},
-                partition_by="pkey",
-                stats_cols=("host", "chunk_start", "last_ts"),
-            )
+            _publish_serving(spark, tier_tables, tier, cfg, spec.meta)
         metrics.record(spark, job_id, stage="derived", kv={"seconds": time.time() - t0})
 
     # retention stage (explicit clock; no-op when not requested)
@@ -802,8 +752,6 @@ def run_rollup_job(
         # path). Conservative: only days strictly before the cutoff day.
         policy_1m = cfg.retention.get("1m")
         if policy_1m is not None and series_tbl.exists():
-            import datetime as dt
-
             cutoff_day = dt.datetime.fromtimestamp(
                 retention_now_epoch - policy_1m, dt.timezone.utc
             ).date().isoformat()
@@ -813,10 +761,10 @@ def run_rollup_job(
             before = series_tbl.row_count()
             series_tbl.drop_partitions(spark, below=cutoff_day, meta={"retention": "1m"})
             expired["1m_partitions"] = before - series_tbl.row_count()
-        for tier in ("1h", "1d", "30d"):
+        for tier in TIERS:
             expired[tier] = retention.expire_tier(
                 spark,
-                out_tables[f"rollup_{tier}"],
+                tier_tables[f"rollup_{tier}"],
                 tier,
                 retention_now_epoch,
                 retention_seconds=cfg.retention,

@@ -133,21 +133,10 @@ def check_tier_consistency(
     p_min = p_df.agg(F.min(sec)).first()[0]
     if p_min is None:
         return {"ok": False, "error": f"{parent} tier is empty"}
-    # the preserved span uses EXACTLY the rebuild's truncation-aware rule
-    # (rollup_job): floor at the parent's retention truncation bound when
-    # evidence survives; with none, a conservative observed-min floor only
-    # when the child provably holds pre-parent buckets; otherwise every
-    # child bucket — including the one straddling the data's natural start
-    # — is fully rebuildable from the parent and must match.
-    from .rollup_job import _tier_has_rows_strictly_below, _truncation_watermark_epoch
+    # the preserved span is EXACTLY the rebuild's (rollup_job._preserve_floor)
+    from .rollup_job import _preserve_floor, _truncation_watermark_epoch
 
-    wm = _truncation_watermark_epoch(p_tbl)
-    if wm is not None:
-        floor_b = -(-wm // step) * step
-    elif _tier_has_rows_strictly_below(spark, c_tbl, (p_min // step) * step):
-        floor_b = -(-p_min // step) * step
-    else:
-        floor_b = None
+    floor_b = _preserve_floor(spark, c_tbl, step, p_min, _truncation_watermark_epoch(p_tbl))
 
     c_cov = c_df.select(*cols)
     e_cov = expected

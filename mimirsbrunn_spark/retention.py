@@ -88,21 +88,14 @@ def expire_tier(
             table.drop_partitions(spark, below=key, meta=meta)
         # the straddling partition holds rows on both sides of the cutoff:
         # one ATOMIC replace_partitions swap (a separate drop + append would
-        # open a crash window with the partition's surviving rows deleted)
+        # open a crash window with the partition's surviving rows deleted),
+        # written in the table's declared layout
         cur = table.snapshot(table.current_snapshot_id())
         if any(cur.partitions.get(f) == key for f in cur.files):
             part = table.read(spark, partition_min=key, partition_max=key)
             kept = part.filter(F.col("bucket_ts").cast("long") >= cutoff)
             if kept.count() < table.partition_row_count(key):
-                table.replace_partitions(
-                    kept,
-                    {key},
-                    meta=meta,
-                    partition_by=lay.get("partition_by"),
-                    stats_cols=tuple(lay.get("stats_cols", ())),
-                    cluster_by=tuple(lay.get("cluster_by", ())),
-                    cluster_files=lay.get("cluster_files"),
-                )
+                table.replace_partitions(kept, {key}, meta=meta)
         return before - table.row_count()
 
     df = table.read(spark)

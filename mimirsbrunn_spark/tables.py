@@ -139,6 +139,38 @@ def cluster_for_write(df, partition_by, cluster_by, cluster_files):
     )
 
 
+def _inherit_layout(declared: dict, op: str, partition_by, stats_cols, cluster_by, cluster_files):
+    """The layout an append or a partition swap writes: the table's
+    DECLARED layout, field by field, wherever the call left a field unset.
+    A write that published only the layout its caller passed would
+    silently downgrade a clustered/partitioned serving table (no more
+    manifest pruning, zone maps or partitioned-retention fast path) the
+    moment any caller forgot a field. An explicit value contradicting a
+    declared one is an error, not a silent respec (replace the table to
+    change its layout). ``cluster_files`` is a per-write file-count tuning
+    knob, not layout identity: it inherits but may be overridden."""
+    declared = declared or {}
+    for name, given in (
+        ("partition_by", partition_by),
+        ("stats_cols", tuple(stats_cols) if stats_cols else None),
+        ("cluster_by", tuple(cluster_by) if cluster_by else None),
+    ):
+        have = declared.get(name)
+        if name != "partition_by" and have is not None:
+            have = tuple(have)
+        if have and given is not None and given != have:
+            raise ValueError(
+                f"{op} {name}={given!r} conflicts with the table's declared "
+                f"layout {have!r} — replace the table to change its layout"
+            )
+    return (
+        partition_by if partition_by is not None else declared.get("partition_by"),
+        tuple(stats_cols or declared.get("stats_cols") or ()),
+        tuple(cluster_by or declared.get("cluster_by") or ()),
+        cluster_files if cluster_files is not None else declared.get("cluster_files"),
+    )
+
+
 class SnapshotTable:
     """A single table with atomic snapshot commits over parquet."""
 
@@ -221,54 +253,21 @@ class SnapshotTable:
         extra shuffle of the committed rows — worth it on serving tables
         read selectively, wasted on tables always read in full.
         ``cluster_files`` pins the range-partition count (file count per
-        write); None lets AQE right-size by advisory partition size."""
+        write); None lets AQE right-size by advisory partition size.
+
+        An append conforms to the table's declared layout
+        (``_inherit_layout``); a replace declares a new one."""
         assert mode in ("append", "replace")
-        # An append must preserve the table's DECLARED layout, not replace
-        # it with whatever this one call passed: an ad-hoc append with no
-        # layout args would otherwise publish layout {} — silently
-        # downgrading a clustered/partitioned serving table (no more
-        # manifest pruning, zone maps, or partitioned-retention fast path)
-        # the moment any side channel appends a batch. A call with NO
-        # explicit layout inherits the parent's (the new files are written
-        # conforming to it); a call with a CONFLICTING partition column is
-        # an error, not a silent respec.
         explicit_pby = partition_by is not None
         prev_pre = None
         if mode == "append":
             cur = self.current_snapshot_id()
             if cur is not None:
                 prev_pre = self.snapshot(cur)
-                plh = prev_pre.layout or {}
-                # merge FIELD BY FIELD: each unspecified layout component
-                # inherits the parent's (an append passing only
-                # partition_by must not silently drop the declared
-                # stats_cols/cluster_by — appends conform to the declared
-                # layout, they never respec it); explicit values that
-                # CONTRADICT a declared counterpart are errors, not silent
-                # respecs. cluster_files is a per-write file-count tuning
-                # knob, not layout identity — freely overridable.
-                for field, given in (
-                    ("partition_by", partition_by),
-                    ("stats_cols", tuple(stats_cols) if stats_cols else None),
-                    ("cluster_by", tuple(cluster_by) if cluster_by else None),
-                ):
-                    declared = plh.get(field)
-                    if field != "partition_by" and declared is not None:
-                        declared = tuple(declared)
-                    if declared and given is not None and given != declared:
-                        raise ValueError(
-                            f"append {field}={given!r} conflicts with the "
-                            f"table's declared layout {declared!r} — "
-                            "replace the table to change its layout"
-                        )
-                if partition_by is None:
-                    partition_by = plh.get("partition_by")
-                if not stats_cols:
-                    stats_cols = tuple(plh.get("stats_cols", ()) or ())
-                if not cluster_by:
-                    cluster_by = tuple(plh.get("cluster_by", ()) or ())
-                if cluster_files is None:
-                    cluster_files = plh.get("cluster_files")
+                partition_by, stats_cols, cluster_by, cluster_files = _inherit_layout(
+                    prev_pre.layout, "append", partition_by, stats_cols, cluster_by,
+                    cluster_files,
+                )
         new = self._write_fileset(df, partition_by, stats_cols, cluster_by, cluster_files)
 
         # Commit under the table lock: the parent is re-read inside the
@@ -336,8 +335,18 @@ class SnapshotTable:
         deleted in the current snapshot; this primitive has no such window —
         the data write happens first, the manifest swap is a single
         os.replace. Used by retention's straddling-partition rewrite and the
-        incremental tier refresh."""
+        incremental tier refresh.
+
+        The new files conform to the table's declared layout the way an
+        append does (``_inherit_layout``): callers pass only what differs."""
         values = {str(v) for v in values}
+        cur = self.current_snapshot_id()
+        prev_pre = self.snapshot(cur) if cur is not None else None
+        if prev_pre is not None:
+            partition_by, stats_cols, cluster_by, cluster_files = _inherit_layout(
+                prev_pre.layout, "replace_partitions", partition_by, stats_cols,
+                cluster_by, cluster_files,
+            )
         new = self._write_fileset(df, partition_by, stats_cols, cluster_by, cluster_files)
         # Every written row must belong to a replaced partition — a df with
         # stray rows would append them while their partitions' old files are
@@ -351,7 +360,11 @@ class SnapshotTable:
         with self._lock():
             parent = self.current_snapshot_id()
             if parent is not None:
-                prev = self.snapshot(parent)
+                prev = (
+                    prev_pre
+                    if prev_pre is not None and prev_pre.snapshot_id == parent
+                    else self.snapshot(parent)
+                )
                 # live files WITHOUT a partition value can never be replaced
                 # by ANY values set: a partition-scoped overwrite on top of
                 # them keeps their rows while appending recomputed ones —

@@ -52,9 +52,9 @@ def test_config_layering(tmp_path):
     cfg = EngineConfig.load()
     assert cfg.n_salts is None  # auto: resolved per-session by series._auto_salts
     toml = tmp_path / "engine.toml"
-    toml.write_text("[engine]\nn_salts = 8\nminhash_k = 64\n")
+    toml.write_text("[engine]\nn_salts = 8\nhost_buckets = 64\n")
     cfg = EngineConfig.load(str(toml))
-    assert cfg.n_salts == 8 and cfg.minhash_k == 64
+    assert cfg.n_salts == 8 and cfg.host_buckets == 64
     cfg = EngineConfig.load(str(toml), n_salts=4)
     assert cfg.n_salts == 4  # override wins over file
     with pytest.raises(KeyError):
@@ -454,6 +454,33 @@ def test_replace_partitions_is_single_atomic_snapshot(spark, tmp_path):
     snap = tbl.snapshot(tbl.current_snapshot_id())
     assert snap.row_count == 6
     assert all(f in snap.file_stats for f in snap.files)
+
+
+def test_replace_partitions_inherits_declared_layout(spark, tmp_path):
+    """A partition swap that names no layout writes the table's DECLARED
+    one (partition_by, stats_cols, cluster_by, cluster_files), as an append
+    does; an explicit value contradicting it raises."""
+    tbl = SnapshotTable(str(tmp_path / "t"))
+    df = spark.createDataFrame(
+        [(d, h, i) for d in ("a", "b") for h in ("x", "y") for i in range(3)],
+        "p string, host string, v int",
+    )
+    tbl.commit(
+        df, partition_by="p", stats_cols=("host", "v"), cluster_by=("host",), cluster_files=2
+    )
+    declared = tbl.snapshot(tbl.current_snapshot_id()).layout
+    assert declared == {
+        "partition_by": "p", "stats_cols": ["host", "v"], "cluster_by": ["host"],
+        "cluster_files": 2,
+    }
+    repl = spark.createDataFrame([("b", "x", 99), ("b", "y", 98)], "p string, host string, v int")
+    tbl.replace_partitions(repl, {"b"})
+    snap = tbl.snapshot(tbl.current_snapshot_id())
+    assert snap.layout == declared
+    assert all(f in snap.file_stats for f in snap.files)
+    assert sorted(set(snap.partitions.values())) == ["a", "b"]
+    with pytest.raises(ValueError, match="conflicts with the table's declared layout"):
+        tbl.replace_partitions(repl, {"b"}, stats_cols=("v",))
 
 
 def test_update_meta_is_metadata_only(spark, tmp_path):

@@ -294,40 +294,3 @@ def test_rollup_job_backend_agnostic(spark, small_pages_path, tmp_path):
         a, b = a.select(*cols), b.select(*cols)
         assert a.count() == b.count() > 0, name
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, name
-
-
-def test_swap_partitions_fallback_strips_sync_marker(spark, tmp_path):
-    """On a backend without replace_partitions, _swap_partitions falls back
-    to drop + append — and the DROP commit must NOT carry series_snapshot:
-    a crash before the append would otherwise read as in-sync forever
-    (permanent hole). The append carries it."""
-    from mimirsbrunn_spark.jobs.rollup_job import _swap_partitions
-
-    class MinimalTable:
-        """SnapshotTable minus replace_partitions (forces the fallback)."""
-
-        def __init__(self, path):
-            self._t = SnapshotTable(path)
-
-        def drop_partition_values(self, values, meta=None):
-            self.drop_meta = dict(meta or {})
-            return self._t.drop_partition_values(values, meta=meta)
-
-        def commit(self, df, **kw):
-            self.append_meta = dict(kw.get("meta") or {})
-            return self._t.commit(df, **kw)
-
-    tbl = MinimalTable(str(tmp_path / "t"))
-    df = spark.createDataFrame([("a", 1), ("b", 2)], "p string, v int")
-    tbl.commit(df, partition_by="p")
-    _swap_partitions(
-        tbl,
-        spark.createDataFrame([("b", 9)], "p string, v int"),
-        {"b"},
-        meta={"tier": "1h", "series_snapshot": 5},
-        partition_by="p",
-    )
-    assert "series_snapshot" not in tbl.drop_meta
-    assert tbl.append_meta.get("series_snapshot") == 5
-    got = sorted((r.p, r.v) for r in tbl._t.read(spark).collect())
-    assert got == [("a", 1), ("b", 9)]
