@@ -5,6 +5,13 @@ Each entry here backs one key of ``__spark_entry__.queries()`` /
 schema and an order-insensitive value hash — so both sides must produce
 IDENTICAL values, including floats.
 
+The Spark side calls the shipped engine: every series, tier and gap-fill
+gate runs the gate's ``pages`` through ``series.series_1m`` →
+``tiers.cascade`` (→ ``tiers.host_series``, ``gapfill.gapfill``, the
+operator under test) via ``_series``/``_engine_tiers``. The DuckDB SQL is
+the independent oracle, written straight from the pinned semantics — so a
+green hash certifies the engine, not a re-derivation of it.
+
 Cross-engine determinism rules used throughout (SURVEY.md §7.5):
 - time buckets are BIGINT epoch seconds (``bucket_sec``), floored with
   integer arithmetic — no timestamp objects cross the comparison boundary;
@@ -22,6 +29,8 @@ page_size = byte length of props.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,7 +61,8 @@ def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark twin of PAGES_CTE."""
+    """Spark twin of PAGES_CTE, plus the raw ``props`` that the engine
+    input of ``_engine_tiers`` carries as its html."""
     ev = _table(spark, sf_dir, "events")
     ts = F.col("ts").cast("timestamp")
     lang_arr = F.array(*[F.lit(l) for l in LANGS])
@@ -63,30 +73,48 @@ def pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.octet_length("props").cast("long").alias("page_size"),
         "event_id",
         "user_id",
+        "props",
     )
 
 
-def _bucket(col, step: int):
-    return (F.col(col) - (F.col(col) % step)).alias("bucket_sec")
-
-
 # ---------------------------------------------------------------------------
-# rollup tier queries (engine core, SURVEY.md §7 — series + cascade)
+# the engine under test (SURVEY.md §7 — series + cascade)
 # ---------------------------------------------------------------------------
 
 
-def _tier_query(step: int):
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return (
-            pages_df(spark, sf_dir)
-            .groupBy("host", _bucket("warc_sec", step), "lang")
-            .agg(
-                F.count(F.lit(1)).alias("doc_count"),
-                F.sum("page_size").alias("bytes_sum"),
-            )
-        )
+def _engine_tiers(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The gate's pages through the shipped engine: ``series.series_1m``
+    (fused dedup + salted 1m aggregate) → ``tiers.cascade``. Two fixed
+    input rules: url = 'https://' || host || '/' || event_id is unique per
+    event, so the engine's (url, warc_ts) dedup keeps every event, as the
+    oracle's COUNT(*) does; html is props as bytes, so the engine's
+    length(html) is the oracle's strlen(props)."""
+    from . import series, tiers
 
-    return q
+    p = pages_df(spark, sf_dir).select(
+        F.concat(F.lit("https://"), "host", F.lit("/"), F.col("event_id").cast("string"))
+        .alias("url"),
+        F.timestamp_seconds("warc_sec").alias("warc_ts"),
+        F.col("props").cast("binary").alias("html"),
+        "lang",
+    )
+    return tiers.cascade(series.series_1m(p))
+
+
+def _series(
+    spark: SparkSession, sf_dir: str, tier: str, by: tuple[str, ...] = ("host",)
+) -> DataFrame:
+    """One engine tier as (*by, bucket_sec, doc_count, bytes_sum): the host
+    series (``tiers.host_series``) when grouped by host alone, else the
+    tier rows as the engine publishes them (by host and lang)."""
+    from . import tiers
+
+    t = _engine_tiers(spark, sf_dir)[tier]
+    if by == ("host",):
+        t = tiers.host_series(t)
+    return t.select(
+        *by, F.col("bucket_ts").cast("long").alias("bucket_sec"), "doc_count", "bytes_sum"
+    )
 
 
 def _tier_sql(step: int) -> str:
@@ -104,8 +132,8 @@ GROUP BY 1, 2, 3
 
 def q_avg_page_size_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived read-time metric: avg = bytes_sum/doc_count (single division
-    of exact integers → IEEE-deterministic)."""
-    t = _tier_query(86400)(spark, sf_dir)
+    of exact integers → IEEE-deterministic) over the engine's 1d tier."""
+    t = _series(spark, sf_dir, "1d", by=("host", "lang"))
     return t.select(
         "host",
         "bucket_sec",
@@ -132,9 +160,9 @@ def q_topk_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1-style deterministic top-k page (orderBy desc + tiebreak + limit;
     reference /root/reference/libs/bragi/src/query.rs:527-535)."""
     return (
-        pages_df(spark, sf_dir)
+        _series(spark, sf_dir, "30d")
         .groupBy("host")
-        .agg(F.count(F.lit(1)).alias("doc_count"), F.sum("page_size").alias("bytes_sum"))
+        .agg(F.sum("doc_count").alias("doc_count"), F.sum("bytes_sum").alias("bytes_sum"))
         .orderBy(F.desc("doc_count"), F.asc("host"))
         .limit(10)
     )
@@ -171,11 +199,12 @@ FROM pages GROUP BY 1
 
 
 def q_per_lang_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language document-count series (north-star series family)."""
+    """Per-language document-count series (north-star series family),
+    summed over hosts from the engine's 1d tier."""
     return (
-        pages_df(spark, sf_dir)
-        .groupBy("lang", _bucket("warc_sec", 86400))
-        .agg(F.count(F.lit(1)).alias("doc_count"))
+        _series(spark, sf_dir, "1d", by=("host", "lang"))
+        .groupBy("lang", "bucket_sec")
+        .agg(F.sum("doc_count").alias("doc_count"))
     )
 
 
@@ -193,39 +222,17 @@ FROM pages GROUP BY 1, 2
 
 
 def q_gapfill_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
+    """locf + linear gap-fill (``gapfill.gapfill``) of the engine's 1h host
+    series."""
+    from . import gapfill, tiers
 
-    hs = (
-        pages_df(spark, sf_dir)
-        .groupBy("host", _bucket("warc_sec", 3600))
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-    )
-    bounds = hs.groupBy("host").agg(
-        F.min("bucket_sec").alias("_min"), F.max("bucket_sec").alias("_max")
-    )
-    sp = bounds.select(
-        "host", F.explode(F.sequence("_min", "_max", F.lit(3600))).alias("bucket_sec")
-    )
-    j = sp.join(hs, ["host", "bucket_sec"], "left").select(
-        "host", "bucket_sec", F.col("doc_count").cast("double").alias("value")
-    )
-    w = Window.partitionBy("host").orderBy("bucket_sec")
-    w_prev = w.rowsBetween(Window.unboundedPreceding, 0)
-    w_next = w.rowsBetween(0, Window.unboundedFollowing)
-    sec = F.col("bucket_sec").cast("double")
-    prev_val = F.last("value", ignorenulls=True).over(w_prev)
-    prev_ts = F.last(F.when(F.col("value").isNotNull(), sec), ignorenulls=True).over(w_prev)
-    next_val = F.first("value", ignorenulls=True).over(w_next)
-    next_ts = F.first(F.when(F.col("value").isNotNull(), sec), ignorenulls=True).over(w_next)
-    linear = F.when(F.col("value").isNotNull(), F.col("value")).otherwise(
-        prev_val + (next_val - prev_val) * ((sec - prev_ts) / (next_ts - prev_ts))
-    )
-    return j.select(
+    hs = tiers.host_series(_engine_tiers(spark, sf_dir)["1h"])
+    return gapfill.gapfill(hs, "1h", metrics=("doc_count",)).select(
         "host",
-        "bucket_sec",
-        F.coalesce("value", prev_val).alias("value_locf"),
-        linear.alias("value_linear"),
-        F.col("value").isNull().alias("is_filled"),
+        F.col("bucket_ts").cast("long").alias("bucket_sec"),
+        "value_locf",
+        "value_linear",
+        "is_filled",
     )
 
 
@@ -321,11 +328,8 @@ def q_time_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     compute identical window bounds."""
     from .operators.counters import time_weighted_avg
 
-    hs = (
-        pages_df(spark, sf_dir)
-        .groupBy("host", _bucket("warc_sec", 3600))
-        .agg(F.sum("page_size").alias("value"))
-        .withColumnRenamed("bucket_sec", "ts_sec")
+    hs = _series(spark, sf_dir, "1h").select(
+        "host", F.col("bucket_sec").alias("ts_sec"), F.col("bytes_sum").alias("value")
     )
     mn, mx = hs.agg(F.min("ts_sec"), F.max("ts_sec")).first()
     q = (mx - mn) // 4
@@ -374,7 +378,6 @@ def q_range_total_stitched(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality IS the cascade-stitching invariant. t0/t1 derive from the data
     with integer arithmetic (60 s-aligned) so both engines use identical
     bounds."""
-    from .series import TIER_SECONDS
     from .tiers import stitched_totals
 
     p = pages_df(spark, sf_dir)
@@ -383,14 +386,7 @@ def q_range_total_stitched(spark: SparkSession, sf_dir: str) -> DataFrame:
     q2 = ((mx - mn) // 9 // 60) * 60
     t0 = (mn - mn % 60) + q1
     t1 = (mx - mx % 60) - q2
-    tier_dfs = {
-        tier: p.groupBy("host", _bucket("warc_sec", step)).agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.sum("page_size").alias("bytes_sum"),
-        )
-        for tier, step in TIER_SECONDS.items()
-    }
-    return stitched_totals(tier_dfs, t0, t1, bucket="bucket_sec")
+    return stitched_totals(_engine_tiers(spark, sf_dir), t0, t1)
 
 
 SQL_RANGE_TOTAL_STITCHED = f"""
@@ -416,11 +412,8 @@ def _minute_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte counter wrapped modulo 200 (resets occur at every SF)."""
     from pyspark.sql import Window
 
-    hs = (
-        pages_df(spark, sf_dir)
-        .groupBy("host", _bucket("warc_sec", 60))
-        .agg(F.sum("page_size").alias("b"))
-        .withColumnRenamed("bucket_sec", "ts_sec")
+    hs = _series(spark, sf_dir, "1m").select(
+        "host", F.col("bucket_sec").alias("ts_sec"), F.col("bytes_sum").alias("b")
     )
     w = Window.partitionBy("host").orderBy("ts_sec")
     return hs.select("host", "ts_sec", (F.sum("b").over(w) % 200).alias("counter"))
@@ -472,11 +465,8 @@ def q_ohlc_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/counters.py ohlc) — all-integer output."""
     from .operators.counters import ohlc
 
-    hs = (
-        pages_df(spark, sf_dir)
-        .groupBy("host", _bucket("warc_sec", 60))
-        .agg(F.sum("page_size").alias("value"))
-        .withColumnRenamed("bucket_sec", "ts_sec")
+    hs = _series(spark, sf_dir, "1m").select(
+        "host", F.col("bucket_sec").alias("ts_sec"), F.col("bytes_sum").alias("value")
     )
     return ohlc(hs, ["host"], bucket_sec=3600)
 
@@ -505,11 +495,8 @@ def q_state_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
     locf segments clipped to the middle half of the time range."""
     from .operators.counters import state_durations
 
-    hs = (
-        pages_df(spark, sf_dir)
-        .groupBy("host", _bucket("warc_sec", 3600))
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-        .withColumnRenamed("bucket_sec", "ts_sec")
+    hs = _series(spark, sf_dir, "1h").select(
+        "host", F.col("bucket_sec").alias("ts_sec"), "doc_count"
     )
     hs = hs.withColumn(
         "state",
@@ -562,12 +549,7 @@ def q_heartbeat_uptime(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval-union uptime per host."""
     from .operators.counters import heartbeat_uptime
 
-    hb = (
-        pages_df(spark, sf_dir)
-        .select("host", _bucket("warc_sec", 60))
-        .distinct()
-        .withColumnRenamed("bucket_sec", "ts_sec")
-    )
+    hb = _series(spark, sf_dir, "1m").select("host", F.col("bucket_sec").alias("ts_sec"))
     return heartbeat_uptime(hb, ["host"], ttl_sec=300)
 
 
@@ -604,11 +586,8 @@ def q_m4_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     first/last/min/max carriers per bucket."""
     from .operators.downsample import m4_downsample
 
-    hs = (
-        pages_df(spark, sf_dir)
-        .groupBy("host", _bucket("warc_sec", 60))
-        .agg(F.sum("page_size").alias("value"))
-        .withColumnRenamed("bucket_sec", "ts_sec")
+    hs = _series(spark, sf_dir, "1m").select(
+        "host", F.col("bucket_sec").alias("ts_sec"), F.col("bytes_sum").alias("value")
     )
     return m4_downsample(hs, ["host"], bucket_sec=7200)
 
@@ -664,17 +643,6 @@ GROUP BY 1, 2
 """
 
 
-def _hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared fixture for the anomaly/forecast gates: per-host hourly doc
-    counts."""
-    return (
-        pages_df(spark, sf_dir)
-        .groupBy("host", _bucket("warc_sec", 3600))
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-        .withColumnRenamed("bucket_sec", "ts_sec")
-    )
-
-
 HOURLY_CTE = """
 hs AS (
   SELECT host, warc_sec - (warc_sec % 3600) AS ts_sec, COUNT(*) AS value
@@ -690,16 +658,20 @@ def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.anomaly import zscore_anomaly
 
     out = zscore_anomaly(
-        _hourly_counts(spark, sf_dir),
+        _series(spark, sf_dir, "1h"),
         keys=("host",),
-        ts_col="ts_sec",
+        ts_col="bucket_sec",
         value_col="doc_count",
         window_n=24,
         threshold=2.0,
         min_points=8,
     )
     return out.select(
-        "host", "ts_sec", "value", F.round("zscore", 6).alias("zscore_r"), "is_anomaly"
+        "host",
+        F.col("bucket_sec").alias("ts_sec"),
+        "value",
+        F.round("zscore", 6).alias("zscore_r"),
+        "is_anomaly",
     )
 
 
@@ -735,9 +707,9 @@ def q_forecast_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.anomaly import forecast_seasonal_naive
 
     return forecast_seasonal_naive(
-        _hourly_counts(spark, sf_dir),
+        _series(spark, sf_dir, "1h"),
         keys=("host",),
-        ts_col="ts_sec",
+        ts_col="bucket_sec",
         value_col="doc_count",
         step_sec=3600,
         season_n=24,
@@ -949,10 +921,10 @@ FROM winned
 
 def core_queries() -> dict:
     qs = {
-        "series_1m": _tier_query(60),
-        "rollup_1h": _tier_query(3600),
-        "rollup_1d": _tier_query(86400),
-        "rollup_30d": _tier_query(2_592_000),
+        "series_1m": partial(_series, tier="1m", by=("host", "lang")),
+        "rollup_1h": partial(_series, tier="1h", by=("host", "lang")),
+        "rollup_1d": partial(_series, tier="1d", by=("host", "lang")),
+        "rollup_30d": partial(_series, tier="30d", by=("host", "lang")),
         "avg_page_size_1d": q_avg_page_size_1d,
         "topk_hosts": q_topk_hosts,
         "dedup_exact": q_dedup_exact,
@@ -1036,32 +1008,17 @@ def core_oracle_sql() -> dict:
     }
 
 def q_gapfill_lang_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language gap-filled daily series (north-star per-language family)."""
-    from pyspark.sql import Window
+    """Per-language gap-filled daily series (north-star per-language
+    family): ``gapfill.gapfill`` of the engine's 1d tier by (host, lang)."""
+    from . import gapfill
 
-    hs = (
-        pages_df(spark, sf_dir)
-        .groupBy("host", "lang", _bucket("warc_sec", 86400))
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-    )
-    bounds = hs.groupBy("host", "lang").agg(
-        F.min("bucket_sec").alias("_min"), F.max("bucket_sec").alias("_max")
-    )
-    sp = bounds.select(
-        "host", "lang", F.explode(F.sequence("_min", "_max", F.lit(86400))).alias("bucket_sec")
-    )
-    j = sp.join(hs, ["host", "lang", "bucket_sec"], "left").select(
-        "host", "lang", "bucket_sec", F.col("doc_count").cast("double").alias("value")
-    )
-    w = Window.partitionBy("host", "lang").orderBy("bucket_sec")
-    w_prev = w.rowsBetween(Window.unboundedPreceding, 0)
-    prev_val = F.last("value", ignorenulls=True).over(w_prev)
-    return j.select(
+    t = _engine_tiers(spark, sf_dir)["1d"]
+    return gapfill.gapfill(t, "1d", metrics=("doc_count",), by=("host", "lang")).select(
         "host",
         "lang",
-        "bucket_sec",
-        F.coalesce("value", prev_val).alias("value_locf"),
-        F.col("value").isNull().alias("is_filled"),
+        F.col("bucket_ts").cast("long").alias("bucket_sec"),
+        "value_locf",
+        "is_filled",
     )
 
 
@@ -1096,22 +1053,9 @@ def q_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode (sorted mapInArrow) → distributed decode (mapInPandas). Since
     decode∘encode is the identity, the DuckDB oracle is simply the hourly
     series SQL — the bitstream round-trip itself is what is being verified."""
-    from . import codecs
+    from . import codecs, tiers
 
-    hs = (
-        pages_df(spark, sf_dir)
-        .groupBy("host", _bucket("warc_sec", 3600))
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.sum("page_size").alias("bytes_sum"),
-        )
-        .select(
-            "host",
-            F.timestamp_seconds("bucket_sec").alias("bucket_ts"),
-            "doc_count",
-            "bytes_sum",
-        )
-    )
+    hs = tiers.host_series(_engine_tiers(spark, sf_dir)["1h"])
     chunks = codecs.encode_chunks(hs, "1h")
     out = codecs.decode_chunks(chunks)
     return out.select(
@@ -1146,14 +1090,7 @@ def q_series_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT sufficient statistics, one IEEE formula per host)."""
     from .operators.stats import series_corr
 
-    hb = (
-        pages_df(spark, sf_dir)
-        .groupBy("host", _bucket("warc_sec", 3600))
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.sum("page_size").alias("bytes_sum"),
-        )
-    )
+    hb = _series(spark, sf_dir, "1h")
     return series_corr(hb, ["host"], "doc_count", "bytes_sum")
 
 
@@ -1206,11 +1143,8 @@ def q_idelta_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     (counters.idelta — last two samples inside each (host, hour))."""
     from .operators.counters import idelta
 
-    hs = (
-        pages_df(spark, sf_dir)
-        .groupBy("host", _bucket("warc_sec", 60))
-        .agg(F.sum("page_size").alias("b"))
-        .withColumnRenamed("bucket_sec", "ts_sec")
+    hs = _series(spark, sf_dir, "1m").select(
+        "host", F.col("bucket_sec").alias("ts_sec"), F.col("bytes_sum").alias("b")
     )
     return idelta(hs, ["host"], bucket_sec=3600, ts_col="ts_sec", value_col="b")
 
@@ -1360,10 +1294,8 @@ def q_ewma_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE twin, so the 6-decimal-rounded output is exact."""
     from .operators import smooth
 
-    hs = (
-        pages_df(spark, sf_dir)
-        .groupBy("host", _bucket("warc_sec", 3600))
-        .agg(F.sum("page_size").alias("b"))
+    hs = _series(spark, sf_dir, "1h").select(
+        "host", "bucket_sec", F.col("bytes_sum").alias("b")
     )
     out = smooth.ewma(
         hs, 0.25, keys=("host",), ts_col="bucket_sec", value_col="b", out_col="e"
@@ -1403,10 +1335,8 @@ def q_holt_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     PromQL double_exponential_smoothing analog, b_1 pinned to 0)."""
     from .operators import smooth
 
-    hs = (
-        pages_df(spark, sf_dir)
-        .groupBy("host", _bucket("warc_sec", 3600))
-        .agg(F.sum("page_size").alias("b"))
+    hs = _series(spark, sf_dir, "1h").select(
+        "host", "bucket_sec", F.col("bytes_sum").alias("b")
     )
     out = smooth.holt_linear(
         hs, 0.5, 0.25, keys=("host",), ts_col="bucket_sec", value_col="b",
@@ -1460,10 +1390,8 @@ def q_cusum_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     6-decimal-rounded output is exact."""
     from .operators import changepoint
 
-    hs = (
-        pages_df(spark, sf_dir)
-        .groupBy("host", _bucket("warc_sec", 3600))
-        .agg(F.count(F.lit(1)).alias("c"))
+    hs = _series(spark, sf_dir, "1h").select(
+        "host", "bucket_sec", F.col("doc_count").alias("c")
     )
     out = changepoint.cusum_changepoints(
         hs, k=0.5, h=4.0, keys=("host",), ts_col="bucket_sec", value_col="c"
@@ -1532,13 +1460,8 @@ def q_seasonal_z_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is 14:00 today unusual for 14:00 on this host"."""
     from .operators import anomaly
 
-    hs = (
-        pages_df(spark, sf_dir)
-        .groupBy("host", _bucket("warc_sec", 3600))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
     out = anomaly.seasonal_zscore(
-        hs, keys=("host",), ts_col="bucket_sec", value_col="c",
+        _series(spark, sf_dir, "1h"), keys=("host",), ts_col="bucket_sec", value_col="doc_count",
         season_sec=86400, threshold=2.0, min_points=4,
     )
     return out.select(
@@ -1592,13 +1515,8 @@ def q_mad_z_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole row — median, MAD, z at 6 dp — is hash-exact vs DuckDB."""
     from .operators import anomaly
 
-    hs = (
-        pages_df(spark, sf_dir)
-        .groupBy("host", _bucket("warc_sec", 3600))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
     out = anomaly.mad_zscore(
-        hs, keys=("host",), ts_col="bucket_sec", value_col="c",
+        _series(spark, sf_dir, "1h"), keys=("host",), ts_col="bucket_sec", value_col="doc_count",
         threshold=3.5, min_points=8,
     )
     return out.select(
@@ -1661,11 +1579,11 @@ def q_trimmed_mean_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-exact vs DuckDB."""
     from .operators import stats
 
-    m = (
-        pages_df(spark, sf_dir)
-        .groupBy("host", (F.col("warc_sec") - (F.col("warc_sec") % 60)).alias("m_sec"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .withColumn("bucket_sec", F.col("m_sec") - (F.col("m_sec") % 3600))
+    m = _series(spark, sf_dir, "1m").select(
+        "host",
+        F.col("bucket_sec").alias("m_sec"),
+        (F.col("bucket_sec") - (F.col("bucket_sec") % 3600)).alias("bucket_sec"),
+        F.col("doc_count").alias("c"),
     )
     return stats.trimmed_mean(
         m, "c", ("host", "bucket_sec"), trim_pct=10, tiebreak="m_sec"
@@ -1751,11 +1669,12 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import intervals
 
     pg = pages_df(spark, sf_dir)
-    hs = pg.groupBy("host", _bucket("warc_sec", 3600)).agg(
-        F.count(F.lit(1)).alias("c")
-    )
     isl = intervals.busy_islands(
-        hs, F.col("c") >= 2, keys=("host",), ts_col="bucket_sec", step_sec=3600
+        _series(spark, sf_dir, "1h"),
+        F.col("doc_count") >= 2,
+        keys=("host",),
+        ts_col="bucket_sec",
+        step_sec=3600,
     )
     out = intervals.interval_join(
         pg.select("host", "warc_sec", "event_id"),

@@ -131,8 +131,9 @@ def refresh_aux_tiers(
     day_rows: DataFrame,
 ) -> None:
     """Swap in fresh rows for every partition of ``spec``'s tiers that
-    ``days`` dirty. ``day_rows`` are the finest tier's input rows covering
-    those days (rows of other days are built and then filtered out); each
+    ``days`` dirty. ``day_rows`` are the finest tier's input rows of
+    exactly those days: callers read only them (a day filter, or a read
+    pruned to the days' partitions), never the span between them. Each
     coarser tier merges the published child rows of its source span. Every
     swap keeps the table's declared layout."""
     child_tier = None

@@ -190,8 +190,9 @@ def _refresh_derived_incremental(
 
     - rollup_{tier}: the ``rollup`` ContinuousAggregate
       (jobs/aux_refresh.py) recomputes each dirty partition key IN FULL —
-      1h from the manifest-pruned series days, 1d/30d from the child
-      tier's table over exactly the source span the dirty periods need
+      1h from the series partitions of the processed days alone (not
+      the days between them), 1d/30d from the child tier's table over
+      exactly the source span the dirty periods need
       (tiers.source_span handles the epoch-anchored 30d buckets that reach
       across partition boundaries) — and swaps it in with one atomic
       replace_partitions snapshot per tier.
@@ -201,9 +202,7 @@ def _refresh_derived_incremental(
 
     Returns per-stage refreshed-partition counts (metrics payload)."""
     spec = _rollup_spec(sid_now)
-    day_rows = series_tbl.read(
-        spark, partition_min=min(processed_days), partition_max=max(processed_days)
-    )
+    day_rows = series_tbl.read(spark, partition_values=set(processed_days))
     aux_refresh.refresh_aux_tiers(spark, spec, out_dir, processed_days, day_rows)
     stats: dict[str, float] = {}
     for tier in TIERS:

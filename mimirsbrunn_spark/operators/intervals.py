@@ -59,6 +59,13 @@ def busy_islands(
     )
 
 
+def _bucket_id(sec, w: int):
+    """floor(sec / w) in exact long arithmetic: ``(sec - pmod(sec, w)) div
+    w``. A long/long ``/`` is a DOUBLE division, which rounds past 2^53
+    (nanosecond epochs)."""
+    return F.call_function("div", sec - F.pmod(sec, F.lit(w)), F.lit(w))
+
+
 def interval_join(
     left: DataFrame,
     intervals: DataFrame,
@@ -83,17 +90,9 @@ def interval_join(
     intervals = intervals.filter(st < en)
     # buckets overlapped by [start, end): floor(start/W) .. floor((end-1)/W)
     iv = intervals.withColumn(
-        "_bucket",
-        F.explode(
-            F.sequence(
-                F.floor(st / w).cast("long"),
-                F.floor((en - F.lit(1)) / w).cast("long"),
-            )
-        ),
+        "_bucket", F.explode(F.sequence(_bucket_id(st, w), _bucket_id(en - F.lit(1), w)))
     )
-    lt = left.withColumn(
-        "_bucket", F.floor(F.col(ts_col).cast("long") / w).cast("long")
-    )
+    lt = left.withColumn("_bucket", _bucket_id(F.col(ts_col).cast("long"), w))
     cond = [lt[k] == iv[k] for k in keys] + [lt["_bucket"] == iv["_bucket"]]
     contained = (lt[ts_col].cast("long") >= iv[start_col].cast("long")) & (
         lt[ts_col].cast("long") < iv[end_col].cast("long")

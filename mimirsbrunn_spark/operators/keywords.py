@@ -18,8 +18,8 @@ never crosses a join. ``min_df``/``max_df_frac`` prune ubiquitous and
 hapax terms before the window — at 100 TB that is also the memory guard
 for the per-doc window.
 
-N (corpus size) is a driver-side scalar (one bounded .count(), same
-precedent as the k-seeds/centroid collects in similarity.py).
+N (corpus size) is a one-row aggregate broadcast-joined onto the df
+side as a scalar column, so building the plan runs no Spark job.
 
 Reference analog: the reference boosts rare-term matches through its
 scoring ladder (/root/reference/libs/bragi/src/query.rs — the
@@ -54,26 +54,20 @@ def tfidf_topk(
     text_col: str = "text",
     min_df: int = 1,
     max_df_frac: float = 1.0,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """Top-k TF-IDF terms per document: (id_col, term, tf, df, score_r,
-    rank). ``n_docs`` overrides the corpus size (pass it when ``docs`` is
-    already materialized upstream to skip the count)."""
-    n = int(n_docs) if n_docs is not None else docs.count()
+    rank)."""
+    n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("_n"))
+    n = F.col("_n")
     tf = term_frequencies(docs, id_col=id_col, text_col=text_col)
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    df_ = df_.where(
-        (F.col("df") >= int(min_df))
-        & (F.col("df") <= F.lit(float(max_df_frac)) * F.lit(float(n)))
+    df_ = df_.crossJoin(F.broadcast(n_docs)).where(
+        (F.col("df") >= int(min_df)) & (F.col("df") <= F.lit(float(max_df_frac)) * n)
     )
     w = Window.partitionBy(id_col).orderBy(
         F.col("tf").desc(), F.col("df").asc(), F.col("term").asc()
     )
-    score = F.round(
-        F.col("tf").cast("double")
-        * F.log(F.lit(float(n)) / F.col("df").cast("double")),
-        6,
-    )
+    score = F.round(F.col("tf").cast("double") * F.log(n / F.col("df").cast("double")), 6)
     return (
         tf.join(df_, "term")
         .withColumn("rank", F.row_number().over(w).cast("long"))

@@ -8,6 +8,7 @@ republishes that dataset's index while others stand
 (/root/reference/libs/mimir/src/rubber.rs:553-602)."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -235,3 +236,34 @@ def test_lineage_records_and_serves_fingerprints(spark, small_pages_path, tmp_pa
     run_rollup_job(spark, small_pages_path, out_p)
     fps_p = Lineage(f"{out_p}/lineage").latest_input_fingerprints(spark)
     assert len(fps_p) == 5 and all(v == 0 for v in fps_p.values())
+
+
+def test_refresh_reads_only_processed_series_days(
+    spark, small_pages_path, tmp_path, scanned
+):
+    """A backfill of 2024-01-01 run together with the new day 2024-01-05
+    reads the series partitions of those two days only, not the three
+    days between them."""
+    src_dir = str(tmp_path / "pages_tbl")
+    src = SnapshotTable(src_dir)
+    pages = spark.read.parquet(small_pages_path).withColumn("day", F.to_date("warc_ts"))
+    src.commit(pages.filter(F.col("day") < "2024-01-05"), mode="replace", partition_by="day")
+    out = str(tmp_path / "out")
+    run_rollup_job(spark, src_dir, out)
+
+    late = _late_rows_for(spark, small_pages_path, "2024-01-01")
+    src.commit(
+        pages.filter(F.col("day") == "2024-01-05").unionByName(
+            late.withColumn("day", F.to_date("warc_ts"))
+        ),
+        mode="append",
+        partition_by="day",
+    )
+    scanned.clear()
+    s = run_rollup_job(spark, src_dir, out, refresh_days=["2024-01-01"])
+    assert s["days_refreshed"] == ["2024-01-01"] and s["days_processed"] == 2
+
+    series_files = [f for files in scanned for f in files if "/series_1m/" in f]
+    assert series_files
+    read_days = {re.search(r"/_p=([^/]+)/", f).group(1) for f in series_files}
+    assert read_days == {"2024-01-01", "2024-01-05"}

@@ -114,3 +114,34 @@ def test_interval_join_validates_how(spark, hourly):
     isl = intervals.busy_islands(hourly, F.col("c") >= 5, ts_col="bucket_sec")
     with pytest.raises(ValueError):
         intervals.interval_join(hourly, isl, ts_col="bucket_sec", how="outer")
+
+
+def test_interval_join_exact_bucket_ids_beyond_2_53(spark):
+    """Nanosecond epochs lie past 2^53, where a DOUBLE floor(ts / W) rounds
+    about a third of the points into the next bucket. Rounding is monotone
+    on both sides, so the join keeps its matches, but the bucket ids are
+    wrong: the bucket arithmetic must stay in exact longs."""
+    from mimirsbrunn_spark.plans import plan_str
+
+    W = 3_600_000_000_000  # 1 h in ns
+    b = (1_700_000_000 * 10**9 // W) * W  # an hour boundary in ns
+    isl = spark.createDataFrame(
+        [("a", 1, b - 2, b, 1), ("a", 2, b, b + W + 1, 2)],
+        "host string, island_id long, start_sec long, end_sec long, n_buckets long",
+    )
+    pts = spark.createDataFrame(
+        [("a", t) for t in (b - 3, b - 2, b - 1, b, b + W, b + W + 1)],
+        "host string, warc_sec long",
+    )
+    out = intervals.interval_join(pts, isl, ts_col="warc_sec", bucket_width_sec=W)
+    got = sorted((r.warc_sec, r.island_id) for r in out.collect())
+    assert got == [(b - 2, 1), (b - 1, 1), (b, 2), (b + W, 2)]
+    assert "double" not in plan_str(out, "extended").lower()
+
+    ts = [b - 1, b, b + 1, -1, -W, -W - 1, 2**62 + 7]
+    ids = (
+        spark.createDataFrame([(t,) for t in ts], "t long")
+        .select("t", intervals._bucket_id(F.col("t"), W).alias("id"))
+        .collect()
+    )
+    assert [(r.t, r.id) for r in ids] == [(t, t // W) for t in ts]

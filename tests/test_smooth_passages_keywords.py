@@ -192,3 +192,12 @@ def test_tfidf_tie_break_by_term(spark):
         key=lambda r: r.rank,
     )
     assert [r.term for r in d1] == ["alpha", "zeta"]  # same tf/df -> term asc
+
+
+def test_tfidf_runs_no_job_to_build(spark, kw_corpus, jobs_of):
+    """The corpus size N is a one-row aggregate inside the plan: building
+    the top-k DataFrame runs no Spark job, and N still reaches the score."""
+    out, jobs = jobs_of(spark, lambda: keywords.tfidf_topk(kw_corpus, k=1), "tfidf_build")
+    assert len(jobs) == 0
+    got = {(r.doc_id, r.term): r.score_r for r in out.collect()}
+    assert got[(1, "apple")] == round(2.0 * math.log(3.0 / 1.0), 6)
