@@ -57,7 +57,14 @@ def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_worker_imports(spark)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    path = f"{sf_dir}/{name}.parquet"
+    # the footer schema, read on the driver, pins the scan: Spark then runs
+    # no schema-inference job (naive timestamps map to TimestampType, as
+    # the inference above would)
+    return spark.read.schema(from_arrow_schema(ds.dataset(path).schema)).parquet(path)
 
 
 def pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -321,6 +328,14 @@ FROM l
 """
 
 
+def _hour_bounds(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
+    """First and last hour bucket of the gate's pages, as driver ints: the
+    min/max of the hourly series, taken from the raw pages as the DuckDB
+    side does, so the series pipeline is not run once more for them."""
+    mn, mx = pages_df(spark, sf_dir).agg(F.min("warc_sec"), F.max("warc_sec")).first()
+    return mn - mn % 3600, mx - mx % 3600
+
+
 def q_time_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """locf time-weighted mean of the hourly byte series per host over the
     middle half of the fixture's time range (operators/counters.py).
@@ -331,7 +346,7 @@ def q_time_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     hs = _series(spark, sf_dir, "1h").select(
         "host", F.col("bucket_sec").alias("ts_sec"), F.col("bytes_sum").alias("value")
     )
-    mn, mx = hs.agg(F.min("ts_sec"), F.max("ts_sec")).first()
+    mn, mx = _hour_bounds(spark, sf_dir)
     q = (mx - mn) // 4
     return time_weighted_avg(hs, ["host"], t0=mn + q, t1=mn + 3 * q)
 
@@ -504,7 +519,7 @@ def q_state_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("doc_count") >= 5, "mid")
         .otherwise("low"),
     )
-    mn, mx = hs.agg(F.min("ts_sec"), F.max("ts_sec")).first()
+    mn, mx = _hour_bounds(spark, sf_dir)
     q = (mx - mn) // 4
     return state_durations(hs, ["host"], t0=mn + q, t1=mn + 3 * q)
 

@@ -5,19 +5,28 @@ jobs publish (the TimescaleDB continuous-aggregate pattern, applied to
 mergeable states): a list of tiers, a builder of the finest tier from
 raw pages, and a merge of a finer tier's rows into a coarser tier.
 
-The numeric rollup tiers are the same spec with the 1m series as input:
-``rollup_job`` refreshes ``rollup_1h/1d/30d`` through
-``refresh_aux_tiers`` with ``finest = merge = tiers.rollup`` and the
-series snapshot recorded in ``meta``. Its full build is its own
-history-preserving rebuild, not ``publish``: once retention has truncated
-the series, coarse-tier rows the series can no longer rebuild are kept.
+The numeric rollup tiers are the same spec with the 1m series as input
+(``rollup_job._rollup_spec``): ``finest = merge = tiers.rollup``, the
+series snapshot recorded in ``meta``, the serving ``layout`` and a
+``preserve`` hook. Both its full build (``publish``) and its daily refresh
+(``refresh_aux_tiers``) go through this module.
 
-Layout. One table per tier, ``{name}_{tier}``, partitioned by the tier's
-coarse time key (``pkey``: day for 1h, month for 1d, year for 30d, see
+History preservation. ``preserve(spark, tier)`` gives the epoch second
+below which a tier keeps its committed rows, or None for a plain rebuild:
+``publish`` then commits ``old(bucket_ts < floor) ∪ fresh(bucket_ts >=
+floor)``. Once retention has truncated a tier's source, the rows it can no
+longer rebuild stay materialized (the TimescaleDB continuous-aggregate
+semantics). The aux families declare no hook: their tiers rebuild from
+raw pages in full.
+
+Layout. One table per tier, ``{name}_{tier}`` (``tables(name)`` when the
+spec names a table backend), partitioned by the tier's coarse time key
+(``pkey``: day for 1h, month for 1d, year for 30d, see
 ``tiers.TIER_PARTITION_FMT``), so reads prune at the manifest level
 exactly like ``read_rollup``. Each full-build snapshot's meta records
 ``tier``, ``partition_fmt`` and the family's parameters (``lgk``, ``n``,
-``slack``).
+``slack``). ``layout`` (``stats_cols``, ``cluster_by``, ``cluster_files``)
+is passed to every full-build commit; refreshes inherit it.
 
 Single raw touch. The finest tier is the ONLY one built from raw pages;
 every coarser tier merges the published child tier's rows (HLL unions,
@@ -40,7 +49,7 @@ the (already tiny) child tiers; the full build is the bootstrap path.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,13 +58,17 @@ from .. import tiers
 from ..tables import SnapshotTable
 
 Builder = Callable[[DataFrame, str], DataFrame]
+Preserve = Callable[[SparkSession, str], int | None]
 
 
 @dataclass(frozen=True)
 class ContinuousAggregate:
     """``finest(pages, tier)`` builds the finest tier from raw pages;
     ``merge(child, tier)`` builds ``tier`` from the next finer tier's rows.
-    ``meta``: the family's parameters, recorded in every tier's meta."""
+    ``meta``: the family's parameters, recorded in every tier's meta.
+    ``layout``: commit keywords of every full-build tier. ``preserve``: the
+    history-preservation hook (module docstring). ``tables``: table name →
+    table backend, default a ``SnapshotTable`` under ``out_dir``."""
 
     name: str
     tiers: tuple[str, ...]
@@ -63,25 +76,37 @@ class ContinuousAggregate:
     merge: Builder
     exact: bool = False
     meta: dict = field(default_factory=dict)
+    layout: dict = field(default_factory=dict)
+    preserve: Preserve | None = None
+    tables: Callable[[str], Any] | None = None
 
-    def table(self, out_dir: str, tier: str) -> SnapshotTable:
-        return SnapshotTable(f"{out_dir}/{self.name}_{tier}")
+    def table(self, out_dir: str, tier: str):
+        name = f"{self.name}_{tier}"
+        return self.tables(name) if self.tables else SnapshotTable(f"{out_dir}/{name}")
 
     def tier_meta(self, tier: str) -> dict:
         return {"tier": tier, **self.meta, "partition_fmt": tiers.TIER_PARTITION_FMT[tier][1]}
 
     def publish(self, spark: SparkSession, pages: DataFrame, out_dir: str) -> dict:
-        """Full build of every tier from ``pages``. Returns {tier: table}."""
-        out: dict[str, SnapshotTable] = {}
+        """Full build of every tier from ``pages``, each coarser tier from
+        the finer tier as committed; rows below a ``preserve`` floor are
+        kept from the tier's current snapshot. Returns {tier: table}."""
+        out: dict = {}
         child: DataFrame | None = None
         for tier in self.tiers:
             df = self.finest(pages, tier) if child is None else self.merge(child, tier)
             tbl = self.table(out_dir, tier)
+            floor = self.preserve(spark, tier) if self.preserve else None
+            if floor is not None:
+                sec = F.col("bucket_ts").cast("long")
+                old = tbl.read(spark).select(*df.columns).filter(sec < floor)
+                df = old.unionByName(df.filter(sec >= floor))
             tbl.commit(
                 df.withColumn("pkey", tiers.partition_key_col(tier)),
                 mode="replace",
                 meta=self.tier_meta(tier),
                 partition_by="pkey",
+                **self.layout,
             )
             child = tbl.read(spark).drop("pkey")
             out[tier] = tbl

@@ -9,11 +9,16 @@ dedup/aggregate → atomic publish, one dataset at a time):
      append-commit it to the series table, record a lineage row
      (partition id, input fingerprint, output snapshot, row count, checksum);
   3. refresh the derived tiers (1h/1d/30d), gap-fill tables and compressed
-     chunk tables: INCREMENTALLY when they already exist and record the
-     series snapshot they were built from (only partitions dirtied by this
-     run's days are recomputed, each tier cascading from the previous
-     tier's table via manifest-pruned reads — continuous-aggregate
-     invalidation), otherwise a full rebuild from the committed 1m series.
+     chunk tables. The tiers are the ``rollup`` continuous aggregate
+     (``_rollup_spec``, jobs/aux_refresh.py), one builder per tier for
+     both paths: INCREMENTALLY when the tables already exist and record the
+     series snapshot they were built from (``refresh_aux_tiers``: only
+     partitions dirtied by this run's days are recomputed, each tier
+     cascading from the previous tier's table via manifest-pruned reads),
+     otherwise a full build from the committed 1m series
+     (``ContinuousAggregate.publish``), whose preserve hook keeps the tier
+     history retention has cut from the series. Gap-fill and chunks follow
+     each tier (``_publish_serving``).
 
 Resume = rerun the job: step 2 skips days already in lineage (the analog of
 the reference's per-dataset alias republish — a crashed import rerun republishes
@@ -172,18 +177,28 @@ def _derived_in_sync(tbl, series_tbl, series_sid) -> bool:
         return False
 
 
-def _rollup_spec(sid_now) -> aux_refresh.ContinuousAggregate:
-    """The rollup tiers as a continuous aggregate whose meta records the
-    series snapshot they reflect. Built per run, so the spec calls
-    whatever ``tiers.rollup`` is bound to at that moment."""
+def _rollup_spec(sid_now, tf, cfg=None, record=None) -> aux_refresh.ContinuousAggregate:
+    """The rollup tiers as a continuous aggregate over the 1m series: meta
+    records the series snapshot they reflect, tables come from ``tf`` (name
+    → table), full builds write the serving layout, and ``_coverage_floor``
+    keeps the history the series can no longer rebuild (``record`` receives
+    its rebuild-gap metrics). Built per run, so the spec calls whatever
+    ``tiers.rollup`` is bound to at that moment."""
     return aux_refresh.ContinuousAggregate(
         "rollup", TIERS, finest=tiers.rollup, merge=tiers.rollup, exact=True,
         meta={"series_snapshot": sid_now},
+        layout={
+            "stats_cols": SERVING_STATS,
+            "cluster_by": SERVING_CLUSTER,
+            "cluster_files": (cfg or EngineConfig()).cluster_files,
+        },
+        preserve=lambda spark, tier: _coverage_floor(spark, tf, tier, record),
+        tables=tf,
     )
 
 
 def _refresh_derived_incremental(
-    spark, out_dir, tier_tables, series_tbl, processed_days, cfg, sid_now
+    spark, out_dir, tier_tables, series_tbl, processed_days, cfg, spec
 ) -> dict:
     """Refresh ONLY the serving-table partitions dirtied by the processed
     days (continuous-aggregate invalidation over the published layout):
@@ -201,7 +216,6 @@ def _refresh_derived_incremental(
       rebuilt in full.
 
     Returns per-stage refreshed-partition counts (metrics payload)."""
-    spec = _rollup_spec(sid_now)
     day_rows = series_tbl.read(spark, partition_values=set(processed_days))
     aux_refresh.refresh_aux_tiers(spark, spec, out_dir, processed_days, day_rows)
     stats: dict[str, float] = {}
@@ -359,6 +373,67 @@ def _preserve_floor(spark, tbl, step: int, src_min: int, src_wm: int | None) -> 
     if _tier_has_rows_strictly_below(spark, tbl, (src_min // step) * step):
         return -(-src_min // step) * step
     return None
+
+
+# Coverage bound of a series with no surviving partitions: every tier then
+# keeps all its rows instead of replace-committing empty.
+_NOTHING_COVERED = 2**62
+
+
+def _series_coverage_epoch(series_tbl) -> int | None:
+    """Oldest instant the surviving series covers: its first partition day
+    (manifest arithmetic, no scan; 1h buckets never straddle a day, so a
+    split there is exact), ``_NOTHING_COVERED`` for a series without files,
+    None when the manifest cannot bound it (a backend without manifest
+    introspection, or legacy unpartitioned files) — a plain rebuild."""
+    try:
+        snap = series_tbl.snapshot(series_tbl.current_snapshot_id())
+    except (AttributeError, FileNotFoundError):
+        return None
+    days = sorted({v for v in snap.partitions.values() if v})
+    if days:
+        return _day_epoch(days[0])
+    return None if snap.files else _NOTHING_COVERED
+
+
+def _coverage_floor(spark, tf, tier, record=None) -> int | None:
+    """The rollup spec's preserve hook: the first bucket of ``rollup_{tier}``
+    its source can rebuild (``_preserve_floor``); the tier keeps its
+    committed rows below it, the materialized values computed while the raw
+    data existed. The 1h source is the series, bounded by its first
+    surviving day; each coarser tier's source is the committed finer tier,
+    bounded by its first bucket. Every tier preserves, not just 1h: once
+    expire_tier has trimmed 1h to its window, a 1d/30d rebuild from it
+    alone would erase their longer history. None = plain rebuild: the tier
+    has no table yet (a first publish probes nothing) or the series
+    coverage is unknown. ``record`` receives ``rebuild_gap_seconds_{tier}``
+    when the preserved span does not abut the rebuilt one (a long idle gap
+    plus partial expiry), since coarser tiers then aggregate across the
+    hole. Shared by the rebuild and verify_job."""
+    tbl = tf(f"rollup_{tier}")
+    if not tbl.exists():
+        return None
+    src = tf("series_1m")
+    src_min = _series_coverage_epoch(src)
+    if src_min is None:
+        return None
+    i = TIERS.index(tier)
+    if i:
+        src = tf(f"rollup_{TIERS[i - 1]}")
+        row = src.read(spark).agg(F.min(F.col("bucket_ts").cast("long"))).first()
+        src_min = row[0] if row and row[0] is not None else _NOTHING_COVERED
+    if src_min == _NOTHING_COVERED:
+        return _NOTHING_COVERED  # rebuild nothing: no stitch, no gap
+    step = series.TIER_SECONDS[tier]
+    floor = _preserve_floor(spark, tbl, step, src_min, _truncation_watermark_epoch(src))
+    if floor is not None and record is not None:
+        old_max = _manifest_max_below(tbl, floor)
+        if old_max is _STATS_INCONCLUSIVE:
+            sec = F.col("bucket_ts").cast("long")
+            old_max = tbl.read(spark).filter(sec < floor).agg(F.max(sec)).first()[0]
+        if old_max is not None and old_max + step < floor:
+            record({f"rebuild_gap_seconds_{tier}": float(floor - (old_max + step))})
+    return floor
 
 
 def _checksum(df) -> str:
@@ -589,7 +664,8 @@ def run_rollup_job(
     # previous tier's TABLE with a manifest-pruned read, so a daily run
     # touches O(dirty partitions), never the full series history. The first
     # run, a desynced run and any non-default table_factory (the refresh
-    # addresses its tables at out_dir/rollup_{tier}) take the full rebuild.
+    # prunes its reads by SnapshotTable manifest partitions) take the full
+    # rebuild.
     t0 = time.time()
     tier_tables = {
         f"{kind}_{tier}": tf(f"{kind}_{tier}")
@@ -608,138 +684,23 @@ def run_rollup_job(
     in_sync_now = all_exist and all(
         _derived_in_sync(t, series_tbl, sid_now) for t in tier_tables.values()
     )
+    spec = _rollup_spec(
+        sid_now, {"series_1m": series_tbl, **tier_tables}.__getitem__, cfg,
+        record=lambda kv: metrics.record(spark, job_id, stage="derived_rebuild", kv=kv),
+    )
     if incremental_ok:
         stats = _refresh_derived_incremental(
-            spark, out_dir, tier_tables, series_tbl, processed_days, cfg, sid_now
+            spark, out_dir, tier_tables, series_tbl, processed_days, cfg, spec
         )
         metrics.record(
             spark, job_id, stage="derived_incremental",
             kv={"seconds": time.time() - t0, **stats},
         )
     elif not in_sync_now:
-        spec = _rollup_spec(sid_now)
-        base = series_tbl.read(spark)
-        # HISTORY-PRESERVING rebuild: once 1m retention has truncated the
-        # series, a naive rebuild-from-series would replace the coarse tiers
-        # with aggregates of the surviving window only — erasing exactly the
-        # history retention tiers exist to keep. Instead:
-        # - the 1h tier is rebuilt from the series for buckets >= the
-        #   series' oldest surviving instant (manifest min day — no scan;
-        #   1h buckets never straddle a day boundary so the split is exact)
-        #   UNIONed with the EXISTING tier's rows for older buckets (their
-        #   materialized values were computed when the raw data existed —
-        #   the TimescaleDB cagg-vs-raw-retention semantics);
-        # - each coarser tier then cascades from the previous tier's FULL
-        #   (preserved ∪ rebuilt) content, so every 1d/30d bucket — even one
-        #   straddling the coverage edge — gets its exact full-history value.
-        # With an untruncated series the preserved set is empty and this is
-        # the plain full rebuild. This makes EVERY desync trigger (crash
-        # mid-refresh, maintenance, backend swap) non-destructive by
-        # construction.
-        # Coverage lower bound of the surviving series. A series with NO
-        # surviving partitions (everything expired, e.g. a long idle gap)
-        # covers nothing — the sentinel makes every tier preserve ALL its
-        # existing rows instead of replace-committing empty. None (backend
-        # without manifest introspection) falls back to the plain
-        # non-preserving rebuild.
-        _NOTHING_COVERED = 2**62
-        series_min_epoch = None
-        try:
-            s_snap = series_tbl.snapshot(series_tbl.current_snapshot_id())
-            s_days = sorted({v for v in s_snap.partitions.values() if v})
-            if s_days:
-                series_min_epoch = _day_epoch(s_days[0])
-            elif not s_snap.files:
-                series_min_epoch = _NOTHING_COVERED  # truly empty series
-            else:
-                # legacy UNPARTITIONED files hold data the manifest can't
-                # bound — the sentinel would discard all of it from the
-                # rebuild; fall back to the plain full rebuild instead
-                series_min_epoch = None
-        except (AttributeError, FileNotFoundError):
-            pass  # backend without manifest introspection → plain rebuild
-        prev_full = None
-        src_min = series_min_epoch  # coverage lower bound of the source below
-        # truncation watermark of the source (None = no surviving evidence)
-        src_wm = _truncation_watermark_epoch(series_tbl) if src_min is not None else None
+        # full build: every tier through the spec, history-preserving by its
+        # preserve hook (_coverage_floor), then the serving tables
+        spec.publish(spark, series_tbl.read(spark), out_dir)
         for tier in TIERS:
-            tbl = tier_tables[f"rollup_{tier}"]
-            src = base if prev_full is None else prev_full
-            fresh = tiers.rollup(src, tier)
-            # EVERY tier preserves its existing rows for buckets the source
-            # CANNOT REBUILD — and only those (_preserve_floor). Not just
-            # 1h: once expire_tier has trimmed the 1h tier to its (90-day
-            # default) window, a 1d/30d rebuild from it alone would erase
-            # their longer history the same way a series-truncated 1h
-            # rebuild would.
-            step = series.TIER_SECONDS[tier]
-            floor_b = None
-            if src_min is not None and tbl.exists():
-                floor_b = (
-                    _NOTHING_COVERED
-                    if src_min == _NOTHING_COVERED
-                    else _preserve_floor(spark, tbl, step, src_min, src_wm)
-                )
-            if floor_b is not None:
-                sec = F.col("bucket_ts").cast("long")
-                old = tbl.read(spark).select(*fresh.columns).filter(sec < floor_b)
-                # the preserved span must ABUT the rebuilt span: if the
-                # surviving series starts well after the old tier's last
-                # bucket (long idle gap + partial expiry), the buckets in
-                # between silently vanish and coarser tiers aggregate across
-                # the hole with no signal. Detect and surface it as a metric
-                # so operators can see non-contiguous preserved coverage.
-                # (sentinel src_min = nothing covered: the tier preserves
-                # everything and rebuilds nothing — no stitch, no gap; the
-                # driver-side check comes FIRST so the probe never scans
-                # the whole tier just to discard the result. The probe
-                # itself answers from the manifest's bucket_ts zone maps
-                # when they are conclusive — a Spark max() job over the
-                # tier runs only for straddling/stat-less files.)
-                old_max = None
-                if floor_b != _NOTHING_COVERED:
-                    old_max = _manifest_max_below(tbl, floor_b)
-                    if old_max is _STATS_INCONCLUSIVE:
-                        old_max_row = old.agg(F.max(sec)).first()
-                        old_max = old_max_row[0] if old_max_row else None
-                if old_max is not None and old_max + step < floor_b:
-                    metrics.record(
-                        spark, job_id, stage="derived_rebuild",
-                        kv={
-                            f"rebuild_gap_seconds_{tier}": float(
-                                floor_b - (old_max + step)
-                            )
-                        },
-                    )
-                fresh = old.unionByName(fresh.filter(sec >= floor_b))
-            tbl.commit(
-                fresh.withColumn("pkey", tiers.partition_key_col(tier)),
-                mode="replace",
-                meta=spec.tier_meta(tier),
-                partition_by="pkey",
-                stats_cols=SERVING_STATS,
-                cluster_by=SERVING_CLUSTER,
-                cluster_files=cfg.cluster_files,
-            )
-            # re-read the committed tier (small, manifest-backed) instead of
-            # recomputing the union lineage for the next cascade step
-            prev_full = tbl.read(spark).drop("pkey")
-            # next tier's coverage starts at THIS tier's oldest surviving
-            # instant (one tiny driver agg over the rolled-up tier — the
-            # rebuild path is rare and the tier is retention-bounded)
-            nxt = {"1h": "1d", "1d": "30d"}.get(tier)
-            if src_min is not None and nxt and tier_tables[f"rollup_{nxt}"].exists():
-                # (guarded: the next tier reads src_min only when its table
-                # already exists, so on a first publish, on the
-                # plain-rebuild path and on the last tier the agg job would
-                # be pure waste)
-                row = prev_full.agg(F.min(F.col("bucket_ts").cast("long"))).first()
-                # empty tier content ⇒ the next tier can rebuild nothing
-                src_min = row[0] if row and row[0] is not None else _NOTHING_COVERED
-                # the next tier's source is THIS tier: its truncation is the
-                # tier's own expiry evidence (the preserve∪rebuild above
-                # already restored everything down to it)
-                src_wm = _truncation_watermark_epoch(tbl)
             _publish_serving(spark, tier_tables, tier, cfg, spec.meta)
         metrics.record(spark, job_id, stage="derived", kv={"seconds": time.time() - t0})
 

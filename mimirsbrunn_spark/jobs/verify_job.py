@@ -31,20 +31,11 @@ from pyspark.sql import functions as F
 from .. import tiers
 from ..tables import Lineage, SnapshotTable, _footer_stats
 
-TIER_PARENT = {"1h": "1m", "1d": "1h", "30d": "1d"}
-
-
-def _table(out_dir: str, tier: str) -> SnapshotTable:
-    name = "series_1m" if tier == "1m" else f"rollup_{tier}"
-    return SnapshotTable(f"{out_dir}/{name}")
+TIERS = ("1h", "1d", "30d")
 
 
 def _tier_df(spark: SparkSession, out_dir: str, tier: str) -> DataFrame:
-    df = _table(out_dir, tier).read(spark)
-    for aux in ("pkey", "day"):
-        if aux in df.columns:
-            df = df.drop(aux)
-    return df
+    return SnapshotTable(f"{out_dir}/rollup_{tier}").read(spark).drop("pkey")
 
 
 def check_manifest(tbl: SnapshotTable, deep: bool = False) -> dict:
@@ -109,63 +100,13 @@ def check_lineage(spark: SparkSession, out_dir: str) -> dict:
     return {"ok": not mismatch, "days": len(rows), "mismatch": mismatch}
 
 
-def check_tier_consistency(
-    spark: SparkSession, out_dir: str, child: str, sample: int = 5
-) -> dict:
-    """Child tier ↔ aggregate of its parent over the span the parent
-    covers. The continuous-aggregate invariant: within covered buckets the
-    two must match EXACTLY (integer sums). Child buckets starting before
-    the parent's first fully-covered bucket are legitimate preserved
-    history (retention contract) — counted, not compared."""
-    from ..series import TIER_SECONDS
-
-    parent = TIER_PARENT[child]
-    p_tbl, c_tbl = _table(out_dir, parent), _table(out_dir, child)
-    if not p_tbl.exists() or not c_tbl.exists():
-        return {"ok": False, "error": f"missing {parent} or {child} table"}
-    p_df = _tier_df(spark, out_dir, parent)
-    c_df = _tier_df(spark, out_dir, child)
-    cols = ["host", "bucket_ts", "lang", "doc_count", "bytes_sum"]
-    expected = tiers.rollup(p_df, child).select(*cols)
-
-    sec = F.col("bucket_ts").cast("long")
-    step = TIER_SECONDS[child]
-    p_min = p_df.agg(F.min(sec)).first()[0]
-    if p_min is None:
-        return {"ok": False, "error": f"{parent} tier is empty"}
-    # the preserved span is EXACTLY the rebuild's (rollup_job._preserve_floor)
-    from .rollup_job import _preserve_floor, _truncation_watermark_epoch
-
-    floor_b = _preserve_floor(spark, c_tbl, step, p_min, _truncation_watermark_epoch(p_tbl))
-
-    c_cov = c_df.select(*cols)
-    e_cov = expected
-    if floor_b is not None:
-        c_cov = c_cov.filter(sec >= floor_b)
-        e_cov = e_cov.filter(sec >= floor_b)
-    extra = c_cov.exceptAll(e_cov)
-    missing = e_cov.exceptAll(c_cov)
-    n_extra, n_missing = extra.count(), missing.count()
-    preserved = c_df.filter(sec < floor_b).count() if floor_b is not None else 0
-    out = {
-        "ok": n_extra == 0 and n_missing == 0,
-        "extra_rows": n_extra,
-        "missing_rows": n_missing,
-        "preserved_rows": preserved,
-    }
-    if n_extra or n_missing:
-        out["sample_extra"] = [r.asDict() for r in extra.limit(sample).collect()]
-        out["sample_missing"] = [r.asDict() for r in missing.limit(sample).collect()]
-    return out
-
-
 def check_gapfill_observed(spark: SparkSession, out_dir: str, tier: str) -> dict:
     """Published gap-fill table ↔ the tier it was filled from: every
     observed (is_filled = false) row must carry exactly the tier's value
     in BOTH fill columns; every (host, bucket) of the tier must appear
     observed. Exact float64-of-integer comparisons."""
     gf_tbl = SnapshotTable(f"{out_dir}/gapfill_{tier}")
-    if not gf_tbl.exists() or not _table(out_dir, tier).exists():
+    if not gf_tbl.exists() or not SnapshotTable(f"{out_dir}/rollup_{tier}").exists():
         return {"ok": False, "error": f"missing gapfill_{tier} or tier table"}
     gf = gf_tbl.read(spark)
     if "pkey" in gf.columns:
@@ -222,41 +163,58 @@ def check_chunks_decode(
     return {"ok": n_bad == 0, "hosts": hosts, "mismatch_rows": n_bad}
 
 
-def _exact_specs() -> dict:
-    """The published aux families whose tier merge is exact, by table
-    prefix. The HLL/topn cascades are not among them: their merge is lossy
-    relative to a direct rebuild."""
-    from . import distinct_job, histogram_job, slo_job, stats_job, topn_job
+def _exact_specs(out_dir: str) -> dict:
+    """The published families whose tier merge is exact, by table prefix:
+    the rollup tiers and the aux families that merge by integer sums (the
+    log-2 ``hist_*`` / HDR ``hdr_*`` histograms, the ``stats_*`` six-sums,
+    the ``slo_*`` error counts). The HLL/topn cascades are not among them:
+    their merge is lossy relative to a direct rebuild."""
+    from . import distinct_job, histogram_job, rollup_job, slo_job, stats_job, topn_job
 
     specs = (
+        rollup_job._rollup_spec(None, lambda n: SnapshotTable(f"{out_dir}/{n}")),
         distinct_job.spec(), topn_job.spec(), histogram_job.spec("log2"),
         histogram_job.spec("hdr"), stats_job.STATS, slo_job.SLO,
     )
     return {s.name: s for s in specs if s.exact}
 
 
-def check_aux_cascade(spark: SparkSession, out_dir: str, prefix: str, child: str) -> dict:
-    """Published aux tier ↔ its spec's merge of the next finer tier, for the
-    exact-merge families (the log-2 ``hist_*`` / HDR ``hdr_*`` histograms,
-    the ``stats_*`` six-sums and the ``slo_*`` error counts all merge by
-    integer sums). Aux tiers are replace-published with no
-    history-preservation contract (an aux refresh is bit-identical by
-    design), so strict equality is the invariant — unlike the rollup tiers
-    there is no preserved span to exclude."""
-    spec = _exact_specs()[prefix]
-    finer = spec.tiers[spec.tiers.index(child) - 1]
-    p_tbl, c_tbl = spec.table(out_dir, finer), spec.table(out_dir, child)
+def check_cascade(
+    spark: SparkSession, out_dir: str, prefix: str, child: str, sample: int = 5
+) -> dict:
+    """Published tier ↔ its spec's build from the next finer table: the
+    continuous-aggregate invariant, exact for integer-sum merges. The
+    rollup's finest tier is built from the published 1m series; an aux
+    family's finest tier comes from raw pages, which nothing here reads.
+    Buckets below the spec's ``preserve`` floor (the rule its full build
+    uses) are legitimate preserved history: counted as ``preserved_rows``,
+    not compared."""
+    spec = _exact_specs(out_dir)[prefix]
+    i = spec.tiers.index(child)
+    src, build = (f"{prefix}_{spec.tiers[i - 1]}", spec.merge) if i else ("series_1m", spec.finest)
+    p_tbl, c_tbl = SnapshotTable(f"{out_dir}/{src}"), spec.table(out_dir, child)
     if not p_tbl.exists() or not c_tbl.exists():
-        return {"ok": False, "error": f"missing {prefix}_{finer} or {prefix}_{child}"}
+        return {"ok": False, "error": f"missing {src} or {prefix}_{child} table"}
     c_df = c_tbl.read(spark).drop("pkey")
-    expected = spec.merge(p_tbl.read(spark).drop("pkey"), child).select(*c_df.columns)
-    extra = c_df.exceptAll(expected)
-    missing = expected.exceptAll(c_df)
+    expected = build(p_tbl.read(spark).drop("pkey", "day"), child).select(*c_df.columns)
+    floor = spec.preserve(spark, child) if spec.preserve else None
+    c_cov, preserved = c_df, 0
+    if floor is not None:
+        sec = F.col("bucket_ts").cast("long")
+        c_cov, expected = c_df.filter(sec >= floor), expected.filter(sec >= floor)
+        preserved = c_df.filter(sec < floor).count()
+    extra = c_cov.exceptAll(expected)
+    missing = expected.exceptAll(c_cov)
     n_extra, n_missing = extra.count(), missing.count()
-    out = {"ok": n_extra == 0 and n_missing == 0, "extra_rows": n_extra, "missing_rows": n_missing}
+    out = {
+        "ok": n_extra == 0 and n_missing == 0,
+        "extra_rows": n_extra,
+        "missing_rows": n_missing,
+        "preserved_rows": preserved,
+    }
     if n_extra or n_missing:
-        out["sample_extra"] = [r.asDict() for r in extra.limit(5).collect()]
-        out["sample_missing"] = [r.asDict() for r in missing.limit(5).collect()]
+        out["sample_extra"] = [r.asDict() for r in extra.limit(sample).collect()]
+        out["sample_missing"] = [r.asDict() for r in missing.limit(sample).collect()]
     return out
 
 
@@ -275,39 +233,29 @@ def verify_publication(
 ) -> dict:
     """Run every check over a published layout; ``ok`` iff all pass."""
     report: dict = {"checks": {}}
-    names = ["series_1m"] + [
-        f"{kind}_{t}" for t in ("1h", "1d", "30d") for kind in ("rollup", "gapfill", "chunks")
-    ]
+    checks = report["checks"]
+    # the rollup family is always checked; aux families only when published
+    specs = {
+        p: s for p, s in _exact_specs(out_dir).items()
+        if p == "rollup" or s.table(out_dir, s.tiers[0]).exists()
+    }
+    names = ["series_1m"] + [f"{k}_{t}" for t in TIERS for k in ("gapfill", "chunks")]
+    names += [f"{p}_{t}" for p, s in specs.items() for t in s.tiers]
     for name in names:
         tbl = SnapshotTable(f"{out_dir}/{name}")
         if tbl.exists():
-            report["checks"][f"manifest:{name}"] = _safe(check_manifest, tbl, deep=deep)
-    report["checks"]["lineage"] = _safe(check_lineage, spark, out_dir)
-    for child in ("1h", "1d", "30d"):
-        report["checks"][f"tier:{child}"] = _safe(
-            check_tier_consistency, spark, out_dir, child
+            checks[f"manifest:{name}"] = _safe(check_manifest, tbl, deep=deep)
+    checks["lineage"] = _safe(check_lineage, spark, out_dir)
+    for t in TIERS:
+        checks[f"gapfill:{t}"] = _safe(check_gapfill_observed, spark, out_dir, t)
+        checks[f"chunks:{t}"] = _safe(
+            check_chunks_decode, spark, out_dir, t, n_hosts=chunk_hosts
         )
-        report["checks"][f"gapfill:{child}"] = _safe(
-            check_gapfill_observed, spark, out_dir, child
-        )
-        report["checks"][f"chunks:{child}"] = _safe(
-            check_chunks_decode, spark, out_dir, child, n_hosts=chunk_hosts
-        )
-    # exact-merge aux layouts sharing the directory get manifest + cascade
-    # checks; absent families are skipped.
-    for prefix, spec in _exact_specs().items():
-        if not spec.table(out_dir, spec.tiers[0]).exists():
-            continue
-        for t in spec.tiers:
-            tbl = spec.table(out_dir, t)
-            if tbl.exists():
-                report["checks"][f"manifest:{prefix}_{t}"] = _safe(
-                    check_manifest, tbl, deep=deep
-                )
-        for child in spec.tiers[1:]:
-            report["checks"][f"aux:{prefix}:{child}"] = _safe(
-                check_aux_cascade, spark, out_dir, prefix, child
-            )
+    for prefix, spec in specs.items():
+        # the rollup's finest tier has a published source (the 1m series)
+        for t in spec.tiers if prefix == "rollup" else spec.tiers[1:]:
+            key = f"tier:{t}" if prefix == "rollup" else f"aux:{prefix}:{t}"
+            checks[key] = _safe(check_cascade, spark, out_dir, prefix, t)
     report["ok"] = all(c.get("ok") for c in report["checks"].values())
     return report
 

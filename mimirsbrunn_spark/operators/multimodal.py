@@ -7,11 +7,9 @@ Decode support comes in two tiers:
   ``wave``), nearest-neighbor resize, per-channel feature extraction, and
   frame sampling over the PPMV toy container (concatenated P6 frames).
   These run end-to-end in this container and are oracle-tested.
-- **Stubbed formats** (JPEG/PNG/MP4/...): require PIL/ffmpeg, which this
-  container does not ship — those raise NotImplementedError with the mime
-  named, or callers pass ``fake=True`` for the deterministic byte-histogram
-  stand-in (plumbing identical; swapping in PIL later only replaces the
-  kernel).
+- **Unsupported formats** (JPEG/PNG/MP4/...): need PIL/ffmpeg, which are
+  not dependencies; they raise NotImplementedError with the mime named
+  (a PIL/ffmpeg kernel would slot into the same dispatch).
 
 All UDFs are Arrow-batched (mapInPandas); batches are capped by
 spark.sql.execution.arrow.maxRecordsPerBatch so a partition of large blobs
@@ -142,16 +140,6 @@ IMAGE_FEATURES_SCHEMA = "media_id long, feat array<float>, decoded_w int, decode
 FRAME_SAMPLE_SCHEMA = "media_id long, frame_idx int, frame binary"
 
 
-def _fake_decode(payload: bytes, out_dim: int = 8) -> np.ndarray:
-    """Deterministic stand-in for a real decoder: histogram of byte values
-    folded into out_dim buckets, L1-normalized. Stable across runs/machines."""
-    if payload is None or len(payload) == 0:
-        return np.zeros(out_dim, dtype=np.float32)
-    arr = np.frombuffer(payload, dtype=np.uint8)
-    hist = np.bincount(arr % out_dim, minlength=out_dim).astype(np.float64)
-    return (hist / hist.sum()).astype(np.float32)
-
-
 def decode_image(payload: bytes, mime: str) -> np.ndarray:
     """Dispatch to a real decoder by mime; NotImplementedError names the
     formats that need external libs (PIL/libjpeg)."""
@@ -166,22 +154,16 @@ def decode_image(payload: bytes, mime: str) -> np.ndarray:
 
 
 def image_features(
-    media: DataFrame, fake: bool = False, out_dim: int = 8, resize_to: int | None = None
+    media: DataFrame, out_dim: int = 8, resize_to: int | None = None
 ) -> DataFrame:
-    """binary images → feature vectors. PPM/PGM/BMP decode for real
-    (pure numpy); other mimes raise unless ``fake=True`` (deterministic
-    byte-histogram stand-in). ``resize_to`` resizes to a square via
-    nearest-neighbor before feature extraction."""
+    """binary images → feature vectors. PPM/PGM/BMP decode in pure numpy;
+    other mimes raise NotImplementedError (``decode_image``). ``resize_to``
+    resizes to a square via nearest-neighbor before feature extraction."""
 
     def batches(it):
         for pdf in it:
             feats, ws, hs = [], [], []
             for p, mime in zip(pdf["payload"], pdf["mime"]):
-                if fake:
-                    feats.append(_fake_decode(p, out_dim))
-                    ws.append(0)
-                    hs.append(0)
-                    continue
                 img = decode_image(p, mime)
                 hs.append(int(img.shape[0]))
                 ws.append(int(img.shape[1]))
@@ -231,47 +213,31 @@ def audio_features(media: DataFrame) -> DataFrame:
     )
 
 
-def sample_frames(
-    media: DataFrame, every_n: int = 2, fake: bool = False, every_ms: int = 1000
-) -> DataFrame:
+def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
     """video binary → sampled frames (one output row per kept frame).
-    PPMV containers split and sample for REAL (every ``every_n``-th frame);
-    other containers (mp4 etc.) need ffmpeg — stubbed behind ``fake=True``
-    (deterministic byte slicing by duration, exercising the same 1-to-N
-    mapInPandas shape)."""
+    PPMV containers split and keep every ``every_n``-th frame; other
+    containers (mp4 etc.) need ffmpeg and raise NotImplementedError."""
 
     def batches(it):
         for pdf in it:
             out_ids, out_idx, out_frames = [], [], []
-            for mid, payload, mime, dur in zip(
-                pdf["media_id"], pdf["payload"], pdf["mime"], pdf["duration_ms"].fillna(0)
-            ):
-                if mime == PPMV_MIME:
-                    for i, frame in enumerate(split_ppmv(payload or b"")):
-                        if i % every_n == 0:
-                            out_ids.append(mid)
-                            out_idx.append(i)
-                            out_frames.append(frame)
-                    continue
-                if not fake:
+            for mid, payload, mime in zip(pdf["media_id"], pdf["payload"], pdf["mime"]):
+                if mime != PPMV_MIME:
                     raise NotImplementedError(
-                        f"frame sampling for {mime!r} requires ffmpeg/av (not in "
-                        f"this container); lib-free: {PPMV_MIME}, or pass fake=True"
+                        f"frame sampling for {mime!r} requires ffmpeg/av; "
+                        f"supported lib-free: {PPMV_MIME}"
                     )
-                n = max(int(dur) // every_ms, 1)
-                p = payload or b""
-                for i in range(n):
-                    lo = (len(p) * i) // n
-                    hi = (len(p) * (i + 1)) // n
-                    out_ids.append(mid)
-                    out_idx.append(i)
-                    out_frames.append(p[lo:hi])
+                for i, frame in enumerate(split_ppmv(payload or b"")):
+                    if i % every_n == 0:
+                        out_ids.append(mid)
+                        out_idx.append(i)
+                        out_frames.append(frame)
             yield pd.DataFrame(
                 {"media_id": out_ids, "frame_idx": out_idx, "frame": out_frames}
             )
 
     return media.filter(F.col("kind") == "video").select(
-        "media_id", "payload", "mime", "duration_ms"
+        "media_id", "payload", "mime"
     ).mapInPandas(batches, schema=FRAME_SAMPLE_SCHEMA)
 
 
@@ -291,22 +257,17 @@ def _synth_wav(rng, n_samples: int = 800, rate: int = 8000) -> bytes:
     return buf.getvalue()
 
 
-def synth_media(spark, n: int = 64, seed: int = 7, real: bool = True) -> DataFrame:
-    """Deterministic media table for tests (no external data). ``real=True``
-    emits decodable payloads — P6 PPM images, PCM WAV audio, PPMV videos —
-    so the real kernels run end-to-end; ``real=False`` keeps the opaque
-    random-bytes variant (for the fake/stub path)."""
+def synth_media(spark, n: int = 64, seed: int = 7) -> DataFrame:
+    """Deterministic media table for tests (no external data): decodable
+    payloads — P6 PPM images, PCM WAV audio, PPMV videos — so the kernels
+    run end-to-end."""
     rng = np.random.default_rng(seed)
     rows = []
     for i in range(n):
         kind = ["image", "video", "audio"][i % 3]
         w, h = int(rng.integers(8, 64)), int(rng.integers(8, 64))
         dur = int(rng.integers(500, 5000))
-        if not real:
-            size = int(rng.integers(16, 512))
-            payload = rng.integers(0, 256, size=size, dtype=np.int64).astype(np.uint8).tobytes()
-            mime = {"image": "image/png", "video": "video/mp4", "audio": "audio/wav"}[kind]
-        elif kind == "image":
+        if kind == "image":
             img = rng.integers(0, 256, size=(h, w, 3), dtype=np.int64).astype(np.uint8)
             payload, mime = encode_ppm(img), PPM_MIME
         elif kind == "video":

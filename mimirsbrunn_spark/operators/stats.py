@@ -220,7 +220,8 @@ def trimmed_mean(
     least one row survives), membership is decided by rank, and because a
     rank RANGE always selects the same multiset of values regardless of
     how ties were broken, the kept-set is engine-independent; the mean is
-    one exact-BIGINT-sum / count double. ``tiebreak`` orders equal values
+    one exact-BIGINT-sum / count double, so ``value_col`` must be integral
+    (ValueError at plan time otherwise). ``tiebreak`` orders equal values
     (defaults to the value alone — ties don't change the result).
 
     Scale shape: one Exchange on (*by) for the rank window; the following
@@ -230,6 +231,11 @@ def trimmed_mean(
     if not 0 <= int(trim_pct) < 50:
         raise ValueError(f"trim_pct must be in [0, 50), got {trim_pct}")
     from pyspark.sql import Window
+    from pyspark.sql.types import IntegralType
+
+    vtype = df.select(value_col).schema[0].dataType
+    if not isinstance(vtype, IntegralType):
+        raise ValueError(f"trimmed_mean needs an integral {value_col!r}, got {vtype.simpleString()}")
 
     v = F.col(value_col).cast("long")
     order = [F.col(value_col)] + ([F.col(tiebreak)] if tiebreak else [])

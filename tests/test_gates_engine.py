@@ -101,3 +101,12 @@ def test_gate_runs_engine_and_matches_oracle(spark, oracle, monkeypatch, name):
     assert sorted(scols) == sorted(ocols)
     assert len(srows) == len(orows) > 0
     assert value_hash(srows, scols) == value_hash(orows, ocols)
+
+
+@pytest.mark.parametrize("name", ["time_weighted_avg", "state_durations"])
+def test_window_gates_take_bounds_from_pages(spark, jobs_of, name):
+    """Building the two locf window gates collects their bounds from the
+    raw pages: fewer Spark jobs than running the hourly series pipeline
+    for its min/max (4 jobs) before the result runs it again."""
+    _, jobs = jobs_of(spark, lambda: gate.core_queries()[name](spark, SF_DIR), name)
+    assert len(jobs) < 4

@@ -176,25 +176,15 @@ def test_text_analysis_oracle(docs):
 
 
 def test_multimodal_plumbing(spark):
-    media = multimodal.synth_media(spark, n=30, real=False)
-    feats = multimodal.image_features(media, fake=True).collect()
-    assert len(feats) == len([r for r in media.collect() if r.kind == "image"])
-    for r in feats:
-        assert len(r.feat) == 8
-        assert abs(sum(r.feat) - 1.0) < 1e-5
-    # determinism across runs
-    feats2 = multimodal.image_features(media, fake=True).collect()
-    assert {r.media_id: list(r.feat) for r in feats} == {
-        r.media_id: list(r.feat) for r in feats2
-    }
-    frames = multimodal.sample_frames(media, every_ms=1000, fake=True)
-    got = frames.groupBy("media_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    durs = {r.media_id: r.duration_ms for r in media.collect() if r.kind == "video"}
-    for r in got:
-        assert r.n == max(durs[r.media_id] // 1000, 1)
-    # unsupported mimes (png/mp4 here) still raise without fake=True
-    with pytest.raises(Exception):
-        multimodal.image_features(media, fake=False).collect()
+    """Unsupported mimes raise NotImplementedError naming the mime, for
+    image features and for frame sampling alike."""
+    png = (0, "image", b"\x89PNG\r\n\x1a\n" + bytes(16), "image/png", 4, 4, None)
+    mp4 = (1, "video", bytes(32), "video/mp4", 8, 8, 2000)
+    media = spark.createDataFrame([png, mp4], multimodal.MEDIA_SCHEMA)
+    with pytest.raises(Exception, match="NotImplementedError.*image/png"):
+        multimodal.image_features(media).collect()
+    with pytest.raises(Exception, match="NotImplementedError.*video/mp4"):
+        multimodal.sample_frames(media).collect()
 
 
 def test_ivf_topk(emb):
@@ -458,7 +448,7 @@ def test_multimodal_real_kernels(spark):
     assert 0.2 < rms < 0.4  # sine at 12000/32768 amplitude -> ~0.26
 
     # end-to-end over decodable media
-    media = multimodal.synth_media(spark, n=30, real=True)
+    media = multimodal.synth_media(spark, n=30)
     feats = {r.media_id: r for r in multimodal.image_features(media).collect()}
     meta = {r.media_id: r for r in media.collect()}
     assert feats and all(

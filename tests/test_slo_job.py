@@ -74,7 +74,7 @@ def test_slo_job_incremental_refresh_bit_identical(spark, small_pages_path, tmp_
 
 def test_slo_tiers_join_the_fsck(spark, small_pages_path, tmp_path):
     from mimirsbrunn_spark.jobs.rollup_job import run_rollup_job
-    from mimirsbrunn_spark.jobs.verify_job import check_aux_cascade, verify_publication
+    from mimirsbrunn_spark.jobs.verify_job import check_cascade, verify_publication
     from mimirsbrunn_spark.tables import SnapshotTable
 
     out = str(tmp_path / "out")
@@ -92,7 +92,7 @@ def test_slo_tiers_join_the_fsck(spark, small_pages_path, tmp_path):
         "err", F.col("err") + F.when(F.col("host") == "host-000.example.com", 1).otherwise(0)
     )
     tbl.commit(doctored, mode="replace", meta=snap.meta, partition_by="pkey")
-    r = check_aux_cascade(spark, out, "slo", "1d")
+    r = check_cascade(spark, out, "slo", "1d")
     assert not r["ok"] and r["extra_rows"] > 0
 
 

@@ -608,3 +608,39 @@ def test_first_publish_runs_no_coverage_agg(spark, small_pages_path, tmp_path, m
     monkeypatch.undo()
     assert calls == []
     assert SnapshotTable(str(tmp_path / "cold" / "rollup_30d")).row_count() > 0
+
+
+def test_cold_publish_pinned(spark, small_pages_path, tmp_path, jobs_of, monkeypatch):
+    """A cold ``run_rollup_job`` (the path ``perfbench`` ``publish_bulk``
+    times) runs a pinned number of Spark jobs, builds the rollup tiers
+    through ``ContinuousAggregate.publish`` and publishes every serving
+    table with a pinned layout and meta keys."""
+    from mimirsbrunn_spark.jobs.aux_refresh import ContinuousAggregate
+
+    published = []
+    publish = ContinuousAggregate.publish
+
+    def spy(self, *args, **kwargs):
+        published.append(self.name)
+        return publish(self, *args, **kwargs)
+
+    monkeypatch.setattr(ContinuousAggregate, "publish", spy)
+    out = str(tmp_path / "cold")
+    _, jobs = jobs_of(spark, lambda: run_rollup_job(spark, small_pages_path, out), "cold_pin")
+    assert len(jobs) == 87
+    assert published == ["rollup"]
+    served = {"cluster_by": ["host"], "partition_by": "pkey", "stats_cols": ["host", "bucket_ts"]}
+    want = {
+        "rollup": (served, ["partition_fmt", "series_snapshot", "tier"]),
+        "gapfill": (served, ["partition_fmt", "series_snapshot", "tier"]),
+        "chunks": (
+            {"partition_by": "pkey", "stats_cols": ["host", "chunk_start", "last_ts"]},
+            ["host_buckets", "month_split", "series_snapshot", "tier"],
+        ),
+    }
+    for kind, (layout, meta_keys) in want.items():
+        for tier in ("1h", "1d", "30d"):
+            tbl = SnapshotTable(f"{out}/{kind}_{tier}")
+            snap = tbl.snapshot(tbl.current_snapshot_id())
+            assert snap.layout == layout, (kind, tier)
+            assert sorted(snap.meta) == meta_keys, (kind, tier)

@@ -318,6 +318,10 @@ def test_trimmed_mean_matches_reference_and_edges(spark):
 
     with _pt.raises(ValueError):
         stats.trimmed_mean(df, "c", ("host",), trim_pct=50)
+    # ranking a double but averaging its long cast would answer 2.0 here, not 2.5
+    dbl = spark.createDataFrame([("h", 1.5), ("h", 2.5), ("h", 3.5)], "host string, c double")
+    with _pt.raises(ValueError, match="integral"):
+        stats.trimmed_mean(dbl, "c", ("host",), trim_pct=0)
 
 
 def test_trimmed_mean_partition_invariant_single_exchange(spark):

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from mimirsbrunn_spark.jobs.rollup_job import run_rollup_job
 from mimirsbrunn_spark.jobs.verify_job import (
     check_manifest,
-    check_tier_consistency,
+    check_cascade,
     verify_publication,
 )
 from mimirsbrunn_spark.tables import SnapshotTable
@@ -69,7 +69,7 @@ def test_corrupted_tier_is_pinpointed(spark, small_pages_path, tmp_path):
     )
     tbl.commit(doctored, mode="replace", meta=snap.meta, partition_by="pkey")
 
-    r = check_tier_consistency(spark, out, "1d")
+    r = check_cascade(spark, out, "rollup", "1d")
     assert not r["ok"]
     assert r["extra_rows"] > 0 and r["missing_rows"] > 0
     assert all(
@@ -77,9 +77,9 @@ def test_corrupted_tier_is_pinpointed(spark, small_pages_path, tmp_path):
     )
     # the corruption propagates upward: 30d no longer aggregates from the
     # doctored 1d (30d was built from the CLEAN 1d) — also flagged
-    assert not check_tier_consistency(spark, out, "30d")["ok"]
+    assert not check_cascade(spark, out, "rollup", "30d")["ok"]
     # but 1h (built from the clean series) still verifies
-    assert check_tier_consistency(spark, out, "1h")["ok"]
+    assert check_cascade(spark, out, "rollup", "1h")["ok"]
 
 
 def test_missing_file_detected(spark, small_pages_path, tmp_path):
@@ -109,7 +109,7 @@ def test_preserved_history_not_flagged(spark, small_pages_path, tmp_path):
     run_rollup_job(
         spark, small_pages_path, out, config=cfg, refresh_days=["2024-01-05"]
     )
-    r = check_tier_consistency(spark, out, "1h")
+    r = check_cascade(spark, out, "rollup", "1h")
     assert r["ok"], r
     assert r["preserved_rows"] > 0
 
@@ -121,7 +121,7 @@ def test_aux_sketch_tiers_checked(spark, small_pages_path, tmp_path):
     clean 1d); the log-2 family stays green; layouts without sketch tables
     skip the checks entirely."""
     from mimirsbrunn_spark.jobs.histogram_job import run_histogram_job
-    from mimirsbrunn_spark.jobs.verify_job import check_aux_cascade
+    from mimirsbrunn_spark.jobs.verify_job import check_cascade
 
     out = str(tmp_path / "out")
     run_rollup_job(spark, small_pages_path, out)
@@ -142,11 +142,11 @@ def test_aux_sketch_tiers_checked(spark, small_pages_path, tmp_path):
         "n", F.when(F.col("bin") == victim_bin, F.col("n") + 1).otherwise(F.col("n"))
     )
     tbl.commit(doctored, mode="replace", meta=snap.meta, partition_by="pkey")
-    r = check_aux_cascade(spark, out, "hdr", "1d")
+    r = check_cascade(spark, out, "hdr", "1d")
     assert not r["ok"] and r["extra_rows"] > 0
     assert all(row["bin"] == victim_bin for row in r["sample_extra"])
-    assert not check_aux_cascade(spark, out, "hdr", "30d")["ok"]  # built from clean 1d
-    assert check_aux_cascade(spark, out, "hist", "1d")["ok"]  # log2 untouched
+    assert not check_cascade(spark, out, "hdr", "30d")["ok"]  # built from clean 1d
+    assert check_cascade(spark, out, "hist", "1d")["ok"]  # log2 untouched
 
 
 def test_stats_six_sums_checked(spark, small_pages_path, tmp_path):
